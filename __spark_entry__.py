@@ -2228,7 +2228,7 @@ def q_muse_topk_1h(spark, sf_dir):
         ref,
         3600,
         group_by=None,
-        params=SearchParams(top_n=10, max_lag=n, threshold=0.0, mode="abs", n_salt=4),
+        params=SearchParams(top_n=10, max_lag=n, threshold=0.0, mode="abs"),
         series_cols=("conv_id",),
         bounds=(lo, hi, n),
     ))
@@ -2269,7 +2269,7 @@ def q_muse_windowed_1h(spark, sf_dir):
         ref,
         3600,
         group_by=None,
-        params=SearchParams(top_n=10, max_lag=nw, threshold=0.0, mode="abs", n_salt=4),
+        params=SearchParams(top_n=10, max_lag=nw, threshold=0.0, mode="abs"),
         series_cols=("conv_id",),
         bounds=(lo, hi_w, nw),
     ))
@@ -2356,7 +2356,7 @@ def q_muse_windowed_chunks_1h(spark, sf_dir):
         ref,
         3600,
         group_by=None,
-        params=SearchParams(top_n=10, max_lag=nw, threshold=0.0, mode="abs", n_salt=4),
+        params=SearchParams(top_n=10, max_lag=nw, threshold=0.0, mode="abs"),
         series_cols=("conv_id",),
         bounds=(lo, hi_w, nw),
     ))
@@ -2382,8 +2382,8 @@ def q_muse_incremental_1h(spark, sf_dir):
         batch = rolled.filter(F.col("conv_id").cast("long") % 2 == parity)
         acc.update(
             score_rollup(
-                batch, ref, 3600, None, params.mode, params.n_salt,
-                ("conv_id",), bounds=(lo, hi, n),
+                batch, ref, 3600, None, params.mode, ("conv_id",),
+                bounds=(lo, hi, n),
             )
         )
     rows, _mean = acc.fetch()
@@ -2410,7 +2410,7 @@ def q_muse_grouped_1h(spark, sf_dir):
         ref,
         3600,
         group_by=["event_type"],
-        params=SearchParams(top_n=10, max_lag=n, mode="abs", n_salt=4),
+        params=SearchParams(top_n=10, max_lag=n, mode="abs"),
         series_cols=("conv_id", "event_type"),
         bounds=(lo, hi, n),
     ))
@@ -2452,7 +2452,7 @@ def q_muse_grouped_dims_1h(spark, sf_dir):
         ref,
         3600,
         group_by=label_id_map("dims", ["event_type"]),
-        params=SearchParams(top_n=10, max_lag=n, mode="abs", n_salt=4),
+        params=SearchParams(top_n=10, max_lag=n, mode="abs"),
         series_cols=("conv_id", "event_type"),
         bounds=(lo, hi, n),
     ))
@@ -2958,9 +2958,7 @@ def q_muse_multi_1h(spark, sf_dir):
         {"A": refA, "B": refB},
         3600,
         group_by=None,
-        params=SearchParams(
-            top_n=10, max_lag=n, threshold=0.0, mode="abs", n_salt=4
-        ),
+        params=SearchParams(top_n=10, max_lag=n, threshold=0.0, mode="abs"),
         bounds=(lo, hi, n),
     )
     return out.select(

@@ -10,14 +10,14 @@ Spark shape (SURVEY.md §3, §4):
   * the prepared reference spectrum (numpy complex128) is computed once on
     the driver and broadcast — the reference's "precompute ref FFT once"
     optimization (muse.go:39) done the cluster way;
-  * scoring is a grouped-map pandas UDF over (group_key [, salt]): one 2-D
-    rfft per Arrow batch scores a whole matrix of candidates — a
-    vectorization the reference lacks;
+  * scoring is a pandas UDF over a hash exchange on the series key, one
+    task per core: one 2-D rfft per flush scores a whole matrix of
+    candidates — a vectorization the reference lacks;
   * per-group best-of is a two-level reduce: local argmax inside each
-    salted partition, then a tiny relational max_by merge — mirroring the
-    reference's per-group max -> global heap (muse.go:86-90) and killing
-    hot-group skew (one group with millions of members still parallelizes
-    across SALT partitions);
+    task, then a tiny relational min_by merge — mirroring the reference's
+    per-group max -> global heap (muse.go:86-90). Each series is its own
+    hash key, so a hot group (millions of members) still spreads across
+    every task;
   * maxLag/threshold/sign are a post-filter, NOT a search window
     (results.go:46-52 — preserved deliberately), and top-K is
     orderBy(|score| desc).limit(K), which Spark executes as
@@ -65,10 +65,7 @@ class SearchParams:
                      (muse_batch.go:74-77).
     mode="signed" -> Muse.Run semantics: signed cc clamped to [-1,1]
                      (muse.go:73-76).
-    max_lag None  -> no lag filter. n_salt applies only to the long-form
-    rollup path (score_rollup): it multiplies the partition count of the
-    series-key exchange, spreading work finer under skew. The array path
-    (score_series) needs no exchange at all, so it has no such knob.
+    max_lag None  -> no lag filter.
     """
 
     top_n: int = 20
@@ -76,7 +73,6 @@ class SearchParams:
     threshold: float = 0.0
     sign: str = SIGN_ANY
     mode: str = "abs"
-    n_salt: int = 8
 
 
 def score_series(
@@ -122,8 +118,8 @@ def score_series(
     # data already lives and emits one partial best per group present in
     # the batch; the relational min_by merge below combines partials.
     # (The reference's two-level reduce, muse.go:86-90, as a map-side
-    # combine — this also makes hot groups a non-issue here, the role
-    # n_salt plays on the long-form rollup path.)
+    # combine — hot groups are a non-issue here, as on the long-form
+    # rollup path, where each series is its own exchange key.)
 
     def score_batches(batches):
         x_spec, n, ref_n = bc.value
@@ -160,12 +156,9 @@ def score_series(
         F.col(values_col).alias("__vals"),
     ).mapInPandas(score_batches, out_schema)
 
-    # second-level reduce: best salted-partition winner per group.
-    # max_by on (|score|, series_key desc? no —) we break exact ties by the
-    # LOWEST series_key for determinism (reference is map-order, i.e.
-    # unspecified); struct comparison is lexicographic so negate the key
-    # via a descending-safe trick: order on (abs_score, -hash) is wrong for
-    # strings — use min_by over (neg abs, key).
+    # second-level reduce: best per-batch winner per group. Exact ties go
+    # to the LOWEST series_key for determinism (the reference's is map
+    # order, i.e. unspecified): min_by over the struct (-|score|, key).
     merged = (
         local_best.withColumn("_abs", F.abs("score"))
         .groupBy("group_key")
@@ -204,7 +197,6 @@ def score_rollup(
     tier_secs: int,
     group_by: "list[str] | Column | None" = None,
     mode: str = "abs",
-    n_salt: int = 8,
     series_cols: tuple[str, ...] = ("conv_id",),
     value_col: str = "turn_cnt",
     bucket_col: str = "bucket_ts",
@@ -217,8 +209,9 @@ def score_rollup(
     rows flow straight into the grouped scoring UDF, which scatters them
     into a dense zero-initialized matrix (gap-fill "zero" implicit) and runs
     one batched rfft. Plan: scan -> partial agg (rollup upstream) ->
-    ONE shuffle on (group_key, salt) -> numpy. Equal length falls out of the
-    shared global [lo, hi] range; salting bounds the cost of hot groups.
+    ONE hash exchange on the series key into one task per core -> numpy.
+    Equal length falls out of the shared global [lo, hi] range; since each
+    series is its own hash key, a hot group spreads across every task.
 
     group_by names label columns; None => per-series (group.go:84-89).
 
@@ -233,7 +226,6 @@ def score_rollup(
         tier_secs,
         group_by,
         mode,
-        n_salt,
         series_cols,
         value_col,
         bucket_col,
@@ -254,7 +246,7 @@ def muse_search_rollup(
     """Batch.Run equivalent over long-form rollup rows (the scale path)."""
     p = params or SearchParams()
     scored = score_rollup(
-        rolled, ref_values, tier_secs, group_by, p.mode, p.n_salt,
+        rolled, ref_values, tier_secs, group_by, p.mode,
         series_cols, value_col, bounds=bounds,
     )
     passed = apply_result_filters(scored, p.max_lag, p.threshold, p.sign)
@@ -354,11 +346,13 @@ def adaptive_flush_rows(nfft: int) -> int:
 
     The flush's live set is ~6 arrays of rows x nfft doubles/complex
     (dense scatter, zero-pad, forward spectrum, product, irfft, |cc|);
-    a fixed 256 rows is ~1 GB per Python worker at 64k-point series
-    (32 workers OOMed a 128 GiB host). Cap the dense set near 256 MB;
-    short series keep the full 256-row batch, floor of 8 keeps the
-    batched rfft worthwhile at extreme lengths."""
-    return min(256, max(8, (1 << 28) // (max(nfft, 1) * 64)))
+    a fixed 256 rows is ~1 GB per Python worker at 64k-point series.
+    Cap the dense set near 16 MB (64 rows at nfft 4096, 16 at 16384):
+    with one scoring task per core every worker fills whole flushes, and
+    wider ones only raise worker RSS. Very short series keep the full
+    256-row batch; the floor of 8 keeps the batched rfft worthwhile at
+    extreme lengths."""
+    return min(256, max(8, (1 << 24) // (max(nfft, 1) * 64)))
 
 
 def complete_series_runs(pdf_iter, key: str):
@@ -403,7 +397,6 @@ def score_rollup_multi(
     tier_secs: int,
     group_by: "list[str] | Column | None" = None,
     mode: str = "abs",
-    n_salt: int = 4,
     series_cols: tuple[str, ...] = ("conv_id",),
     value_col: str = "turn_cnt",
     bucket_col: str = "bucket_ts",
@@ -474,16 +467,13 @@ def score_rollup_multi(
             else label_id_cols(group_by)
         )
         keyed = rolled.select(gk.alias("group_key"), sk, idx, val)
-    n_part = n_salt * spark.sparkContext.defaultParallelism
+    # One scoring task per core: each series is its own hash key, so more
+    # partitions never split a hot group or a long series, they only add
+    # per-task Python overhead (a task's Python memory is O(flush + series)).
+    n_part = spark.sparkContext.defaultParallelism
 
     def score_partition(batches):
         ref_names, xs, nfft, rn = bc.value
-        # FFT-length-adaptive flush width: the flush's live set is ~6
-        # arrays of batch_rows x nfft doubles/complex (dense scatter,
-        # zero-pad, forward spectrum, product, irfft, |cc|), so a fixed
-        # 256 rows is ~1 GB per Python worker at 64k-point series — x32
-        # workers that OOMed the host (observed). Cap the dense set near
-        # 256 MB; short series keep the full 256-row batch.
         batch_rows_eff = adaptive_flush_rows(nfft)
         y = np.zeros((batch_rows_eff, rn), dtype=np.float64)
         meta: list = []
@@ -576,7 +566,7 @@ def muse_search_multi(
 
     p = params or SearchParams()
     scored = score_rollup_multi(
-        rolled, refs, tier_secs, group_by, p.mode, p.n_salt,
+        rolled, refs, tier_secs, group_by, p.mode,
         series_cols, value_col, bounds=bounds,
     )
     passed = apply_result_filters(scored, p.max_lag, p.threshold, p.sign)

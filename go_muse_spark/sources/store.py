@@ -459,16 +459,18 @@ def snapshot_diff(
     if not keys or not compare_cols:
         raise ValueError("need key and compare columns")
     o = old.select(
-        *keys,
+        *[F.col(k).alias(f"__ok{i}") for i, k in enumerate(keys)],
         F.lit(1).alias("__op"),
         *[F.col(c).alias(f"old_{c}") for c in compare_cols],
     )
     n = new.select(
-        *keys,
+        *[F.col(k).alias(f"__nk{i}") for i, k in enumerate(keys)],
         F.lit(1).alias("__np"),
         *[F.col(c).alias(f"new_{c}") for c in compare_cols],
     )
-    j = o.join(n, on=list(keys), how="full_outer")
+    # NULL-safe key match (<=> is still an equi-join key: sort-merge join)
+    on = [F.col(f"__ok{i}").eqNullSafe(F.col(f"__nk{i}")) for i in range(len(keys))]
+    j = o.join(n, on=on, how="full_outer")
     changed = None
     for c in compare_cols:
         diff = ~(F.col(f"old_{c}").eqNullSafe(F.col(f"new_{c}")))
@@ -484,5 +486,9 @@ def snapshot_diff(
     return (
         j.withColumn("op", op)
         .where(F.col("op").isNotNull())
-        .select(*keys, "op", *out_cols)
+        .select(
+            *[F.coalesce(f"__ok{i}", f"__nk{i}").alias(k) for i, k in enumerate(keys)],
+            "op",
+            *out_cols,
+        )
     )

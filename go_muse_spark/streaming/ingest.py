@@ -337,7 +337,6 @@ def streaming_search(
             tier_secs,
             group_by=None,
             mode=p.mode,
-            n_salt=p.n_salt,
             series_cols=series_cols,
             value_col=value_col,
             bounds=bounds,
@@ -368,12 +367,12 @@ class DriftMonitor:
         self.n_bins = int(n_bins)
         self.metric = metric
         self.counts: dict[tuple[int, int], int] = {}
-        self._seen_epochs: set[int] = set()
+        self._last_epoch = -1  # epoch ids are monotone: O(1) replay state
 
     def merge(self, rows, epoch_id: int) -> None:
-        if epoch_id in self._seen_epochs:  # replayed epoch: no-op
+        if epoch_id <= self._last_epoch:  # replayed epoch: no-op
             return
-        self._seen_epochs.add(epoch_id)
+        self._last_epoch = epoch_id
         for r in rows:
             k = (r["__b"], r["__bin"])
             self.counts[k] = self.counts.get(k, 0) + r["__c"]
@@ -464,12 +463,12 @@ class DQMonitor:
         self.checks = dict(checks)
         self.n_rows = 0
         self.viol = {name: 0 for name in checks}
-        self._seen_epochs: set[int] = set()
+        self._last_epoch = -1  # epoch ids are monotone: O(1) replay state
 
     def merge(self, row, epoch_id: int) -> None:
-        if epoch_id in self._seen_epochs:  # replayed epoch: no-op
+        if epoch_id <= self._last_epoch:  # replayed epoch: no-op
             return
-        self._seen_epochs.add(epoch_id)
+        self._last_epoch = epoch_id
         self.n_rows += row["__n"] or 0
         for i, name in enumerate(self.checks):
             self.viol[name] += row[f"__v{i}"] or 0

@@ -51,7 +51,7 @@ def test_search_over_decoded_chunks(spark):
         series,
         np.array(REF, dtype=float),
         group_by=None,
-        params=SearchParams(top_n=20, max_lag=10, mode="abs", n_salt=2),
+        params=SearchParams(top_n=20, max_lag=10, mode="abs"),
         series_key="conv_id",
     )
     got = {r["group_key"]: (r["lag"], r["score"]) for r in res.collect()}

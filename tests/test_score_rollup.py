@@ -24,7 +24,7 @@ def test_sparse_scoring_tier_parity(spark):
         np.array(REF, dtype=float),
         60,
         group_by=None,
-        params=SearchParams(top_n=20, max_lag=10, mode="abs", n_salt=3),
+        params=SearchParams(top_n=20, max_lag=10, mode="abs"),
         bounds=(lo, hi, n),
     )
     got = {r["group_key"]: (r["lag"], r["score"]) for r in res.collect()}
@@ -49,7 +49,7 @@ def test_sparse_scoring_ignores_missing_buckets_as_zero(spark):
         np.array(REF, dtype=float),
         60,
         group_by=["g"],
-        params=SearchParams(top_n=5, max_lag=10, mode="abs", n_salt=4),
+        params=SearchParams(top_n=5, max_lag=10, mode="abs"),
     )
     rows = res.collect()
     assert len(rows) == 1
@@ -69,7 +69,7 @@ def test_group_by_map_dims_column_matches_first_class(spark):
         "env", F.when(F.col("conv_id") < "m", "prod").otherwise("dev")
     )
     lo, hi, n = series_bounds(rolled, 60)
-    p = SearchParams(top_n=20, max_lag=10, mode="abs", n_salt=3)
+    p = SearchParams(top_n=20, max_lag=10, mode="abs")
     by_cols = muse_search_rollup(
         rolled, np.array(REF, dtype=float), 60,
         group_by=["env"], params=p, bounds=(lo, hi, n),
@@ -129,18 +129,19 @@ def test_complete_series_runs_carry():
 
 def test_adaptive_flush_rows_bounds():
     """Flush width: full 256 rows for short series, shrinks with FFT
-    length so rows*nfft*64B stays near 256 MB, floored at 8."""
+    length so rows*nfft*64B stays near 16 MB, floored at 8."""
     from go_muse_spark.operators.search import adaptive_flush_rows
 
     assert adaptive_flush_rows(512) == 256
-    assert adaptive_flush_rows(16384) == 256
-    assert adaptive_flush_rows(65536) == 64
+    assert adaptive_flush_rows(4096) == 64
+    assert adaptive_flush_rows(16384) == 16
+    assert adaptive_flush_rows(65536) == 8
     assert adaptive_flush_rows(1 << 20) == 8  # the 2-year-domain case
-    for nfft in (512, 16384, 65536, 1 << 20):
+    for nfft in (512, 4096, 16384, 65536, 1 << 20):
         rows = adaptive_flush_rows(nfft)
         # inside the cap, at the short-series ceiling, or at the floor
         # (the floor trades the cap for batched-rfft efficiency)
-        assert rows in (256, 8) or rows * nfft * 64 <= (1 << 28)
+        assert rows in (256, 8) or rows * nfft * 64 <= (1 << 24)
 
 
 def test_scoring_parity_with_tiny_arrow_batches(spark):
@@ -150,7 +151,7 @@ def test_scoring_parity_with_tiny_arrow_batches(spark):
     tx = transcripts_for_tier(spark, "1m")
     rolled = rollup_transcripts(tx, "1m")
     lo, hi, n = series_bounds(rolled, 60)
-    p = SearchParams(top_n=20, max_lag=n, mode="abs", n_salt=2)
+    p = SearchParams(top_n=20, max_lag=n, mode="abs")
 
     def run():
         return {

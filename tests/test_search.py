@@ -55,7 +55,7 @@ def test_batch_run_simple(spark):
         df,
         np.array(REF),
         group_by=["graph"],
-        params=SearchParams(top_n=20, max_lag=10, threshold=0.0, mode="abs", n_salt=2),
+        params=SearchParams(top_n=20, max_lag=10, threshold=0.0, mode="abs"),
         series_key="series_key",
     )
     got = {r["group_key"]: (r["lag"], r["score"]) for r in res.collect()}
@@ -121,7 +121,7 @@ def test_multi_dimensional_group_best(spark):
         df,
         np.array(ref),
         group_by=["graph"],
-        params=SearchParams(top_n=20, max_lag=10, mode="abs", n_salt=3),
+        params=SearchParams(top_n=20, max_lag=10, mode="abs"),
         series_key="series_key",
     )
     got = {r["group_key"]: r for r in res.collect()}
@@ -163,12 +163,57 @@ def test_top_k_limit(spark):
     ]
 
 
-def test_salt_invariance(spark):
-    # the salted two-level reduce must give identical results at any salt
-    df = simple_df(spark)
-    a = muse_search(df, np.array(REF), ["graph"], SearchParams(n_salt=1), "series_key")
-    b = muse_search(df, np.array(REF), ["graph"], SearchParams(n_salt=16), "series_key")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+def test_rollup_partition_invariance(spark):
+    """The rollup path's per-series exchange and two-level reduce give
+    identical rows whatever the input partitioning and Arrow batch size:
+    1 vs 16 input partitions x maxRecordsPerBatch 7 vs default, per series
+    and grouped (duplicate series exercise the lowest-series_key tie)."""
+    import datetime as dt
+
+    from go_muse_spark.operators.search import muse_search_rollup
+
+    rng = np.random.default_rng(5)
+    t0, n = dt.datetime(2025, 1, 1), 30
+    ref = np.zeros(n)
+    ref[8:13] = [1.0, 3.0, 5.0, 3.0, 1.0]
+    rows = []
+    for i in range(40):
+        vals = rng.poisson(2.0, size=n) * (rng.random(n) < 0.6)
+        if i == 0:  # an exact match: best of group g0, duplicated below
+            vals = ref.astype(int)
+        for sk in (f"s{i:02d}", f"s{i:02d}dup") if i % 8 == 0 else (f"s{i:02d}",):
+            rows += [
+                (sk, f"g{i % 5}", t0 + dt.timedelta(hours=b), int(v))
+                for b, v in enumerate(vals) if v
+            ]
+    # pin the aligned span to exactly n buckets
+    rows += [("s99", "g0", t0 + dt.timedelta(hours=h), 1) for h in (0, n - 1)]
+    rolled = spark.createDataFrame(
+        rows, "conv_id string, g string, bucket_ts timestamp, turn_cnt long"
+    )
+    p = SearchParams(top_n=100, max_lag=None, mode="abs")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default_batch = spark.conf.get(key)
+
+    def run(group_by, n_part, batch):
+        spark.conf.set(key, batch)
+        try:
+            return sorted(
+                (r["group_key"], r["series_key"], r["lag"], r["score"])
+                for r in muse_search_rollup(
+                    rolled.repartition(n_part), ref, 3600, group_by, p
+                ).collect()
+            )
+        finally:
+            spark.conf.set(key, default_batch)
+
+    for group_by, n_groups in ((None, 46), (["g"], 5)):
+        base = run(group_by, 1, default_batch)
+        assert len(base) == n_groups
+        for n_part, batch in ((16, default_batch), (1, "7"), (16, "7")):
+            assert run(group_by, n_part, batch) == base, (group_by, n_part, batch)
+    # grouped: the duplicate ties its original exactly; the lower key wins
+    assert base[0][:3] == ("g:g0", "s00", 0) and abs(base[0][3] - 1.0) < 1e-9
 
 
 def test_length_mismatch_raises(spark):
@@ -182,7 +227,7 @@ def test_length_mismatch_raises(spark):
     )
     with pytest.raises(Exception, match="length|shape"):
         muse_search(df, np.array([0.0, 1, 2, 3, 3, 2, 1, 0]), ["graph"],
-                    SearchParams(n_salt=1), "series_key").collect()
+                    SearchParams(), "series_key").collect()
 
 
 def test_incremental_results_accumulator(spark):

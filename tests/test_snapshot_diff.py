@@ -49,3 +49,24 @@ def test_requires_cols(spark):
     df = spark.createDataFrame([("a", 1.0)], "k string, v double")
     with pytest.raises(ValueError):
         snapshot_diff(df, df, (), ("v",))
+
+
+def test_null_key_parts_match_null_safe(spark):
+    # a NULL key part present in both snapshots is the same key: unchanged
+    # drops out and a changed value is one U row, never a D + I pair
+    old = spark.createDataFrame(
+        [(None, 1, 10.0), (None, 2, 20.0), ("a", None, 30.0), ("b", 1, 1.0)],
+        "k string, b int, v double",
+    )
+    new = spark.createDataFrame(
+        [(None, 1, 10.0), (None, 2, 25.0), ("a", None, 30.0), (None, 3, 5.0)],
+        "k string, b int, v double",
+    )
+    rows = snapshot_diff(old, new, ("k", "b"), ("v",)).collect()
+    got = {(r["k"], r["b"]): (r["op"], r["old_v"], r["new_v"]) for r in rows}
+    assert len(rows) == len(got)
+    assert got == {
+        (None, 2): ("U", 20.0, 25.0),
+        (None, 3): ("I", None, 5.0),
+        ("b", 1): ("D", 1.0, None),
+    }

@@ -46,8 +46,8 @@ def test_streaming_dq_parity_with_batch(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    # at least two micro-batches actually merged
-    assert len(monitor._seen_epochs) >= 2
+    # at least two micro-batches actually merged (epoch ids start at 0)
+    assert monitor._last_epoch >= 1
 
     got = {
         r["check"]: (r["n_rows"], r["n_viol"], r["ppm"])
@@ -71,3 +71,33 @@ def test_replayed_epoch_is_noop(spark):
     assert m.n_rows == 10 and m.viol["x"] == 3
     m.merge(row, 1)
     assert m.n_rows == 20 and m.viol["x"] == 6
+
+
+def test_monitor_replay_state_is_constant_size():
+    """Replay protection keeps only the last merged epoch id: a replayed
+    or older epoch is a no-op, and the monitors' state does not grow with
+    the number of epochs."""
+    from go_muse_spark.streaming.ingest import DQMonitor, DriftMonitor
+
+    def sizes(m):
+        # every attribute, with the length of each container attribute
+        return {k: len(v) if hasattr(v, "__len__") else None
+                for k, v in vars(m).items()}
+
+    dq = DQMonitor({"x": "v IS NULL"})
+    drift = DriftMonitor(baseline_end=0, n_bins=4)
+    delta = [{"__b": 0, "__bin": 1, "__c": 2}]
+    for epoch in range(100):
+        dq.merge({"__n": 10, "__v0": 1}, epoch)
+        drift.merge(delta, epoch)
+        if epoch == 0:
+            first = (sizes(dq), sizes(drift))
+    assert (sizes(dq), sizes(drift)) == first
+    assert dq._last_epoch == drift._last_epoch == 99
+    assert dq.n_rows == 1000 and dq.viol["x"] == 100
+    assert drift.counts == {(0, 1): 200}
+    for replay in (99, 42, 0):
+        dq.merge({"__n": 10, "__v0": 1}, replay)
+        drift.merge(delta, replay)
+    assert dq.n_rows == 1000 and dq.viol["x"] == 100
+    assert drift.counts == {(0, 1): 200}
