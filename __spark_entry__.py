@@ -3928,7 +3928,9 @@ def q_survival_sessions(spark, sf_dir):
     grid bound that keeps the final ordered pass clock-sized, not
     subject-sized), sessions still open within 2h of the corpus edge
     CENSORED — they hold the risk set without counting as endings, so
-    the curve is unbiased at the observation boundary."""
+    the curve is unbiased at the observation boundary. A session that
+    ends exactly 2h before the edge is still open: sessionize keeps a
+    gap of exactly gap_s inside the session."""
     ev = load_table(spark, sf_dir, "events")
     sess = sessionize(ev, ["user_id"], gap_s=7200.0)
     per = sess.groupBy("user_id", "session_id").agg(
@@ -3948,7 +3950,7 @@ def q_survival_sessions(spark, sf_dir):
         F.expr("(__e_us - __s_us) div 60000000").alias("dur_min"),
         (
             (F.col("__obs_us") - F.col("__e_us"))
-            < F.lit(7200 * 1_000_000)
+            <= F.lit(7200 * 1_000_000)
         ).alias("cen"),
     )
     out = survival_km(subj, "dur_min", "cen")
@@ -4677,9 +4679,8 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (pacf / mann_kendall / drift+ccf batch) — none
         # driver-checked yet — followed by the oldest-evidence greens;
         # round-3/4 driver-greens close the list. Every entry stays
-        # full-sweep green locally (one-pass logs
-        # ORACLE_SWEEP_r05_final.log 165/165, r05d 173/173,
-        # r05e 181/181, plus per-addition checks for the newest 3).
+        # full-sweep green locally (one-pass log
+        # ORACLE_SWEEP_r05_FINAL.log, 194/194).
         "dq_events": q_dq_events,
         "hampel_25_1h": q_hampel_25_1h,
         "period_detect_1h": q_period_detect_1h,
@@ -6309,9 +6310,10 @@ WITH g AS (
 SELECT u AS user_id, n AS n_gaps,
        cast(round(cast(s1 AS double) / n) AS bigint) AS mean_us_r,
        cast(round(
+         CASE WHEN s1 > 0 THEN
          (sqrt(cast(n * s2 - s1 * s1 AS double)) - cast(s1 AS double))
          / (sqrt(cast(n * s2 - s1 * s1 AS double)) + cast(s1 AS double))
-         * 1e6) AS bigint) AS b_u
+         END * 1e6) AS bigint) AS b_u
 FROM a WHERE n >= 4
 """
     # Markov memory: the same compacted chain, one more lag for the
@@ -6736,7 +6738,7 @@ WITH flagged AS (
 ), obs AS (SELECT max(epoch_us(ts)) AS obs_us FROM events),
 subj AS (
   SELECT (e_us - s_us) // 60000000 AS t,
-         (obs_us - e_us) < 7200000000 AS c
+         (obs_us - e_us) <= 7200000000 AS c
   FROM per, obs
 ), grid AS (
   SELECT t, cast(count(*) AS bigint) AS alln,

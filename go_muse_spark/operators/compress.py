@@ -1,19 +1,23 @@
 """L3 — chunk tables: per-(conv, tier) byte-packed compressed segments.
 
-encode_chunks: dense rolled-up rows -> chunks(conv_id, tier, chunk_start,
-n_points, ts_bytes, val_bytes). One grouped-map pandas UDF per conv; the
-Gorilla/DoD codecs (functions/codecs.py) run at chunk granularity.
+Encoders: rolled-up rows -> chunks(conv_id, tier, chunk_start,
+n_points, ts_bytes, val_bytes). encode_chunks, encode_chunks_windowed
+and encode_tiers_fused differ only in the Spark plan that feeds them
+and in which series each conversation yields; all three run ONE
+streaming core: the mapInPandas body reads complete conversation runs
+through complete_series_runs (Python memory O(one Arrow batch + one
+series), never a whole partition), densifies each series with
+_dense_fill and cuts it into chunk_size slices that the Gorilla/DoD
+codecs (functions/codecs.py) encode (_chunk_frame).
 
 decode_chunks: chunks -> long-form rows, via mapInPandas (each chunk
-decodes independently — no shuffle at all; Catalyst prunes val_bytes if
-only timestamps are selected and vice versa... it cannot, actually, since
-both live in each output row — so select only what you need BEFORE wide
-pipelines).
+decodes independently — no shuffle at all). Both byte columns live in
+every chunk row, so select only what you need BEFORE wide pipelines.
 
 Partitioning note for 10^12-turn scale: chunk rows are small and uniform
 (<= chunk_size points each); a hot conversation becomes many chunk rows,
 so downstream work over chunks is naturally balanced — this is the L3
-answer to skew, complementing the search-stage salting.
+answer to skew, complementing the search stage's per-series exchange.
 """
 
 from __future__ import annotations
@@ -36,6 +40,7 @@ __all__ = [
     "encode_tiers_fused",
     "decode_chunks",
     "compact_chunks",
+    "complete_series_runs",
     "CHUNK_SCHEMA",
     "bitlen_sql",
     "dod_cost",
@@ -48,14 +53,83 @@ CHUNK_SCHEMA = (
     "ts_bytes binary, val_bytes binary"
 )
 
+_MINUTE_US = 60 * 1_000_000
+_HOUR_US = 3_600 * 1_000_000
+_DAY_US = 86_400 * 1_000_000
+
+
+def complete_series_runs(pdf_iter, key: str):
+    """Stream pandas/Arrow batches, yielding frames that end exactly on
+    a series boundary: the trailing run of each batch is held back (it
+    may continue in the next batch) and prepended to the next frame.
+    Memory is O(one batch + one series), independent of partition size
+    — the property that makes per-partition scoring safe at 10^12 rows.
+    Requires the input sorted by `key` within the stream (the encoder
+    and scoring exchanges sortWithinPartitions them)."""
+    carry: list = []  # frames of the (possibly still-open) trailing run
+    for pdf in pdf_iter:
+        if not len(pdf):
+            continue
+        keys = pdf[key].to_numpy()
+        not_last = np.flatnonzero(keys != keys[-1])
+        cut = int(not_last[-1]) + 1 if len(not_last) else 0
+        if cut == 0:
+            # whole batch continues the open run: append, don't concat —
+            # a single series spanning many batches stays O(series), not
+            # O(series * batches) of repeated copying
+            carry.append(pdf)
+            continue
+        if carry:
+            yield pd.concat([*carry, pdf.iloc[:cut]], ignore_index=True)
+            carry = []
+        else:
+            yield pdf.iloc[:cut]
+        if cut < len(pdf):
+            carry = [pdf.iloc[cut:]]
+    if carry:
+        yield (
+            pd.concat(carry, ignore_index=True)
+            if len(carry) > 1
+            else carry[0]
+        )
+
+
+def _runs(*keys: np.ndarray):
+    """(start, end) of each run of equal consecutive key tuples."""
+    change = keys[0][1:] != keys[0][:-1]
+    for k in keys[1:]:
+        change = change | (k[1:] != k[:-1])
+    bounds = np.flatnonzero(change) + 1
+    return zip(
+        np.concatenate(([0], bounds)), np.concatenate((bounds, [len(keys[0])]))
+    )
+
+
+def _micros(col: pd.Series) -> np.ndarray:
+    return col.to_numpy(dtype="datetime64[us]").astype(np.int64)
+
 
 def _dense_fill(
-    ts: np.ndarray, vals: np.ndarray, step_us: int, fill: str
+    ts: np.ndarray,
+    vals: np.ndarray,
+    lo: int,
+    n: int,
+    step_us: int,
+    fill: str,
+    prev: tuple | None = None,
+    nxt: tuple | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Densify one conv's (sorted) sparse buckets over [min, max]."""
-    lo, hi = int(ts[0]), int(ts[-1])
-    n = (hi - lo) // step_us + 1
-    if n == len(ts):  # already dense
+    """Densify sorted sparse buckets (ts in int64 us) onto the grid
+    lo + i*step_us, i < n.
+
+    prev / nxt are (ts, value) anchors from outside the grid, the state
+    the windowed encoder carries across windows: ffill reads prev's value
+    as its carry-in, linear interpolates through prev before the observed
+    points and nxt after them — the same neighbors a per-conversation
+    np.interp sees, so the lerp is byte-identical. Per-conversation
+    callers pass no anchors (their grid starts at an observed point).
+    """
+    if len(ts) == n:  # already dense
         return ts, vals
     dense_ts = lo + np.arange(n, dtype=np.int64) * step_us
     idx = (ts - lo) // step_us
@@ -63,16 +137,77 @@ def _dense_fill(
         out = np.zeros(n, dtype=np.float64)
         out[idx] = vals
     elif fill == "ffill":
-        # index of the most recent present bucket at each dense position
+        # cand[0] = carry-in, observed values shifted by one; each dense
+        # position takes the most recent candidate at or before it
         present = np.zeros(n, dtype=np.int64)
         present[idx] = 1
-        src = np.cumsum(present) - 1
-        out = vals[src]
+        cand = np.concatenate(([np.nan if prev is None else prev[1]], vals))
+        out = cand[np.cumsum(present)]
     elif fill == "linear":
-        out = np.interp(dense_ts, ts, vals)  # interior lerp, edge clamp
+        xp, fp = ts, vals
+        if prev is not None:
+            xp, fp = np.concatenate(([prev[0]], xp)), np.concatenate(([prev[1]], fp))
+        if nxt is not None:
+            xp, fp = np.concatenate((xp, [nxt[0]])), np.concatenate((fp, [nxt[1]]))
+        out = np.interp(dense_ts, xp, fp)  # interior lerp, edge clamp
     else:
         raise ValueError(f"unknown fill {fill!r}")
     return dense_ts, out
+
+
+def _own_span_fill(ts: np.ndarray, vals: np.ndarray, step_us: int, fill: str):
+    """Densify one conversation over its own [min, max] bucket range."""
+    lo = int(ts[0])
+    return _dense_fill(ts, vals, lo, (int(ts[-1]) - lo) // step_us + 1, step_us, fill)
+
+
+def _chunk_frame(series, chunk_size: int) -> pd.DataFrame | None:
+    """Cut each (conv_id, tier, dense_ts, vals) series into chunk_size
+    slices, encode them, and build one CHUNK_SCHEMA frame (None if the
+    series emit no chunk)."""
+    out: dict[str, list] = {
+        "conv_id": [], "tier": [], "chunk_start": [],
+        "n_points": [], "ts_bytes": [], "val_bytes": [],
+    }
+    for conv, tier, ts, vals in series:
+        for lo in range(0, len(ts), chunk_size):
+            hi = min(lo + chunk_size, len(ts))
+            out["conv_id"].append(conv)
+            out["tier"].append(tier)
+            out["chunk_start"].append(ts[lo])
+            out["n_points"].append(hi - lo)
+            out["ts_bytes"].append(encode_timestamps(ts[lo:hi]))
+            out["val_bytes"].append(encode_floats(vals[lo:hi]))
+    if not out["conv_id"]:
+        return None
+    out["chunk_start"] = pd.to_datetime(
+        np.asarray(out["chunk_start"], dtype="datetime64[us]")
+    )
+    out["n_points"] = np.asarray(out["n_points"], dtype=np.int32)
+    return pd.DataFrame(out)
+
+
+def _encode_op(series_of, chunk_size: int):
+    """The one mapInPandas body: complete conv_id runs in, chunk rows
+    out. series_of(frame) yields the (conv_id, tier, dense_ts, vals)
+    series of the conversations in one frame."""
+
+    def op(batches):
+        for pdf in complete_series_runs(batches, "conv_id"):
+            out = _chunk_frame(series_of(pdf), chunk_size)
+            if out is not None:
+                yield out
+
+    return op
+
+
+def _conv_series(pdf: pd.DataFrame, value_col: str):
+    """(conv_id, ts_us, vals) per conversation of a conv_id-sorted frame."""
+    convs = pdf["conv_id"].to_numpy()
+    ts_all = _micros(pdf["bucket_ts"])
+    vals_all = pdf[value_col].to_numpy(dtype=np.float64)
+    for s, e in _runs(convs):
+        yield convs[s], ts_all[s:e], vals_all[s:e]
 
 
 def encode_chunks(
@@ -91,11 +226,12 @@ def encode_chunks(
     scatter/accumulate/interp — fused gap fill, no spine join).
 
     Shape: repartition by conv_id + sortWithinPartitions + ONE
-    mapInPandas over whole partitions. Groups are sliced with numpy
-    boundary arithmetic instead of per-group pandas frames — per-group
-    overhead is ~microseconds, which matters when millions of small
-    conversations each contribute a handful of buckets (the grouped-map
-    alternative costs ~ms per group in Arrow/pandas machinery alone).
+    mapInPandas streaming complete conversations. Groups are sliced with
+    numpy boundary arithmetic instead of per-group pandas frames —
+    per-group overhead is ~microseconds, which matters when millions of
+    small conversations each contribute a handful of buckets (the
+    grouped-map alternative costs ~ms per group in Arrow/pandas
+    machinery alone).
     """
     if fill is not None and tier_secs is None:
         from go_muse_spark.operators.rollup import TIERS
@@ -105,47 +241,17 @@ def encode_chunks(
     spark = filled.sparkSession
     n_part = parallelism or spark.sparkContext.defaultParallelism
 
-    def op(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        convs = pdf["conv_id"].to_numpy()
-        ts_all = pdf["bucket_ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-        vals_all = pdf[value_col].to_numpy(dtype=np.float64)
-        change = np.flatnonzero(convs[1:] != convs[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(convs)]))
-        out_conv, out_start, out_n, out_tb, out_vb = [], [], [], [], []
-        for s, e in zip(starts, ends):
-            ts, vals = ts_all[s:e], vals_all[s:e]
+    def series_of(pdf):
+        for conv, ts, vals in _conv_series(pdf, value_col):
             if fill is not None:
-                ts, vals = _dense_fill(ts, vals, step_us, fill)
-            for lo in range(0, len(ts), chunk_size):
-                hi = min(lo + chunk_size, len(ts))
-                out_conv.append(convs[s])
-                out_start.append(ts[lo])
-                out_n.append(hi - lo)
-                out_tb.append(encode_timestamps(ts[lo:hi]))
-                out_vb.append(encode_floats(vals[lo:hi]))
-        if not out_conv:
-            return
-        yield pd.DataFrame(
-            {
-                "conv_id": out_conv,
-                "tier": tier,
-                "chunk_start": pd.to_datetime(np.asarray(out_start, dtype="datetime64[us]")),
-                "n_points": np.asarray(out_n, dtype=np.int32),
-                "ts_bytes": out_tb,
-                "val_bytes": out_vb,
-            }
-        )
+                ts, vals = _own_span_fill(ts, vals, step_us, fill)
+            yield conv, tier, ts, vals
 
     return (
         filled.select("conv_id", "bucket_ts", value_col)
         .repartition(n_part, "conv_id")
         .sortWithinPartitions("conv_id", "bucket_ts")
-        .mapInPandas(op, CHUNK_SCHEMA)
+        .mapInPandas(_encode_op(series_of, chunk_size), CHUNK_SCHEMA)
     )
 
 
@@ -175,21 +281,20 @@ def encode_chunks_windowed(
       4. ONE exchange on (conv_id, window) -> numpy slice encode.
 
     Every task processes O(rows_per_window) regardless of conversation
-    length, so the stage stays balanced under arbitrary skew. Output is
-    byte-identical to encode_chunks(..., fill="zero").
+    length, so the stage stays balanced under arbitrary skew.
 
     fill="zero" emits byte-identical output to encode_chunks(fill="zero").
     fill="ffill" carries state across windows relationally: the per-window
-    last observed value is forward-filled along the window spine (a tiny
-    O(#windows) window function), and each window's predecessor value
-    rides in as its `__carry` column — so a window that is entirely gap
-    still encodes the right repeated value without seeing its neighbors.
-    fill="linear" additionally carries the SUCCESSOR anchor: each window
-    gets its predecessor (ts, value) from earlier windows and its
-    successor (ts, value) from later windows via two O(#windows) spine
-    window functions, so interior lerp across window boundaries uses the
-    same neighbor anchors the per-conv np.interp sees — output is
-    byte-identical to encode_chunks(fill="linear").
+    last observed (ts, value) is forward-filled along the window spine (a
+    tiny O(#windows) window function), and each window's predecessor
+    value rides in as its `__prev_v` column — so a window that is entirely
+    gap still encodes the right repeated value without seeing its
+    neighbors. fill="linear" reuses that predecessor anchor and adds the
+    SUCCESSOR anchor, the first observed (ts, value) of later windows, via
+    a second O(#windows) spine window function, so interior lerp across
+    window boundaries uses the same neighbor anchors the per-conv
+    np.interp sees — output is byte-identical to
+    encode_chunks(fill="ffill" / "linear").
     """
     if tier_secs is None:
         from go_muse_spark.operators.rollup import TIERS
@@ -248,157 +353,86 @@ def encode_chunks_windowed(
         .select("conv_id", "__k", "bucket_ts", "__val")
     )
     # cross-window anchor columns are attached ONLY for the fill mode
-    # that reads them — zero fill needs none, ffill needs __carry,
+    # that reads them — zero fill needs none, ffill needs __prev_v,
     # linear needs the four __prev_*/__next_* anchors. Anything attached
     # here rides the spine join, the (conv_id, __k) exchange, and the
     # Arrow transfer into Python on EVERY row, so unconditional NULL
     # literals were a measured ~1.8x tax on the zero path (round-2
     # VERDICT "What's wrong" #2).
-    if fill == "ffill":
-        from pyspark.sql import Window
-
-        # carry-in per window: latest observed value of any EARLIER
-        # window, forward-filled along the O(#windows) spine
-        win_last = rows.groupBy("conv_id", "__k").agg(
-            F.max(F.struct("bucket_ts", "__val")).alias("__lv")
-        )
-        w_prev = (
-            Window.partitionBy("conv_id")
-            .orderBy("__k")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        spine = (
-            spine.join(win_last, ["conv_id", "__k"], "left")
-            .withColumn(
-                "__carry",
-                F.last(F.col("__lv.__val"), ignorenulls=True).over(w_prev),
+    if fill != "zero":
+        # per-window last (and, for linear, first) observed (ts, value);
+        # the predecessor anchor is the latest one of any EARLIER window
+        ends = [F.max(F.struct("bucket_ts", "__val")).alias("__lv")]
+        if fill == "linear":
+            ends.append(F.min(F.struct("bucket_ts", "__val")).alias("__fv"))
+        w_spine = Window.partitionBy("conv_id").orderBy("__k")
+        w_prev = w_spine.rowsBetween(Window.unboundedPreceding, -1)
+        spine = spine.join(
+            rows.groupBy("conv_id", "__k").agg(*ends), ["conv_id", "__k"], "left"
+        ).withColumn("__prev", F.last("__lv", ignorenulls=True).over(w_prev))
+        anchors = [F.col("__prev.__val").alias("__prev_v")]
+        if fill == "linear":
+            w_next = w_spine.rowsBetween(1, Window.unboundedFollowing)
+            spine = spine.withColumn(
+                "__next", F.first("__fv", ignorenulls=True).over(w_next)
             )
-            .drop("__lv")
-        )
-    if fill == "linear":
-        from pyspark.sql import Window
-
-        # lerp anchors across window boundaries: predecessor (ts, value)
-        # from earlier windows, successor (ts, value) from later ones —
-        # two O(#windows) spine window functions, mirroring __carry
-        win_last = rows.groupBy("conv_id", "__k").agg(
-            F.max(F.struct("bucket_ts", "__val")).alias("__lv"),
-            F.min(F.struct("bucket_ts", "__val")).alias("__fv"),
-        )
-        w_prev = (
-            Window.partitionBy("conv_id")
-            .orderBy("__k")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        w_next = (
-            Window.partitionBy("conv_id")
-            .orderBy("__k")
-            .rowsBetween(1, Window.unboundedFollowing)
-        )
-        spine = (
-            spine.join(win_last, ["conv_id", "__k"], "left")
-            .withColumn(
-                "__prev", F.last(F.col("__lv"), ignorenulls=True).over(w_prev)
-            )
-            .withColumn(
-                "__next", F.first(F.col("__fv"), ignorenulls=True).over(w_next)
-            )
-            .select(
-                "conv_id",
-                "__lo",
-                "__n",
-                "__k",
+            anchors += [
                 F.col("__prev.bucket_ts").alias("__prev_t"),
-                F.col("__prev.__val").alias("__prev_v"),
                 F.col("__next.bucket_ts").alias("__next_t"),
                 F.col("__next.__val").alias("__next_v"),
-            )
-        )
+            ]
+        spine = spine.select("conv_id", "__lo", "__n", "__k", *anchors)
     joined = spine.join(rows, ["conv_id", "__k"], "left")
 
-    def op(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+    def series_of(pdf):
         convs = pdf["conv_id"].to_numpy()
         ks = pdf["__k"].to_numpy(dtype=np.int64)
-        los = pdf["__lo"].to_numpy(dtype="datetime64[us]").astype(np.int64)
+        los = _micros(pdf["__lo"])
         ns = pdf["__n"].to_numpy(dtype=np.int64)
         ts_all = pdf["bucket_ts"].to_numpy(dtype="datetime64[us]")
         vals_all = pdf["__val"].to_numpy(dtype=np.float64)
-        if fill == "ffill":
-            carries = pdf["__carry"].to_numpy(dtype=np.float64)
+        if fill != "zero":
+            prev_vs = pdf["__prev_v"].to_numpy(dtype=np.float64)
         if fill == "linear":
             prev_ts = pdf["__prev_t"].to_numpy(dtype="datetime64[us]")
-            prev_vs = pdf["__prev_v"].to_numpy(dtype=np.float64)
             next_ts = pdf["__next_t"].to_numpy(dtype="datetime64[us]")
             next_vs = pdf["__next_v"].to_numpy(dtype=np.float64)
-        change = np.flatnonzero(
-            (convs[1:] != convs[:-1]) | (ks[1:] != ks[:-1])
-        ) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(convs)]))
-        out: dict[str, list] = {
-            "conv_id": [], "tier": [], "chunk_start": [],
-            "n_points": [], "ts_bytes": [], "val_bytes": [],
-        }
-        for s, e in zip(starts, ends):
+        for s, e in _runs(convs, ks):
             k = int(ks[s])
-            win_start = int(los[s]) + k * chunk_size * step_us
-            n_pts = int(min(chunk_size, ns[s] - k * chunk_size))
-            dense_ts = win_start + np.arange(n_pts, dtype=np.int64) * step_us
-            ts_slice = ts_all[s:e]
-            present_rows = ~pd.isna(ts_slice)
-            idx = (
-                ts_slice[present_rows].astype(np.int64) - win_start
-            ) // step_us
-            if fill == "zero":
-                vals = np.zeros(n_pts, dtype=np.float64)
-                vals[idx] = vals_all[s:e][present_rows]
+            lo = int(los[s]) + k * chunk_size * step_us
+            n = int(min(chunk_size, ns[s] - k * chunk_size))
+            # an all-gap window arrives as one row with NULL bucket_ts
+            present = ~np.isnat(ts_all[s:e])
+            ts = ts_all[s:e][present].astype(np.int64)
+            vals = vals_all[s:e][present]
+            prev = nxt = None
+            if fill == "ffill":
+                prev = (None, prev_vs[s])  # NaN only for window 0
             elif fill == "linear":
-                # anchors: carried predecessor + window obs + carried
-                # successor — the same neighbors the per-conv np.interp
-                # sees, so the lerp is byte-identical to _dense_fill
-                order = np.argsort(idx, kind="stable")
-                xp = ts_slice[present_rows].astype(np.int64)[order]
-                fp = vals_all[s:e][present_rows][order]
                 if not np.isnat(prev_ts[s]):
-                    xp = np.concatenate(([prev_ts[s].astype(np.int64)], xp))
-                    fp = np.concatenate(([prev_vs[s]], fp))
+                    prev = (prev_ts[s].astype(np.int64), prev_vs[s])
                 if not np.isnat(next_ts[s]):
-                    xp = np.concatenate((xp, [next_ts[s].astype(np.int64)]))
-                    fp = np.concatenate((fp, [next_vs[s]]))
-                vals = np.interp(dense_ts, xp, fp)
-            else:  # ffill with cross-window carry
-                present = np.zeros(n_pts, dtype=bool)
-                present[idx] = True
-                # candidates[0] = carry-in; observed values shifted by 1
-                cand = np.empty(idx.size + 1, dtype=np.float64)
-                cand[0] = carries[s]  # NaN only for window 0 (pos 0 observed)
-                order = np.argsort(idx, kind="stable")
-                cand[1:] = vals_all[s:e][present_rows][order]
-                src = np.cumsum(present)  # 0 before first obs -> carry
-                vals = cand[src]
-            out["conv_id"].append(convs[s])
-            out["tier"].append(tier)
-            out["chunk_start"].append(win_start)
-            out["n_points"].append(n_pts)
-            out["ts_bytes"].append(encode_timestamps(dense_ts))
-            out["val_bytes"].append(encode_floats(vals))
-        if not out["conv_id"]:
-            return
-        out["chunk_start"] = pd.to_datetime(
-            np.asarray(out["chunk_start"], dtype="datetime64[us]")
-        )
-        out["n_points"] = np.asarray(out["n_points"], dtype=np.int32)
-        yield pd.DataFrame(out)
+                    nxt = (next_ts[s].astype(np.int64), next_vs[s])
+            yield (
+                convs[s], tier,
+                *_dense_fill(ts, vals, lo, n, step_us, fill, prev, nxt),
+            )
 
+    # sorted by (conv_id, __k), so complete conv_id runs also hold
+    # complete window runs
     return (
         joined.repartition(n_part, "conv_id", "__k")
         .sortWithinPartitions("conv_id", "__k", "bucket_ts")
-        .mapInPandas(op, CHUNK_SCHEMA)
+        .mapInPandas(_encode_op(series_of, chunk_size), CHUNK_SCHEMA)
     )
+
+
+def _coarsen(ts: np.ndarray, vals: np.ndarray, step_us: int):
+    """Dense finer series -> dense coarser sums (bucket = floor/step)."""
+    bucket = ts // step_us
+    bounds = np.flatnonzero(bucket[1:] != bucket[:-1]) + 1
+    starts = np.concatenate(([0], bounds))
+    return bucket[starts] * step_us, np.add.reduceat(vals, starts)
 
 
 def encode_tiers_fused(
@@ -436,61 +470,23 @@ def encode_tiers_fused(
     streams); dense streams at 10^12-turn scale should keep the default
     partial-agg-first shape, which shuffles O(buckets) not O(turns).
     """
-    hour_us = 3_600 * 1_000_000
-    day_us = 86_400 * 1_000_000
     spark = rollup_1m.sparkSession
     n_part = parallelism or spark.sparkContext.defaultParallelism
 
-    def _coarsen(ts: np.ndarray, vals: np.ndarray, step_us: int):
-        """Dense finer series -> dense coarser sums (bucket = floor/step)."""
-        bucket = ts // step_us
-        bounds = np.flatnonzero(bucket[1:] != bucket[:-1]) + 1
-        starts = np.concatenate(([0], bounds))
-        return bucket[starts] * step_us, np.add.reduceat(vals, starts)
-
-    def op(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        convs = pdf["conv_id"].to_numpy()
-        ts_all = pdf["bucket_ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-        vals_all = pdf[value_col].to_numpy(dtype=np.float64)
-        change = np.flatnonzero(convs[1:] != convs[:-1]) + 1
-        starts = np.concatenate(([0], change))
-        ends = np.concatenate((change, [len(convs)]))
-        out: dict[str, list] = {
-            "conv_id": [], "tier": [], "chunk_start": [],
-            "n_points": [], "ts_bytes": [], "val_bytes": [],
-        }
-        for s, e in zip(starts, ends):
-            ts_1m, v_1m = _dense_fill(ts_all[s:e], vals_all[s:e], 60_000_000, "zero")
-            ts_1h, v_1h = _coarsen(ts_1m, v_1m, hour_us)
-            ts_1d, v_1d = _coarsen(ts_1h, v_1h, day_us)
-            for tier, ts, vals in (
-                ("1m", ts_1m, v_1m), ("1h", ts_1h, v_1h), ("1d", ts_1d, v_1d)
-            ):
-                for lo in range(0, len(ts), chunk_size):
-                    hi = min(lo + chunk_size, len(ts))
-                    out["conv_id"].append(convs[s])
-                    out["tier"].append(tier)
-                    out["chunk_start"].append(ts[lo])
-                    out["n_points"].append(hi - lo)
-                    out["ts_bytes"].append(encode_timestamps(ts[lo:hi]))
-                    out["val_bytes"].append(encode_floats(vals[lo:hi]))
-        if not out["conv_id"]:
-            return
-        out["chunk_start"] = pd.to_datetime(
-            np.asarray(out["chunk_start"], dtype="datetime64[us]")
-        )
-        out["n_points"] = np.asarray(out["n_points"], dtype=np.int32)
-        yield pd.DataFrame(out)
+    def series_of(pdf):
+        for conv, ts, vals in _conv_series(pdf, value_col):
+            ts_1m, v_1m = _own_span_fill(ts, vals, _MINUTE_US, "zero")
+            ts_1h, v_1h = _coarsen(ts_1m, v_1m, _HOUR_US)
+            ts_1d, v_1d = _coarsen(ts_1h, v_1h, _DAY_US)
+            yield conv, "1m", ts_1m, v_1m
+            yield conv, "1h", ts_1h, v_1h
+            yield conv, "1d", ts_1d, v_1d
 
     out = rollup_1m.select("conv_id", "bucket_ts", value_col)
     if not pre_partitioned:
         out = out.repartition(n_part, "conv_id")
     return out.sortWithinPartitions("conv_id", "bucket_ts").mapInPandas(
-        op, CHUNK_SCHEMA
+        _encode_op(series_of, chunk_size), CHUNK_SCHEMA
     )
 
 

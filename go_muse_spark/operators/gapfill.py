@@ -11,11 +11,12 @@ fill by one of:
   * "ffill"  — `last(v, ignorenulls)` over an unbounded-preceding window.
                Pure relational (one shuffle on conv_id, sorted by bucket).
   * "linear" — linear interpolation between the nearest non-null
-               neighbors, with edge ffill/bfill. Implemented BOTH ways:
-               relationally (two windows + lerp — the default, scales as
-               plain shuffles) and as a vectorized pandas grouped-map UDF
-               (`pandas.Series.interpolate`) for parity with the
-               north_rule's pandas/Arrow-UDF path. Both are tested equal.
+               neighbors, with edge ffill/bfill: two windows + lerp,
+               scaling as plain shuffles.
+
+The chunk encoders (operators/compress.py) fuse the same three fills
+into their numpy pass; this relational form is what queries read and
+what the encoder tests check them against.
 
 The spine join is an equi-join on (conv_id, bucket_ts) against data
 aggregated on the same keys, so AQE plans it without skew trouble; spine
@@ -24,13 +25,12 @@ size is O(convs x buckets), never O(turns).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from go_muse_spark.operators.rollup import TIERS
 
-__all__ = ["bucket_spine", "gap_fill", "gap_fill_pandas", "aligned_vectors"]
+__all__ = ["bucket_spine", "gap_fill", "aligned_vectors"]
 
 
 def _interval(tier: str) -> str:
@@ -149,60 +149,6 @@ def gap_fill(
         )
 
     raise ValueError(f"unknown gap-fill mode {mode!r}")
-
-
-def gap_fill_pandas(
-    rollup: DataFrame,
-    tier: str,
-    value_cols: tuple[str, ...] = ("turn_cnt", "turns_per_sec"),
-    mode: str = "linear",
-    align: str = "conv",
-) -> DataFrame:
-    """Gap fill as a vectorized pandas grouped-map UDF (north_rule path).
-
-    Same output contract as gap_fill(); per-group `DataFrame.reindex` over
-    the dense bucket index + `interpolate`/`ffill`. One Arrow batch per
-    conversation — no per-row Python.
-    """
-    unit, secs, _ = TIERS[tier]
-    freq = pd.Timedelta(seconds=secs)
-
-    bounds = None
-    if align == "global":
-        row = rollup.agg(
-            F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi")
-        ).collect()[0]
-        bounds = (row["lo"], row["hi"])
-
-    schema = (
-        "conv_id string, bucket_ts timestamp, "
-        + ", ".join(f"{c} double" for c in value_cols)
-        + ", filled boolean"
-    )
-
-    def fill(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv = pdf["conv_id"].iloc[0]
-        pdf = pdf.sort_values("bucket_ts").set_index("bucket_ts")
-        lo, hi = (bounds if bounds else (pdf.index.min(), pdf.index.max()))
-        idx = pd.date_range(lo, hi, freq=freq)
-        out = pdf[list(value_cols)].reindex(idx)
-        was_missing = out[value_cols[0]].isna()
-        if mode == "zero":
-            out = out.fillna(0.0)
-        elif mode == "ffill":
-            out = out.ffill()
-        elif mode == "linear":
-            out = out.interpolate(method="linear", limit_direction="both")
-        else:
-            raise ValueError(f"unknown gap-fill mode {mode!r}")
-        out = out.astype("float64").reset_index(names="bucket_ts")
-        out.insert(0, "conv_id", conv)
-        out["filled"] = was_missing.to_numpy()
-        return out
-
-    return rollup.select("conv_id", "bucket_ts", *value_cols).groupBy(
-        "conv_id"
-    ).applyInPandas(fill, schema)
 
 
 def aligned_vectors(

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from go_muse_spark import kernels as K
 from go_muse_spark.labels import label_id_cols
+from go_muse_spark.operators.compress import complete_series_runs
 
 __all__ = [
     "SearchParams",
@@ -51,7 +52,6 @@ __all__ = [
     "score_rollup_multi",
     "muse_search_multi",
     "adaptive_flush_rows",
-    "complete_series_runs",
 ]
 
 SIGN_ANY, SIGN_POS, SIGN_NEG = "any", "pos", "neg"
@@ -73,6 +73,36 @@ class SearchParams:
     threshold: float = 0.0
     sign: str = SIGN_ANY
     mode: str = "abs"
+
+
+def _best_per_group(gk: np.ndarray, sk: np.ndarray, scores: np.ndarray):
+    """Row indices of each group's best scored series within one batch:
+    order by (-|score|, series_key) and keep each group's first row —
+    exact ties resolve to the lowest series_key, matching _merge_best."""
+    order = np.lexsort((sk, -np.abs(scores)))
+    return order[~pd.Series(gk[order]).duplicated().to_numpy()]
+
+
+def _merge_best(local_best: DataFrame, *keys: str) -> DataFrame:
+    """Second-level reduce of the per-batch winners: the best row per
+    `keys`. Exact ties go to the LOWEST series_key for determinism (the
+    reference's is map order, i.e. unspecified): min_by over the struct
+    (-|score|, series_key)."""
+    return (
+        local_best.withColumn("_abs", F.abs("score"))
+        .groupBy(*keys)
+        .agg(
+            F.expr(
+                "min_by(struct(series_key, lag, score), struct(-_abs, series_key))"
+            ).alias("best")
+        )
+        .select(
+            *keys,
+            F.col("best.series_key").alias("series_key"),
+            F.col("best.lag").alias("lag"),
+            F.col("best.score").alias("score"),
+        )
+    )
 
 
 def score_series(
@@ -134,13 +164,7 @@ def score_series(
             )
             gk = pdf["group_key"].to_numpy()
             sk = pdf["__sk"].to_numpy()
-            # deterministic per-group best within the batch: order by
-            # (-|score|, series_key) and keep each group's first row —
-            # exact ties resolve to the lowest series_key, matching the
-            # final merge's tie-break
-            order = np.lexsort((sk, -np.abs(scores)))
-            first = pd.Series(gk[order]).duplicated().to_numpy() == False  # noqa: E712
-            pick = order[first]
+            pick = _best_per_group(gk, sk, scores)
             yield pd.DataFrame(
                 {
                     "group_key": gk[pick],
@@ -156,25 +180,7 @@ def score_series(
         F.col(values_col).alias("__vals"),
     ).mapInPandas(score_batches, out_schema)
 
-    # second-level reduce: best per-batch winner per group. Exact ties go
-    # to the LOWEST series_key for determinism (the reference's is map
-    # order, i.e. unspecified): min_by over the struct (-|score|, key).
-    merged = (
-        local_best.withColumn("_abs", F.abs("score"))
-        .groupBy("group_key")
-        .agg(
-            F.expr(
-                "min_by(struct(series_key, lag, score), struct(-_abs, series_key))"
-            ).alias("best")
-        )
-        .select(
-            "group_key",
-            F.col("best.series_key").alias("series_key"),
-            F.col("best.lag").alias("lag"),
-            F.col("best.score").alias("score"),
-        )
-    )
-    return merged
+    return _merge_best(local_best, "group_key")
 
 
 def series_bounds(rolled: DataFrame, tier_secs: int, bucket_col: str = "bucket_ts"):
@@ -355,42 +361,6 @@ def adaptive_flush_rows(nfft: int) -> int:
     return min(256, max(8, (1 << 24) // (max(nfft, 1) * 64)))
 
 
-def complete_series_runs(pdf_iter, key: str):
-    """Stream pandas/Arrow batches, yielding frames that end exactly on
-    a series boundary: the trailing run of each batch is held back (it
-    may continue in the next batch) and prepended to the next frame.
-    Memory is O(one batch + one series), independent of partition size
-    — the property that makes per-partition scoring safe at 10^12 rows.
-    Requires the input sorted by `key` within the stream (the scoring
-    exchange sortWithinPartitions them)."""
-    carry: list = []  # frames of the (possibly still-open) trailing run
-    for pdf in pdf_iter:
-        if not len(pdf):
-            continue
-        keys = pdf[key].to_numpy()
-        not_last = np.flatnonzero(keys != keys[-1])
-        cut = int(not_last[-1]) + 1 if len(not_last) else 0
-        if cut == 0:
-            # whole batch continues the open run: append, don't concat —
-            # a single series spanning many batches stays O(series), not
-            # O(series * batches) of repeated copying
-            carry.append(pdf)
-            continue
-        if carry:
-            yield pd.concat([*carry, pdf.iloc[:cut]], ignore_index=True)
-            carry = []
-        else:
-            yield pdf.iloc[:cut]
-        if cut < len(pdf):
-            carry = [pdf.iloc[cut:]]
-    if carry:
-        yield (
-            pd.concat(carry, ignore_index=True)
-            if len(carry) > 1
-            else carry[0]
-        )
-
-
 def score_rollup_multi(
     rolled: DataFrame,
     refs: "dict[str, np.ndarray]",
@@ -488,9 +458,7 @@ def score_rollup_multi(
             for r, name in enumerate(ref_names):
                 lags, scores = K.xcorr_from_spec(xs[r], y_spec, ok, nfft)
                 sc = K.clamp_signed(scores) if signed else K.clamp_abs(scores)
-                order = np.lexsort((s, -np.abs(sc)))
-                first = ~pd.Series(g[order]).duplicated().to_numpy()
-                pick = order[first]
+                pick = _best_per_group(g, s, sc)
                 outs.append(
                     pd.DataFrame(
                         {
@@ -531,22 +499,7 @@ def score_rollup_multi(
         .sortWithinPartitions("__sk", "__idx")
         .mapInPandas(score_partition, out_schema)
     )
-    return (
-        local_best.withColumn("_abs", F.abs("score"))
-        .groupBy("ref_key", "group_key")
-        .agg(
-            F.expr(
-                "min_by(struct(series_key, lag, score), struct(-_abs, series_key))"
-            ).alias("best")
-        )
-        .select(
-            "ref_key",
-            "group_key",
-            F.col("best.series_key").alias("series_key"),
-            F.col("best.lag").alias("lag"),
-            F.col("best.score").alias("score"),
-        )
-    )
+    return _merge_best(local_best, "ref_key", "group_key")
 
 
 def muse_search_multi(

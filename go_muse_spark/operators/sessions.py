@@ -25,7 +25,7 @@ partitions the heavy pass on (key, time-bucket) and restores the two
 cross-bucket dependencies — the previous bucket's last timestamp (for
 the boundary gap test) and the number of sessions started in earlier
 buckets (a prefix sum) — through a tiny per-(key, bucket) spine, the
-same __carry composition asof_join and encode_chunks_windowed use.
+same carry composition asof_join and encode_chunks_windowed use.
 Any single task is then bounded by one bucket of one key.
 """
 

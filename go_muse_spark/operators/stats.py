@@ -2302,7 +2302,8 @@ def burstiness(
     engine-identical.
 
     Scale shape: one exchange on the series key, one lag, one
-    map-combined aggregate. Returns (by..., n_gaps, mean_us, b_u).
+    map-combined aggregate. Returns (by..., n_gaps, mean_us, b_u);
+    b_u is NULL when every gap is zero (B would be 0/0).
     """
     t = F.unix_micros(F.col(ts_col).cast("timestamp"))
     w = Window.partitionBy(*by).orderBy(t)
@@ -2322,9 +2323,13 @@ def burstiness(
         F.col("s1"),
         F.col("s2"),
     )
-    # sqrt(n*S2 - S1^2) = n*sigma; B = (n*sigma - S1)/(n*sigma + S1)
+    # sqrt(n*S2 - S1^2) = n*sigma; B = (n*sigma - S1)/(n*sigma + S1).
+    # All gaps zero (every event at one timestamp) is 0/0, which ANSI
+    # mode raises and non-ANSI turns into NaN: emit NULL instead
     root = F.sqrt((n * s2 - s1 * s1).cast("double"))
-    b = (root - s1.cast("double")) / (root + s1.cast("double"))
+    b = F.when(
+        s1 > 0, (root - s1.cast("double")) / (root + s1.cast("double"))
+    )
     return agg.where(F.col("n_gaps") >= F.lit(int(min_gaps))).select(
         *by,
         F.col("n_gaps").cast("long").alias("n_gaps"),

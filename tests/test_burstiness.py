@@ -48,3 +48,29 @@ def test_constant_gaps_exactly_minus_one(spark):
 
 def test_short_series_dropped(spark):
     assert burstiness(_df(spark, {"s": [5, 6]})).count() == 0
+
+
+def test_all_zero_gaps_give_null(spark):
+    """Every event at one timestamp: sigma = mu = 0, B = 0/0 -> NULL b_u
+    (not NaN), in the operator and in the DuckDB oracle alike."""
+    import duckdb
+
+    from __spark_entry__ import oracle_sql
+
+    out = burstiness(_df(spark, {"z": [0] * 5, "m": [60] * 5})).collect()
+    got = {r["user_id"]: r["b_u"] for r in out}
+    assert got == {"z": None, "m": -1_000_000}
+
+    con = duckdb.connect()
+    t0 = dt.datetime(2025, 1, 1)
+    con.execute("CREATE TABLE events (user_id BIGINT, ts TIMESTAMP)")
+    con.executemany(
+        "INSERT INTO events VALUES (?, ?)",
+        [(1, t0)] * 5 + [(2, t0 + dt.timedelta(seconds=60 * i)) for i in range(5)],
+    )
+    want = dict(
+        con.execute(
+            f"SELECT user_id, b_u FROM ({oracle_sql()['burstiness']})"
+        ).fetchall()
+    )
+    assert want == {"1": None, "2": -1_000_000}

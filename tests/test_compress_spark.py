@@ -1,16 +1,79 @@
-"""M4 — Spark-side chunk encode/decode round trip + search-over-chunks."""
+"""M4 — Spark-side chunk encode/decode round trip + search-over-chunks.
 
-import datetime as dt
+The encoder parity tests run on a gappy sparse 1m rollup (silent
+minutes, all-gap chunk windows) at two Arrow batch sizes, so zero,
+ffill and linear fill encode to different bytes and conversations
+cross Arrow batch boundaries inside the encoders.
+"""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from go_muse_spark.operators.compress import decode_chunks, encode_chunks
+from go_muse_spark.operators.compress import (
+    compact_chunks,
+    decode_chunks,
+    encode_chunks,
+    encode_chunks_windowed,
+    encode_tiers_fused,
+)
 from go_muse_spark.operators.gapfill import aligned_vectors, gap_fill
-from go_muse_spark.operators.rollup import rollup_transcripts
+from go_muse_spark.operators.rollup import rollup_all_tiers, rollup_transcripts
 from go_muse_spark.operators.search import SearchParams, muse_search
+from go_muse_spark.sources.transcripts import generate_transcripts
 
-from tests.test_pipeline import CANDS, EXPECT, REF, transcripts_for_tier
+from tests.test_pipeline import EXPECT, REF, transcripts_for_tier
+
+BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def rows(df):
+    """Chunk rows as sortable tuples, byte columns as bytes."""
+    return sorted(
+        (r["conv_id"], r["tier"], r["chunk_start"], r["n_points"],
+         bytes(r["ts_bytes"]), bytes(r["val_bytes"]))
+        for r in df.collect()
+    )
+
+
+def points(chunks_df):
+    """Decoded (conv_id, bucket_ts, turn_cnt) points, sorted."""
+    return sorted(
+        (r["conv_id"], r["bucket_ts"], r["turn_cnt"])
+        for r in decode_chunks(chunks_df, "turn_cnt").collect()
+    )
+
+
+def at_batch_sizes(spark, fn):
+    """Run fn() at arrow.maxRecordsPerBatch 7 and at the session default
+    (so conversations straddle Arrow batches); return both results."""
+    default = spark.conf.get(BATCH_KEY)
+    out = []
+    for batch in ("7", default):
+        spark.conf.set(BATCH_KEY, batch)
+        try:
+            out.append(fn())
+        finally:
+            spark.conf.set(BATCH_KEY, default)
+    return out
+
+
+@pytest.fixture(scope="module")
+def tx_gappy(spark):
+    """Heavy-tailed corpus with inserted silences: 150 conversations,
+    ~42k turns, ~14k sparse 1m buckets."""
+    return spark.createDataFrame(
+        generate_transcripts(n_convs=150, seed=3)
+    ).localCheckpoint(eager=True)
+
+
+@pytest.fixture(scope="module")
+def rolled_gappy(tx_gappy):
+    return (
+        rollup_transcripts(tx_gappy, "1m")
+        .select("conv_id", "bucket_ts", "turn_cnt")
+        .localCheckpoint(eager=True)
+    )
 
 
 def test_chunk_roundtrip_spark(spark):
@@ -60,172 +123,152 @@ def test_search_over_decoded_chunks(spark):
         assert abs(got[name][1] - score) < 1e-3, name
 
 
-def test_fused_fill_encode_equals_separate(spark):
+def test_fused_fill_encode_equals_separate(spark, rolled_gappy):
     """encode_chunks(fill='zero') == gap_fill + encode_chunks."""
-    tx = transcripts_for_tier(spark, "1m")
-    rolled = rollup_transcripts(tx, "1m")
-    sep = decode_chunks(
-        encode_chunks(
-            gap_fill(rolled, "1m", ("turn_cnt",), "zero", align="conv"),
-            "1m", "turn_cnt", chunk_size=7,
-        ),
-        "turn_cnt",
-    )
-    fused = decode_chunks(
-        encode_chunks(rolled, "1m", "turn_cnt", chunk_size=7, fill="zero"),
-        "turn_cnt",
-    )
-    a = sorted(map(tuple, sep.collect()))
-    b = sorted(map(tuple, fused.collect()))
-    assert a == b
+    def run():
+        sep = encode_chunks(
+            gap_fill(rolled_gappy, "1m", ("turn_cnt",), "zero", align="conv"),
+            "1m", "turn_cnt", chunk_size=64,
+        )
+        fused = encode_chunks(
+            rolled_gappy, "1m", "turn_cnt", chunk_size=64, fill="zero"
+        )
+        return rows(sep), rows(fused)
+
+    for sep, fused in at_batch_sizes(spark, run):
+        assert sep == fused
 
 
-def test_encode_tiers_fused_equals_per_tier(spark):
+@pytest.mark.parametrize("mode", ["zero", "ffill", "linear"])
+def test_encode_chunks_fill_matches_relational_gap_fill(spark, rolled_gappy, mode):
+    """Absolute pin, independent of every other encoder: the decoded
+    points of encode_chunks(fill=m) are the relational gap_fill(mode=m)
+    rows — exact for zero and ffill, within 1e-9 for linear (the
+    relational lerp runs in seconds, np.interp in microseconds)."""
+    filled = gap_fill(rolled_gappy, "1m", ("turn_cnt",), mode, align="conv")
+    want = sorted(
+        (r["conv_id"], r["bucket_ts"], float(r["turn_cnt"]))
+        for r in filled.collect()
+    )
+    got = points(
+        encode_chunks(rolled_gappy, "1m", "turn_cnt", chunk_size=64, fill=mode)
+    )
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert len(want) > rolled_gappy.count()  # the corpus has gaps
+    if mode == "linear":
+        assert max(abs(g[2] - w[2]) for g, w in zip(got, want)) <= 1e-9
+    else:
+        assert got == want
+
+
+def test_encode_tiers_fused_equals_per_tier(spark, tx_gappy):
     """encode_tiers_fused == encode_chunks(fill='zero') per tier, chunk
     rows byte-identical (same fill, same hierarchical sums, same codec)."""
-    from go_muse_spark.operators.compress import encode_tiers_fused
-    from go_muse_spark.operators.rollup import rollup_all_tiers
+    tiers = rollup_all_tiers(tx_gappy)
 
-    tx = transcripts_for_tier(spark, "1m")
-    tiers = rollup_all_tiers(tx)
-    per_tier = []
-    for tier in ("1m", "1h", "1d"):
-        per_tier.append(
-            encode_chunks(tiers[tier], tier, "turn_cnt", chunk_size=7, fill="zero")
+    def run():
+        sep = [
+            rows(encode_chunks(tiers[t], t, "turn_cnt", chunk_size=64, fill="zero"))
+            for t in ("1m", "1h", "1d")
+        ]
+        fused = rows(encode_tiers_fused(tiers["1m"], "turn_cnt", chunk_size=64))
+        return sorted(sep[0] + sep[1] + sep[2]), fused
+
+    for sep, fused in at_batch_sizes(spark, run):
+        assert sep == fused
+
+
+def _windowed_parity(spark, rolled, fill, chunk_size=16):
+    """Windowed encoder == per-conversation encoder, byte for byte, at
+    both Arrow batch sizes. chunk_size=16 leaves ~90 all-gap windows
+    in the gappy corpus (none at 64), which the ffill/linear carries
+    must cross."""
+    def run():
+        per_conv = rows(
+            encode_chunks(rolled, "1m", "turn_cnt", chunk_size=chunk_size, fill=fill)
         )
-    sep = per_tier[0].unionByName(per_tier[1]).unionByName(per_tier[2])
-    fused = encode_tiers_fused(tiers["1m"], "turn_cnt", chunk_size=7)
-
-    def rows(df):
-        return sorted(
-            (r["conv_id"], r["tier"], r["chunk_start"], r["n_points"],
-             bytes(r["ts_bytes"]), bytes(r["val_bytes"]))
-            for r in df.collect()
+        windowed = rows(
+            encode_chunks_windowed(
+                rolled, "1m", "turn_cnt", chunk_size=chunk_size, fill=fill
+            )
         )
+        return per_conv, windowed
 
-    assert rows(sep) == rows(fused)
+    for per_conv, windowed in at_batch_sizes(spark, run):
+        assert per_conv == windowed
+    return per_conv
 
 
-def test_encode_chunks_windowed_equals_per_conv(spark):
+def test_encode_chunks_windowed_equals_per_conv(spark, rolled_gappy):
     """Window-partitioned encoder output is byte-identical to the
     per-conversation encoder with zero fill (incl. all-gap windows)."""
-    from go_muse_spark.operators.compress import encode_chunks_windowed
-    from go_muse_spark.operators.rollup import rollup_transcripts
-
-    tx = transcripts_for_tier(spark, "1m")
-    rolled = rollup_transcripts(tx, "1m")
-    per_conv = encode_chunks(rolled, "1m", "turn_cnt", chunk_size=5, fill="zero")
-    windowed = encode_chunks_windowed(rolled, "1m", "turn_cnt", chunk_size=5)
-
-    def rows(df):
-        return sorted(
-            (r["conv_id"], r["tier"], r["chunk_start"], r["n_points"],
-             bytes(r["ts_bytes"]), bytes(r["val_bytes"]))
-            for r in df.collect()
+    per_conv = _windowed_parity(spark, rolled_gappy, "zero")
+    observed = (
+        rolled_gappy.join(
+            rolled_gappy.groupBy("conv_id").agg(F.min("bucket_ts").alias("lo")),
+            "conv_id",
         )
-
-    assert rows(per_conv) == rows(windowed)
-
-
-def test_encode_chunks_windowed_ffill_carry(spark):
-    """Windowed ffill (cross-window carry-in) == per-conv ffill encode."""
-    from go_muse_spark.operators.compress import encode_chunks_windowed
-    from go_muse_spark.operators.rollup import rollup_transcripts
-
-    tx = transcripts_for_tier(spark, "1m")
-    rolled = rollup_transcripts(tx, "1m")
-    # chunk_size=3 so conversations span many windows, incl. all-gap ones
-    per_conv = encode_chunks(rolled, "1m", "turn_cnt", chunk_size=3, fill="ffill")
-    windowed = encode_chunks_windowed(
-        rolled, "1m", "turn_cnt", chunk_size=3, fill="ffill"
+        .select(
+            "conv_id",
+            ((F.unix_timestamp("bucket_ts") - F.unix_timestamp("lo")) / (60 * 16))
+            .cast("long")
+            .alias("k"),
+        )
+        .distinct()
+        .count()
     )
-
-    def rows(df):
-        return sorted(
-            (r["conv_id"], r["tier"], r["chunk_start"], r["n_points"],
-             bytes(r["ts_bytes"]), bytes(r["val_bytes"]))
-            for r in df.collect()
-        )
-
-    assert rows(per_conv) == rows(windowed)
+    assert len(per_conv) > observed  # all-gap windows are exercised
 
 
-def test_pre_partitioned_one_exchange_parity(spark):
+def test_encode_chunks_windowed_ffill_carry(spark, rolled_gappy):
+    """Windowed ffill (cross-window carry-in) == per-conv ffill encode."""
+    _windowed_parity(spark, rolled_gappy, "ffill")
+
+
+def test_pre_partitioned_one_exchange_parity(spark, tx_gappy):
     """bench.py's one-exchange pipeline (repartition raw by conv_id, agg
     with no second exchange, pre_partitioned encoder) emits byte-identical
     chunks to the default two-exchange path."""
-    from pyspark.sql import functions as F
-    from go_muse_spark.operators.compress import encode_tiers_fused
-    from go_muse_spark.operators.rollup import rollup_transcripts
-
-    tx = transcripts_for_tier(spark, "1m")
-    default = encode_tiers_fused(
-        rollup_transcripts(tx, "1m"), "turn_cnt", chunk_size=7
-    )
-    pre = tx.select("conv_id", "ts").repartition(4, "conv_id")
-    rolled = pre.groupBy(
-        "conv_id", F.date_trunc("minute", "ts").alias("bucket_ts")
-    ).agg(F.count(F.lit(1)).alias("turn_cnt"))
-    one_exchange = encode_tiers_fused(
-        rolled, "turn_cnt", chunk_size=7, pre_partitioned=True
-    )
-
-    def rows(df):
-        return sorted(
-            (r["conv_id"], r["tier"], r["chunk_start"], r["n_points"],
-             bytes(r["ts_bytes"]), bytes(r["val_bytes"]))
-            for r in df.collect()
+    def run():
+        default = encode_tiers_fused(
+            rollup_transcripts(tx_gappy, "1m"), "turn_cnt", chunk_size=64
         )
+        pre = tx_gappy.select("conv_id", "ts").repartition(4, "conv_id")
+        rolled = pre.groupBy(
+            "conv_id", F.date_trunc("minute", "ts").alias("bucket_ts")
+        ).agg(F.count(F.lit(1)).alias("turn_cnt"))
+        one_exchange = encode_tiers_fused(
+            rolled, "turn_cnt", chunk_size=64, pre_partitioned=True
+        )
+        return rows(default), rows(one_exchange)
 
-    assert rows(default) == rows(one_exchange)
+    for default, one_exchange in at_batch_sizes(spark, run):
+        assert default == one_exchange
 
 
-def test_encode_chunks_windowed_linear_carry(spark):
+def test_encode_chunks_windowed_linear_carry(spark, rolled_gappy):
     """Windowed linear fill (predecessor + successor anchors carried
     across windows) == per-conv linear encode, byte for byte."""
-    from go_muse_spark.operators.compress import encode_chunks_windowed
-    from go_muse_spark.operators.rollup import rollup_transcripts
-
-    tx = transcripts_for_tier(spark, "1m")
-    rolled = rollup_transcripts(tx, "1m")
-    # chunk_size=3 so lerp spans cross-window gaps, incl. all-gap windows
-    per_conv = encode_chunks(rolled, "1m", "turn_cnt", chunk_size=3, fill="linear")
-    windowed = encode_chunks_windowed(
-        rolled, "1m", "turn_cnt", chunk_size=3, fill="linear"
-    )
-
-    def rows(df):
-        return sorted(
-            (r["conv_id"], r["tier"], r["chunk_start"], r["n_points"],
-             bytes(r["ts_bytes"]), bytes(r["val_bytes"]))
-            for r in df.collect()
-        )
-
-    assert rows(per_conv) == rows(windowed)
+    _windowed_parity(spark, rolled_gappy, "linear")
 
 
-def test_compact_chunks_restores_chunk_size(spark):
+def test_compact_chunks_restores_chunk_size(spark, rolled_gappy):
     """Fragmented chunks (small chunk_size, as interleaved merge batches
     would leave) compact into full-size chunks with identical decoded
-    points and fewer rows."""
-    from go_muse_spark.operators.compress import compact_chunks
-    from go_muse_spark.operators.rollup import rollup_transcripts
+    points and fewer rows — byte-identical to encoding at full size."""
+    fragmented = encode_chunks(
+        rolled_gappy, "1m", "turn_cnt", chunk_size=5, fill="zero"
+    ).localCheckpoint(eager=True)  # a stored chunk table
 
-    tx = transcripts_for_tier(spark, "1m")
-    rolled = rollup_transcripts(tx, "1m")
-    fragmented = encode_chunks(rolled, "1m", "turn_cnt", chunk_size=3, fill="zero")
-    compacted = compact_chunks(fragmented, "turn_cnt", chunk_size=64)
+    def run():
+        return rows(compact_chunks(fragmented, "turn_cnt", chunk_size=64))
 
-    def points(chunks_df):
-        from go_muse_spark.operators.compress import decode_chunks
-
-        return sorted(
-            (r["conv_id"], r["bucket_ts"], r["turn_cnt"])
-            for r in decode_chunks(chunks_df, "turn_cnt").collect()
-        )
-
-    assert points(fragmented) == points(compacted)
-    n_frag = fragmented.count()
-    n_comp = compacted.count()
-    assert n_comp < n_frag  # genuinely fewer, larger chunks
-    assert compacted.filter("n_points > 64").count() == 0
+    direct = rows(
+        encode_chunks(rolled_gappy, "1m", "turn_cnt", chunk_size=64, fill="zero")
+    )
+    for compacted in at_batch_sizes(spark, run):
+        assert compacted == direct
+    compacted_df = compact_chunks(fragmented, "turn_cnt", chunk_size=64)
+    assert points(fragmented) == points(compacted_df)
+    assert compacted_df.count() < fragmented.count()  # fewer, larger chunks
+    assert compacted_df.filter("n_points > 64").count() == 0

@@ -15,11 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from go_muse_spark.operators.gapfill import (
-    aligned_vectors,
-    gap_fill,
-    gap_fill_pandas,
-)
+from go_muse_spark.operators.gapfill import aligned_vectors, gap_fill
 from go_muse_spark.operators.rollup import (
     TIERS,
     rollup_all_tiers,
@@ -153,22 +149,3 @@ def test_gap_fill_global_alignment(spark):
     # both convs span the global 6-bucket range -> equal lengths
     lens = aligned_vectors(filled).select(F.size("values").alias("n")).collect()
     assert {r["n"] for r in lens} == {6}
-
-
-@pytest.mark.parametrize("mode", ["zero", "ffill", "linear"])
-def test_gap_fill_pandas_matches_relational(spark, mode):
-    """north_rule pandas/Arrow-UDF gap-fill == the relational plan."""
-    src = gappy_rollup(spark)
-    rel = gap_fill(src, "1m", ("turn_cnt", "turns_per_sec"), mode)
-    pdu = gap_fill_pandas(src, "1m", ("turn_cnt", "turns_per_sec"), mode)
-    key = ["conv_id", "bucket_ts"]
-    a = sorted(map(tuple, rel.select(*key, F.col("turn_cnt").cast("double"),
-                                     "turns_per_sec", "filled").collect()))
-    b = sorted(map(tuple, pdu.select(*key, "turn_cnt", "turns_per_sec",
-                                     "filled").collect()))
-    assert len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert ra[:2] == rb[:2]
-        assert ra[2] == pytest.approx(rb[2])
-        assert ra[3] == pytest.approx(rb[3])
-        assert ra[4] == rb[4]

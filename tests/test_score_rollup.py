@@ -98,7 +98,7 @@ def test_complete_series_runs_carry():
     sizes)."""
     import pandas as pd
 
-    from go_muse_spark.operators.search import complete_series_runs
+    from go_muse_spark.operators.compress import complete_series_runs
 
     def frames(chunks):
         return [

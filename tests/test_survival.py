@@ -95,3 +95,53 @@ def test_random_censoring_matches_reference(spark):
         ts = sorted(got)
         for a, b in zip(ts, ts[1:]):
             assert got[b][2] <= got[a][2] + 1e-15
+
+
+def test_session_ending_exactly_gap_before_edge_is_censored(spark, tmp_path):
+    """q_survival_sessions: sessionize keeps a gap of exactly 7200 s in
+    the session, so a session whose last event is exactly 7200 s before
+    the corpus edge may still continue and must be censored; one 7201 s
+    before the edge has ended. Spark query and DuckDB oracle agree."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import oracle_sql, q_survival_sessions
+
+    edge = dt.datetime(2025, 1, 2)
+    sec = dt.timedelta(seconds=1)
+    evs = [
+        (1, edge - 7800 * sec),  # user 1: 10 min, ends exactly 2h before edge
+        (1, edge - 7200 * sec),
+        (2, edge - 7501 * sec),  # user 2: 5 min, ends 2h + 1 s before edge
+        (2, edge - 7201 * sec),
+        (3, edge),  # user 3: the edge itself, 0 min
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(evs)), pa.int64()),
+                "ts": pa.array([t for _, t in evs], pa.timestamp("us")),
+                "user_id": pa.array([u for u, _ in evs], pa.int64()),
+                "event_type": ["e"] * len(evs),
+                "value": [0.0] * len(evs),
+                "props": [""] * len(evs),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    got = sorted(
+        tuple(r) for r in q_survival_sessions(spark, str(tmp_path)).collect()
+    )
+    # only user 2's session ends; users 1 and 3 hold the risk set
+    assert [(r[0], r[2]) for r in got] == [(5, 1)]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path / 'events.parquet'}'"
+    )
+    want = sorted(
+        con.execute(oracle_sql()["survival_sessions"]).fetchall()
+    )
+    assert got == want
