@@ -32,7 +32,6 @@ from go_muse_spark.operators.compress import (
     ieee_bits_sql,
     xor_cost,
     encode_chunks,
-    encode_chunks_windowed,
 )
 from go_muse_spark.operators.gapfill import gap_fill
 from go_muse_spark.operators.rollup import (
@@ -1418,19 +1417,12 @@ def q_chunks_roundtrip_1h(spark, sf_dir):
 
 
 def q_chunks_windowed_roundtrip_1h(spark, sf_dir):
-    """Skew-proof window-partitioned encoder (unit of work = one chunk
-    window, not one conversation) -> decode; same oracle as the per-conv
-    encoder because the chunk bytes are identical by construction."""
-    rolled = rollup_transcripts(_tx(spark, sf_dir), "1h")
-    chunks = encode_chunks_windowed(
-        rolled, "1h", "turn_cnt", chunk_size=256, materialize_input=True
-    )
-    decoded = decode_chunks(chunks, "turn_cnt")
-    return decoded.select(
-        F.col("conv_id").alias("user_id"),
-        "bucket_ts",
-        F.col("turn_cnt").cast("long").alias("turn_cnt"),
-    )
+    """Kept under its name for the contract: it checked the
+    window-partitioned encoder, which emitted the same chunk bytes as
+    encode_chunks(fill="zero") and was removed. It now runs the
+    per-conversation encode -> decode round trip of chunks_roundtrip_1h
+    (same chunk_size 256, same oracle)."""
+    return q_chunks_roundtrip_1h(spark, sf_dir)
 
 
 def q_compact_roundtrip_1h(spark, sf_dir):
@@ -2307,11 +2299,10 @@ def q_muse_over_chunks_1h(spark, sf_dir):
     muse search over the decoded points. Proves the full storage loop at
     the driver contract level; shares the flagship's brute-force xcorr
     oracle (the codec round trip is exact and padded zero rows are no-ops
-    in the zero-initialized scoring matrix)."""
+    in the zero-initialized scoring matrix). Chunks come from the
+    per-conversation encoder with fused zero fill, chunk_size 512."""
     rolled = rollup_transcripts(_tx(spark, sf_dir), "1h")
-    chunks = encode_chunks_windowed(
-        rolled, "1h", "turn_cnt", chunk_size=512, materialize_input=True
-    )
+    chunks = encode_chunks(rolled, "1h", "turn_cnt", chunk_size=512, fill="zero")
     decoded = decode_chunks(chunks, "turn_cnt")
     # bounds from the PRE-encode rollup: per-conv dense fill never extends
     # past each conv's [min, max], so the global range is identical — and
@@ -2341,12 +2332,12 @@ def q_muse_windowed_chunks_1h(spark, sf_dir):
     groups. Boundary chunks decode then trim on bucket_ts; fill-zero
     rows are dropped to restore the exact sparse rollup shape (rollup
     counts are >= 1, so zeros only ever come from gap fill). Oracle:
-    identical to muse_windowed_1h — the chunk round trip is exact."""
+    identical to muse_windowed_1h — the chunk round trip is exact.
+    "Windowed" is the search window; the chunks come from the
+    per-conversation encoder with fused zero fill, chunk_size 512."""
     rolled = rollup_transcripts(_tx(spark, sf_dir), "1h")
     lo, hi_w, nw, ref = _windowed_burst(rolled)
-    chunks = encode_chunks_windowed(
-        rolled, "1h", "turn_cnt", chunk_size=512, materialize_input=True
-    )
+    chunks = encode_chunks(rolled, "1h", "turn_cnt", chunk_size=512, fill="zero")
     pruned = chunks.filter(F.col("chunk_start") <= F.lit(hi_w))
     decoded = decode_chunks(pruned, "turn_cnt").filter(
         (F.col("bucket_ts") <= F.lit(hi_w)) & (F.col("turn_cnt") > 0)
@@ -5734,7 +5725,7 @@ GROUP BY 1, 2, 3
         6,
         " WHERE ts < TIMESTAMP '2024-01-15' AND user_id % 10 = 0",
     )
-    # windowed encoder emits byte-identical chunks -> identical decode
+    # the same query as chunks_roundtrip_1h
     d["chunks_windowed_roundtrip_1h"] = d["chunks_roundtrip_1h"]
     # compaction decodes and re-encodes bit-exact chunks -> same points
     d["compact_roundtrip_1h"] = d["chunks_roundtrip_1h"]

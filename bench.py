@@ -40,7 +40,7 @@ from go_muse_spark.operators.search import (  # noqa: E402
     muse_search_rollup,
     series_bounds,
 )
-from go_muse_spark.session import get_bench_spark  # noqa: E402
+from go_muse_spark.session import DEFAULT_CPUS, get_bench_spark  # noqa: E402
 from go_muse_spark.sources.transcripts import write_transcripts  # noqa: E402
 
 BENCH_QUERIES = [
@@ -257,7 +257,7 @@ def noop_write(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     frac = sf_frac(sf_dir)
     spark = get_bench_spark(cpus=cpus, app="go-muse-spark-bench")
 

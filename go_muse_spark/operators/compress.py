@@ -1,23 +1,35 @@
 """L3 — chunk tables: per-(conv, tier) byte-packed compressed segments.
 
 Encoders: rolled-up rows -> chunks(conv_id, tier, chunk_start,
-n_points, ts_bytes, val_bytes). encode_chunks, encode_chunks_windowed
-and encode_tiers_fused differ only in the Spark plan that feeds them
-and in which series each conversation yields; all three run ONE
-streaming core: the mapInPandas body reads complete conversation runs
-through complete_series_runs (Python memory O(one Arrow batch + one
-series), never a whole partition), densifies each series with
-_dense_fill and cuts it into chunk_size slices that the Gorilla/DoD
-codecs (functions/codecs.py) encode (_chunk_frame).
+n_points, ts_bytes, val_bytes). Two plans remain, both one conv_id
+exchange into one streaming mapInPandas core:
+
+  * per-conversation — encode_chunks: one tier, optionally fused gap
+    fill (zero / ffill / linear);
+  * fused — encode_tiers_fused: the zero-filled 1m series of each
+    conversation re-aggregated to 1h and 1d in numpy, all three tiers
+    encoded in the same pass.
+
+The core reads complete conversation runs through complete_series_runs
+(Python memory O(one Arrow batch + one series), never a whole
+partition), densifies each series with _dense_fill and cuts it into
+chunk_size slices that the Gorilla/DoD codecs (functions/codecs.py)
+encode (_chunk_frame).
 
 decode_chunks: chunks -> long-form rows, via mapInPandas (each chunk
 decodes independently — no shuffle at all). Both byte columns live in
 every chunk row, so select only what you need BEFORE wide pipelines.
 
-Partitioning note for 10^12-turn scale: chunk rows are small and uniform
-(<= chunk_size points each); a hot conversation becomes many chunk rows,
-so downstream work over chunks is naturally balanced — this is the L3
-answer to skew, complementing the search stage's per-series exchange.
+Skew: the encoders take rollup rows, and the rollup's map-side partial
+aggregate has already folded a hot conversation's turns into buckets,
+so one conversation costs O(its span in buckets), not O(its turns): a
+year of 1m buckets (525,600 points) fills and encodes in ~0.15 s on one
+core. Downstream, chunk rows are small and uniform (<= chunk_size
+points each): a hot conversation becomes many chunk rows, so work over
+chunks is naturally balanced, complementing the search stage's
+per-series exchange. A window-partitioned plan (one task per chunk
+window) buys nothing on top: on a corpus where one conversation held
+83-98% of the points it measured slower than or equal to encode_chunks.
 """
 
 from __future__ import annotations
@@ -36,7 +48,6 @@ from go_muse_spark.functions.codecs import (
 
 __all__ = [
     "encode_chunks",
-    "encode_chunks_windowed",
     "encode_tiers_fused",
     "decode_chunks",
     "compact_chunks",
@@ -94,41 +105,23 @@ def complete_series_runs(pdf_iter, key: str):
         )
 
 
-def _runs(*keys: np.ndarray):
-    """(start, end) of each run of equal consecutive key tuples."""
-    change = keys[0][1:] != keys[0][:-1]
-    for k in keys[1:]:
-        change = change | (k[1:] != k[:-1])
-    bounds = np.flatnonzero(change) + 1
-    return zip(
-        np.concatenate(([0], bounds)), np.concatenate((bounds, [len(keys[0])]))
-    )
+def _runs(keys: np.ndarray):
+    """(start, end) of each run of equal consecutive keys."""
+    bounds = np.flatnonzero(keys[1:] != keys[:-1]) + 1
+    return zip(np.concatenate(([0], bounds)), np.concatenate((bounds, [len(keys)])))
 
 
 def _micros(col: pd.Series) -> np.ndarray:
     return col.to_numpy(dtype="datetime64[us]").astype(np.int64)
 
 
-def _dense_fill(
-    ts: np.ndarray,
-    vals: np.ndarray,
-    lo: int,
-    n: int,
-    step_us: int,
-    fill: str,
-    prev: tuple | None = None,
-    nxt: tuple | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Densify sorted sparse buckets (ts in int64 us) onto the grid
-    lo + i*step_us, i < n.
-
-    prev / nxt are (ts, value) anchors from outside the grid, the state
-    the windowed encoder carries across windows: ffill reads prev's value
-    as its carry-in, linear interpolates through prev before the observed
-    points and nxt after them — the same neighbors a per-conversation
-    np.interp sees, so the lerp is byte-identical. Per-conversation
-    callers pass no anchors (their grid starts at an observed point).
-    """
+def _dense_fill(ts: np.ndarray, vals: np.ndarray, step_us: int, fill: str):
+    """Densify one conversation's sorted sparse buckets (ts in int64 us)
+    over its own [min, max] bucket range. The grid starts at an observed
+    point, so ffill never needs a carry-in and linear interpolates
+    between observed neighbours only."""
+    lo = int(ts[0])
+    n = (int(ts[-1]) - lo) // step_us + 1
     if len(ts) == n:  # already dense
         return ts, vals
     dense_ts = lo + np.arange(n, dtype=np.int64) * step_us
@@ -137,28 +130,16 @@ def _dense_fill(
         out = np.zeros(n, dtype=np.float64)
         out[idx] = vals
     elif fill == "ffill":
-        # cand[0] = carry-in, observed values shifted by one; each dense
-        # position takes the most recent candidate at or before it
+        # each dense position takes the latest observed value at or
+        # before it (position 0 is observed, so the count is >= 1)
         present = np.zeros(n, dtype=np.int64)
         present[idx] = 1
-        cand = np.concatenate(([np.nan if prev is None else prev[1]], vals))
-        out = cand[np.cumsum(present)]
+        out = vals[np.cumsum(present) - 1]
     elif fill == "linear":
-        xp, fp = ts, vals
-        if prev is not None:
-            xp, fp = np.concatenate(([prev[0]], xp)), np.concatenate(([prev[1]], fp))
-        if nxt is not None:
-            xp, fp = np.concatenate((xp, [nxt[0]])), np.concatenate((fp, [nxt[1]]))
-        out = np.interp(dense_ts, xp, fp)  # interior lerp, edge clamp
+        out = np.interp(dense_ts, ts, vals)  # interior lerp
     else:
         raise ValueError(f"unknown fill {fill!r}")
     return dense_ts, out
-
-
-def _own_span_fill(ts: np.ndarray, vals: np.ndarray, step_us: int, fill: str):
-    """Densify one conversation over its own [min, max] bucket range."""
-    lo = int(ts[0])
-    return _dense_fill(ts, vals, lo, (int(ts[-1]) - lo) // step_us + 1, step_us, fill)
 
 
 def _chunk_frame(series, chunk_size: int) -> pd.DataFrame | None:
@@ -244,185 +225,13 @@ def encode_chunks(
     def series_of(pdf):
         for conv, ts, vals in _conv_series(pdf, value_col):
             if fill is not None:
-                ts, vals = _own_span_fill(ts, vals, step_us, fill)
+                ts, vals = _dense_fill(ts, vals, step_us, fill)
             yield conv, tier, ts, vals
 
     return (
         filled.select("conv_id", "bucket_ts", value_col)
         .repartition(n_part, "conv_id")
         .sortWithinPartitions("conv_id", "bucket_ts")
-        .mapInPandas(_encode_op(series_of, chunk_size), CHUNK_SCHEMA)
-    )
-
-
-def encode_chunks_windowed(
-    rollup: DataFrame,
-    tier: str,
-    value_col: str = "turn_cnt",
-    chunk_size: int = 1024,
-    tier_secs: int | None = None,
-    parallelism: int | None = None,
-    fill: str = "zero",
-    materialize_input: bool = False,
-) -> DataFrame:
-    """Skew-proof chunk encoder: the unit of parallel work is one CHUNK
-    WINDOW (<= chunk_size buckets), not one conversation.
-
-    encode_chunks / encode_tiers_fused shuffle whole conversations to one
-    task — correct, but a 10^9-turn conversation (the north_rule's skew
-    case) becomes one straggler task. Here:
-
-      1. per-conv bounds (min/max bucket) — a tiny aggregate;
-      2. a window spine explodes each conv into its chunk-window ids, so
-         all-gap windows still emit their all-zero chunks;
-      3. rollup rows pick up their window id via an equi-join on conv_id
-         (AQE broadcasts the bounds side while it is small; at 10^12-turn
-         scale it degrades gracefully to a co-partitioned shuffle join);
-      4. ONE exchange on (conv_id, window) -> numpy slice encode.
-
-    Every task processes O(rows_per_window) regardless of conversation
-    length, so the stage stays balanced under arbitrary skew.
-
-    fill="zero" emits byte-identical output to encode_chunks(fill="zero").
-    fill="ffill" carries state across windows relationally: the per-window
-    last observed (ts, value) is forward-filled along the window spine (a
-    tiny O(#windows) window function), and each window's predecessor
-    value rides in as its `__prev_v` column — so a window that is entirely
-    gap still encodes the right repeated value without seeing its
-    neighbors. fill="linear" reuses that predecessor anchor and adds the
-    SUCCESSOR anchor, the first observed (ts, value) of later windows, via
-    a second O(#windows) spine window function, so interior lerp across
-    window boundaries uses the same neighbor anchors the per-conv
-    np.interp sees — output is byte-identical to
-    encode_chunks(fill="ffill" / "linear").
-    """
-    if tier_secs is None:
-        from go_muse_spark.operators.rollup import TIERS
-
-        tier_secs = TIERS[tier][1]
-    step_us = tier_secs * 1_000_000
-    spark = rollup.sparkSession
-    n_part = parallelism or spark.sparkContext.defaultParallelism
-
-    df = rollup.select(
-        "conv_id", "bucket_ts", F.col(value_col).cast("double").alias("__val")
-    )
-    # this operator consumes its input THREE times (per-conv bounds, the
-    # window spine, and the row side of the spine join) — when the input
-    # is a lazy pipeline rather than a stored tier table, Catalyst
-    # re-executes that pipeline per consumer (no cross-consumer subtree
-    # reuse). materialize_input=True computes the narrow projection once;
-    # in production the input IS the persisted rollup tier, so the flag
-    # is the in-session stand-in for reading storage.
-    if materialize_input:
-        df = df.localCheckpoint(eager=True)
-    b = df.groupBy("conv_id").agg(
-        F.min("bucket_ts").alias("__lo"), F.max("bucket_ts").alias("__hi")
-    )
-    b = b.withColumn(
-        "__n",
-        (
-            (F.unix_timestamp("__hi") - F.unix_timestamp("__lo"))
-            / F.lit(tier_secs)
-        ).cast("long")
-        + 1,
-    ).select("conv_id", "__lo", "__n")
-
-    if fill not in ("zero", "ffill", "linear"):
-        raise ValueError(f"unsupported fill {fill!r} for windowed encoder")
-
-    spine = b.select(
-        "conv_id",
-        "__lo",
-        "__n",
-        F.explode(
-            F.sequence(
-                F.lit(0), ((F.col("__n") - 1) / F.lit(chunk_size)).cast("long")
-            )
-        ).alias("__k"),
-    )
-    rows = (
-        df.join(b.select("conv_id", "__lo"), "conv_id")
-        .withColumn(
-            "__k",
-            (
-                (F.unix_timestamp("bucket_ts") - F.unix_timestamp("__lo"))
-                / F.lit(tier_secs * chunk_size)
-            ).cast("long"),
-        )
-        .select("conv_id", "__k", "bucket_ts", "__val")
-    )
-    # cross-window anchor columns are attached ONLY for the fill mode
-    # that reads them — zero fill needs none, ffill needs __prev_v,
-    # linear needs the four __prev_*/__next_* anchors. Anything attached
-    # here rides the spine join, the (conv_id, __k) exchange, and the
-    # Arrow transfer into Python on EVERY row, so unconditional NULL
-    # literals were a measured ~1.8x tax on the zero path (round-2
-    # VERDICT "What's wrong" #2).
-    if fill != "zero":
-        # per-window last (and, for linear, first) observed (ts, value);
-        # the predecessor anchor is the latest one of any EARLIER window
-        ends = [F.max(F.struct("bucket_ts", "__val")).alias("__lv")]
-        if fill == "linear":
-            ends.append(F.min(F.struct("bucket_ts", "__val")).alias("__fv"))
-        w_spine = Window.partitionBy("conv_id").orderBy("__k")
-        w_prev = w_spine.rowsBetween(Window.unboundedPreceding, -1)
-        spine = spine.join(
-            rows.groupBy("conv_id", "__k").agg(*ends), ["conv_id", "__k"], "left"
-        ).withColumn("__prev", F.last("__lv", ignorenulls=True).over(w_prev))
-        anchors = [F.col("__prev.__val").alias("__prev_v")]
-        if fill == "linear":
-            w_next = w_spine.rowsBetween(1, Window.unboundedFollowing)
-            spine = spine.withColumn(
-                "__next", F.first("__fv", ignorenulls=True).over(w_next)
-            )
-            anchors += [
-                F.col("__prev.bucket_ts").alias("__prev_t"),
-                F.col("__next.bucket_ts").alias("__next_t"),
-                F.col("__next.__val").alias("__next_v"),
-            ]
-        spine = spine.select("conv_id", "__lo", "__n", "__k", *anchors)
-    joined = spine.join(rows, ["conv_id", "__k"], "left")
-
-    def series_of(pdf):
-        convs = pdf["conv_id"].to_numpy()
-        ks = pdf["__k"].to_numpy(dtype=np.int64)
-        los = _micros(pdf["__lo"])
-        ns = pdf["__n"].to_numpy(dtype=np.int64)
-        ts_all = pdf["bucket_ts"].to_numpy(dtype="datetime64[us]")
-        vals_all = pdf["__val"].to_numpy(dtype=np.float64)
-        if fill != "zero":
-            prev_vs = pdf["__prev_v"].to_numpy(dtype=np.float64)
-        if fill == "linear":
-            prev_ts = pdf["__prev_t"].to_numpy(dtype="datetime64[us]")
-            next_ts = pdf["__next_t"].to_numpy(dtype="datetime64[us]")
-            next_vs = pdf["__next_v"].to_numpy(dtype=np.float64)
-        for s, e in _runs(convs, ks):
-            k = int(ks[s])
-            lo = int(los[s]) + k * chunk_size * step_us
-            n = int(min(chunk_size, ns[s] - k * chunk_size))
-            # an all-gap window arrives as one row with NULL bucket_ts
-            present = ~np.isnat(ts_all[s:e])
-            ts = ts_all[s:e][present].astype(np.int64)
-            vals = vals_all[s:e][present]
-            prev = nxt = None
-            if fill == "ffill":
-                prev = (None, prev_vs[s])  # NaN only for window 0
-            elif fill == "linear":
-                if not np.isnat(prev_ts[s]):
-                    prev = (prev_ts[s].astype(np.int64), prev_vs[s])
-                if not np.isnat(next_ts[s]):
-                    nxt = (next_ts[s].astype(np.int64), next_vs[s])
-            yield (
-                convs[s], tier,
-                *_dense_fill(ts, vals, lo, n, step_us, fill, prev, nxt),
-            )
-
-    # sorted by (conv_id, __k), so complete conv_id runs also hold
-    # complete window runs
-    return (
-        joined.repartition(n_part, "conv_id", "__k")
-        .sortWithinPartitions("conv_id", "__k", "bucket_ts")
         .mapInPandas(_encode_op(series_of, chunk_size), CHUNK_SCHEMA)
     )
 
@@ -475,7 +284,7 @@ def encode_tiers_fused(
 
     def series_of(pdf):
         for conv, ts, vals in _conv_series(pdf, value_col):
-            ts_1m, v_1m = _own_span_fill(ts, vals, _MINUTE_US, "zero")
+            ts_1m, v_1m = _dense_fill(ts, vals, _MINUTE_US, "zero")
             ts_1h, v_1h = _coarsen(ts_1m, v_1m, _HOUR_US)
             ts_1d, v_1d = _coarsen(ts_1h, v_1h, _DAY_US)
             yield conv, "1m", ts_1m, v_1m

@@ -139,7 +139,6 @@ def asof_join(
     tolerance_s: float | None = None,
     suffix: str = "_r",
     bucket_secs: int | None = None,
-    materialize_input: bool = False,
 ) -> DataFrame:
     """Backward (most-recent-at-or-before) as-of join.
 
@@ -167,9 +166,7 @@ def asof_join(
     unioned input THREE times (boundary agg, spine keys, main join) —
     the shuffled bytes still move once, but a lazy upstream pipeline is
     re-EXECUTED per consumer (Catalyst has no cross-consumer subtree
-    reuse); pass materialize_input=True to compute the union once when
-    the inputs are expensive pipelines rather than table scans (same
-    trade as encode_chunks_windowed's flag).
+    reuse); store or localCheckpoint expensive inputs first.
     """
     from pyspark.sql.types import StructField, StructType
 
@@ -246,9 +243,8 @@ def asof_join(
         # inside one window task. Partitioning on (key, time-bucket)
         # caps any task at one bucket of one key; the cross-bucket match
         # is restored by a tiny per-(key, bucket) boundary spine whose
-        # carry is forward-filled along buckets — the same __carry
-        # pattern the windowed chunk encoder uses
-        # (operators/compress.py encode_chunks_windowed).
+        # carry is forward-filled along buckets (sessionize's bucketed
+        # path uses the same spine).
         #   exchanges: the big union moves ONCE on (key, bucket); the
         #   spine tables are O(#key x #active-buckets) rows (partial-agg
         #   reduced map-side), orders of magnitude smaller than the data.
@@ -258,8 +254,6 @@ def asof_join(
         ub = u.withColumn(
             "__b", (epoch / F.lit(float(bucket_secs))).cast("long")
         )
-        if materialize_input:
-            ub = ub.localCheckpoint(eager=True)
         # last right row per (key, bucket), picked by max_by on the
         # timestamp alone — ordering the whole struct would require
         # every payload column to be orderable (maps are not);

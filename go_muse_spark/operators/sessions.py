@@ -25,7 +25,7 @@ partitions the heavy pass on (key, time-bucket) and restores the two
 cross-bucket dependencies — the previous bucket's last timestamp (for
 the boundary gap test) and the number of sessions started in earlier
 buckets (a prefix sum) — through a tiny per-(key, bucket) spine, the
-same carry composition asof_join and encode_chunks_windowed use.
+same carry composition asof_join uses.
 Any single task is then bounded by one bucket of one key.
 """
 
@@ -51,7 +51,6 @@ def sessionize(
     gap_s: float = 1800.0,
     session_col: str = "session_id",
     bucket_secs: int | None = None,
-    materialize_input: bool = False,
 ) -> DataFrame:
     """Assign 1-based session numbers per key.
 
@@ -67,10 +66,7 @@ def sessionize(
     resolve in-bucket. The bucketed plan consumes the input THREE times
     (boundary-ts spine, numbering spine, main pass) — Catalyst has no
     cross-consumer subtree reuse, so a lazy upstream pipeline re-EXECUTES
-    per consumer; pass ``materialize_input=True`` to localCheckpoint the
-    bucketed input and the flagged pass once (the same trade as
-    asof_join's flag) when the input is an expensive pipeline rather
-    than a table scan.
+    per consumer; store or localCheckpoint an expensive input first.
     """
     reserved = {"__gap_new", "__b", "__prev_ts", "__carry_ts", "__off",
                 "__last", "__n_new", session_col}
@@ -105,8 +101,6 @@ def sessionize(
     # rows (partial-agg reduced map-side).
     b = F.lit(float(bucket_secs))
     withb = df.withColumn("__b", (epoch / b).cast("long"))
-    if materialize_input:
-        withb = withb.localCheckpoint(eager=True)
 
     # spine pass 1: last timestamp per (key, bucket), forward-carried to
     # the NEXT bucket so each bucket's first row can run the gap test
@@ -132,10 +126,6 @@ def sessionize(
         prev_in.isNull() | ((epoch - prev_in) > F.lit(float(gap_s)))
     ).cast("long")
     flagged = joined.select("*", is_new.alias("__gap_new"))
-    if materialize_input:
-        # the flagged (post-window) pass feeds both the numbering spine
-        # and the final join — materialize it once too
-        flagged = flagged.localCheckpoint(eager=True)
 
     # spine pass 2: sessions started in EARLIER buckets (an exclusive
     # prefix sum over the per-bucket flag counts) -> the key-global

@@ -13,7 +13,10 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "get_bench_spark", "ship_package", "DEFAULT_CPUS"]
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# SPARK_GRAFT_CPUS overrides; otherwise every core this process may run on
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 _PKG_ZIP: str | None = None
 _SHIPPED_CONTEXTS: set[int] = set()

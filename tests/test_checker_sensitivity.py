@@ -4,48 +4,29 @@ A green sweep only means something if the checker would have gone red
 on a wrong answer — so pin its sensitivity: value flips, row drops,
 row additions, column renames, and sub-rounding float jitter must
 each produce the verdict the methodology claims (first four caught,
-the last tolerated by design)."""
+the last tolerated by design). The verdict is the tool's own
+check_oracle.verdict, so a change to its tolerance turns these red."""
 
 import importlib.util
 import sys
+from pathlib import Path
 
 import pandas as pd
 
+CHECKER = Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py"
 
-def _checker():
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle", "/root/repo/tools/check_oracle.py"
-    )
+
+def checker():
+    """tools/check_oracle.py as a module (it only reads argv in main())."""
+    spec = importlib.util.spec_from_file_location("check_oracle", CHECKER)
     m = importlib.util.module_from_spec(spec)
     saved = sys.argv
-    sys.argv = ["check_oracle"]  # module only reads argv in main()
+    sys.argv = ["check_oracle"]
     try:
         spec.loader.exec_module(m)
     finally:
         sys.argv = saved
     return m
-
-
-def _verdict(m, a: pd.DataFrame, b: pd.DataFrame) -> bool:
-    import numpy as np
-
-    ca, cb = m.canon(a), m.canon(b)
-    ok = (
-        len(ca) == len(cb)
-        and list(ca.columns) == list(cb.columns)
-        and ca.equals(cb)
-    )
-    if not ok and len(ca) == len(cb) and list(ca.columns) == list(cb.columns):
-        try:
-            ok = all(
-                np.allclose(ca[c], cb[c], rtol=0, atol=1e-9)
-                if pd.api.types.is_float_dtype(ca[c])
-                else (ca[c] == cb[c]).all()
-                for c in ca.columns
-            )
-        except Exception:
-            ok = False
-    return ok
 
 
 BASE = pd.DataFrame(
@@ -54,43 +35,43 @@ BASE = pd.DataFrame(
 
 
 def test_identical_and_reordered_pass():
-    m = _checker()
-    assert _verdict(m, BASE, BASE.copy())
+    m = checker()
+    assert m.verdict(BASE, BASE.copy())
     shuffled = BASE.iloc[[2, 0, 1]].reset_index(drop=True)
-    assert _verdict(m, BASE, shuffled)  # order-insensitive by design
+    assert m.verdict(BASE, shuffled)  # order-insensitive by design
     recol = BASE[["x", "k", "n"]]
-    assert _verdict(m, BASE, recol)  # column order canonicalized
+    assert m.verdict(BASE, recol)  # column order canonicalized
 
 
 def test_value_flip_caught():
-    m = _checker()
+    m = checker()
     bad = BASE.copy()
     bad.loc[1, "n"] = 99
-    assert not _verdict(m, BASE, bad)
+    assert not m.verdict(BASE, bad)
     badf = BASE.copy()
     badf.loc[0, "x"] = 1.5000001  # 1e-7 off: above atol, and
     # rtol is pinned to 0 so relative slack cannot mask it
-    assert not _verdict(m, BASE, badf)
+    assert not m.verdict(BASE, badf)
 
 
 def test_row_drop_and_add_caught():
-    m = _checker()
-    assert not _verdict(m, BASE, BASE.iloc[:2])
+    m = checker()
+    assert not m.verdict(BASE, BASE.iloc[:2])
     extra = pd.concat(
         [BASE, pd.DataFrame({"k": ["d"], "n": [4], "x": [4.5]})],
         ignore_index=True,
     )
-    assert not _verdict(m, BASE, extra)
+    assert not m.verdict(BASE, extra)
 
 
 def test_column_rename_caught():
-    m = _checker()
+    m = checker()
     renamed = BASE.rename(columns={"n": "count"})
-    assert not _verdict(m, BASE, renamed)
+    assert not m.verdict(BASE, renamed)
 
 
 def test_subrounding_jitter_tolerated():
-    m = _checker()
+    m = checker()
     jit = BASE.copy()
     jit["x"] = jit["x"] + 1e-12  # below the 1e-9 design tolerance
-    assert _verdict(m, BASE, jit)
+    assert m.verdict(BASE, jit)

@@ -14,7 +14,6 @@ from go_muse_spark.operators.compress import (
     compact_chunks,
     decode_chunks,
     encode_chunks,
-    encode_chunks_windowed,
     encode_tiers_fused,
 )
 from go_muse_spark.operators.gapfill import aligned_vectors, gap_fill
@@ -139,26 +138,63 @@ def test_fused_fill_encode_equals_separate(spark, rolled_gappy):
         assert sep == fused
 
 
-@pytest.mark.parametrize("mode", ["zero", "ffill", "linear"])
-def test_encode_chunks_fill_matches_relational_gap_fill(spark, rolled_gappy, mode):
+def observed_windows(rolled, chunk_size):
+    """Distinct (conv_id, chunk window) pairs that hold an observed
+    1m bucket; a conversation's chunks beyond these are all gap."""
+    lo = rolled.groupBy("conv_id").agg(F.min("bucket_ts").alias("lo"))
+    return (
+        rolled.join(lo, "conv_id")
+        .select(
+            "conv_id",
+            (
+                (F.unix_timestamp("bucket_ts") - F.unix_timestamp("lo"))
+                / (60 * chunk_size)
+            ).cast("long"),
+        )
+        .distinct()
+        .count()
+    )
+
+
+FILL_MODES = ("zero", "ffill", "linear")
+
+
+@pytest.mark.parametrize(
+    ("mode", "chunk_size"),
+    [pytest.param(m, 64, id=m) for m in FILL_MODES]
+    + [pytest.param(m, 16, id=f"{m}-16") for m in FILL_MODES],
+)
+def test_encode_chunks_fill_matches_relational_gap_fill(
+    spark, rolled_gappy, mode, chunk_size
+):
     """Absolute pin, independent of every other encoder: the decoded
     points of encode_chunks(fill=m) are the relational gap_fill(mode=m)
     rows — exact for zero and ffill, within 1e-9 for linear (the
-    relational lerp runs in seconds, np.interp in microseconds)."""
+    relational lerp runs in seconds, np.interp in microseconds) — at
+    both Arrow batch sizes. chunk_size=16 leaves ~90 all-gap chunks in
+    the gappy corpus (none at 64), so ffill and linear must carry
+    values across whole silent chunks."""
     filled = gap_fill(rolled_gappy, "1m", ("turn_cnt",), mode, align="conv")
     want = sorted(
         (r["conv_id"], r["bucket_ts"], float(r["turn_cnt"]))
         for r in filled.collect()
     )
-    got = points(
-        encode_chunks(rolled_gappy, "1m", "turn_cnt", chunk_size=64, fill=mode)
-    )
-    assert [g[:2] for g in got] == [w[:2] for w in want]
     assert len(want) > rolled_gappy.count()  # the corpus has gaps
-    if mode == "linear":
-        assert max(abs(g[2] - w[2]) for g, w in zip(got, want)) <= 1e-9
-    else:
-        assert got == want
+
+    def run():
+        chunks = encode_chunks(
+            rolled_gappy, "1m", "turn_cnt", chunk_size=chunk_size, fill=mode
+        )
+        return points(chunks), chunks.count()
+
+    for got, n_chunks in at_batch_sizes(spark, run):
+        assert [g[:2] for g in got] == [w[:2] for w in want]
+        if mode == "linear":
+            assert max(abs(g[2] - w[2]) for g, w in zip(got, want)) <= 1e-9
+        else:
+            assert got == want
+    if chunk_size == 16:
+        assert n_chunks > observed_windows(rolled_gappy, 16)
 
 
 def test_encode_tiers_fused_equals_per_tier(spark, tx_gappy):
@@ -176,53 +212,6 @@ def test_encode_tiers_fused_equals_per_tier(spark, tx_gappy):
 
     for sep, fused in at_batch_sizes(spark, run):
         assert sep == fused
-
-
-def _windowed_parity(spark, rolled, fill, chunk_size=16):
-    """Windowed encoder == per-conversation encoder, byte for byte, at
-    both Arrow batch sizes. chunk_size=16 leaves ~90 all-gap windows
-    in the gappy corpus (none at 64), which the ffill/linear carries
-    must cross."""
-    def run():
-        per_conv = rows(
-            encode_chunks(rolled, "1m", "turn_cnt", chunk_size=chunk_size, fill=fill)
-        )
-        windowed = rows(
-            encode_chunks_windowed(
-                rolled, "1m", "turn_cnt", chunk_size=chunk_size, fill=fill
-            )
-        )
-        return per_conv, windowed
-
-    for per_conv, windowed in at_batch_sizes(spark, run):
-        assert per_conv == windowed
-    return per_conv
-
-
-def test_encode_chunks_windowed_equals_per_conv(spark, rolled_gappy):
-    """Window-partitioned encoder output is byte-identical to the
-    per-conversation encoder with zero fill (incl. all-gap windows)."""
-    per_conv = _windowed_parity(spark, rolled_gappy, "zero")
-    observed = (
-        rolled_gappy.join(
-            rolled_gappy.groupBy("conv_id").agg(F.min("bucket_ts").alias("lo")),
-            "conv_id",
-        )
-        .select(
-            "conv_id",
-            ((F.unix_timestamp("bucket_ts") - F.unix_timestamp("lo")) / (60 * 16))
-            .cast("long")
-            .alias("k"),
-        )
-        .distinct()
-        .count()
-    )
-    assert len(per_conv) > observed  # all-gap windows are exercised
-
-
-def test_encode_chunks_windowed_ffill_carry(spark, rolled_gappy):
-    """Windowed ffill (cross-window carry-in) == per-conv ffill encode."""
-    _windowed_parity(spark, rolled_gappy, "ffill")
 
 
 def test_pre_partitioned_one_exchange_parity(spark, tx_gappy):
@@ -244,12 +233,6 @@ def test_pre_partitioned_one_exchange_parity(spark, tx_gappy):
 
     for default, one_exchange in at_batch_sizes(spark, run):
         assert default == one_exchange
-
-
-def test_encode_chunks_windowed_linear_carry(spark, rolled_gappy):
-    """Windowed linear fill (predecessor + successor anchors carried
-    across windows) == per-conv linear encode, byte for byte."""
-    _windowed_parity(spark, rolled_gappy, "linear")
 
 
 def test_compact_chunks_restores_chunk_size(spark, rolled_gappy):

@@ -152,23 +152,6 @@ def test_reserved_collision_raises(spark):
         sessionize(df, ["uid"])
 
 
-def test_bucketed_materialized_parity(spark):
-    rows = _randrows(4)
-    df = _mk(spark, rows)
-    plain = {
-        (r["uid"], r["ts"]): r["session_id"]
-        for r in sessionize(df, ["uid"], gap_s=1800).collect()
-    }
-    mat = {
-        (r["uid"], r["ts"]): r["session_id"]
-        for r in sessionize(
-            df, ["uid"], gap_s=1800, bucket_secs=7200,
-            materialize_input=True,
-        ).collect()
-    }
-    assert plain == mat
-
-
 # ----------------------------------------------------------- interval_union
 
 

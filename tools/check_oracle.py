@@ -7,13 +7,14 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from go_muse_spark.session import get_spark  # noqa: E402
@@ -34,13 +35,39 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-    spark = get_spark(cpus=8, app="oracle-check", driver_mem="8g")
+def verdict(a: pd.DataFrame, b: pd.DataFrame) -> bool:
+    """True when a and b hold the same rows in any order: equal row
+    counts and column names, and after canon() equal values, floats
+    within atol 1e-9 with rtol 0 (jitter below the rounding)."""
+    a, b = canon(a), canon(b)
+    if len(a) != len(b) or list(a.columns) != list(b.columns):
+        return False
+    if a.equals(b):
+        return True
+    try:
+        return bool(all(
+            np.allclose(a[c], b[c], rtol=0, atol=1e-9)
+            if pd.api.types.is_float_dtype(a[c])
+            else (a[c] == b[c]).all()
+            for c in a.columns
+        ))
+    except Exception:
+        return False
+
+
+def oracle_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per fixture table of sf_dir."""
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    only = set(sys.argv[2:])
+    spark = get_spark(app="oracle-check", driver_mem="8g")
+    con = oracle_con(sf_dir)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -54,29 +81,17 @@ def main() -> int:
             print(f"{name:26s} rows={len(spdf):7d}  (rows-only, no oracle)")
             continue
         opdf = con.sql(oracles[name]).df()
-        a, b = canon(spdf), canon(opdf)
-        ok_rows = len(a) == len(b)
-        ok_cols = list(a.columns) == list(b.columns)
-        ok_vals = ok_rows and ok_cols and a.equals(b)
-        if not ok_vals and ok_rows and ok_cols:
-            # tolerate float jitter below the rounding we applied
-            try:
-                ok_vals = all(
-                    np.allclose(a[c], b[c], rtol=0, atol=1e-9)
-                    if pd.api.types.is_float_dtype(a[c])
-                    else (a[c] == b[c]).all()
-                    for c in a.columns
-                )
-            except Exception:
-                ok_vals = False
+        ok_vals = verdict(spdf, opdf)
+        ok_cols = sorted(spdf.columns) == sorted(opdf.columns)
         status = "OK " if ok_vals else "FAIL"
-        print(f"{name:26s} rows={len(a):7d}/{len(b):7d} cols={'=' if ok_cols else 'DIFF'} -> {status}")
+        print(f"{name:26s} rows={len(spdf):7d}/{len(opdf):7d} cols={'=' if ok_cols else 'DIFF'} -> {status}")
         if not ok_vals:
             failures += 1
+            a, b = canon(spdf), canon(opdf)
             if not ok_cols:
                 print("  spark cols:", list(a.columns))
                 print("  duck  cols:", list(b.columns))
-            elif ok_rows:
+            elif len(a) == len(b):
                 neq = ~(a == b).all(axis=1)
                 print("  first diffs (spark | duck):")
                 print(pd.concat([a[neq].head(3), b[neq].head(3)], axis=1))

@@ -101,14 +101,14 @@ def engine_run(spark, ref, df) -> float:
 
 
 def main() -> None:
+    from go_muse_spark.session import DEFAULT_CPUS, get_bench_spark
+
     scale = int(sys.argv[1]) if len(sys.argv) > 1 else 40
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 32
+    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else DEFAULT_CPUS
 
     ref, y = workload(N_GRAPHS, N_HOSTS)
     base_n = len(y)
     k_wall = kernel_only(ref, y)
-
-    from go_muse_spark.session import get_bench_spark
 
     spark = get_bench_spark(cpus=cpus, app="muse-bench")
     # warm Python workers
