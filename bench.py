@@ -18,7 +18,9 @@ Query timings run each __spark_entry__ query with a noop sink (full
 compute, no collect).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: every core this process may run on).
+The driver heap is get_spark's host-sized default (SPARK_DRIVER_MEM
+overrides).
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ from go_muse_spark.operators.search import (  # noqa: E402
     muse_search_rollup,
     series_bounds,
 )
-from go_muse_spark.session import DEFAULT_CPUS, get_bench_spark  # noqa: E402
+from go_muse_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 from go_muse_spark.sources.transcripts import write_transcripts  # noqa: E402
 
 BENCH_QUERIES = [
@@ -259,7 +261,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = DEFAULT_CPUS
     frac = sf_frac(sf_dir)
-    spark = get_bench_spark(cpus=cpus, app="go-muse-spark-bench")
+    spark = get_spark(cpus=cpus, app="go-muse-spark-bench")
 
     # ---------------- headline: turns/sec across 3 tiers + compression
     tx_path = corpus_path(frac)

@@ -17,6 +17,19 @@ Layers (SURVEY.md §7):
   Ops           incremental MERGE, per-partition checkpoints, resume
 """
 
+import sys as _sys
+
 from go_muse_spark import kernels, labels  # noqa: F401
 
 __version__ = "0.1.0"
+
+# Every engine UDF imports this package when a Python worker unpickles
+# it, so this runs once per worker process and never in the driver (a
+# worker has pyspark loaded and a TaskContext set).
+if "pyspark" in _sys.modules:
+    from pyspark import TaskContext as _TaskContext
+
+    if _TaskContext.get() is not None:
+        from go_muse_spark.session import install_zip_stat_check
+
+        install_zip_stat_check()

@@ -11,7 +11,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "get_bench_spark", "ship_package", "DEFAULT_CPUS"]
+__all__ = [
+    "get_spark",
+    "ship_package",
+    "install_zip_stat_check",
+    "DEFAULT_CPUS",
+]
 
 # SPARK_GRAFT_CPUS overrides; otherwise every core this process may run on
 DEFAULT_CPUS = int(
@@ -59,6 +64,67 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED_CONTEXTS.add(id(sc))
 
 
+def install_zip_stat_check() -> None:
+    """Re-read a zip archive on ``importlib.invalidate_caches()`` only
+    when the archive changed on disk.
+
+    Spark's Python worker calls ``importlib.invalidate_caches()`` before
+    every task (``pyspark.worker_util.setup_spark_files``). On CPython
+    3.11 and 3.12, ``zipimporter.invalidate_caches`` re-reads the
+    archive's whole central directory each time. An engine worker holds
+    about 20 zip importers on sys.path (``pyspark.zip``, the Spark core
+    jar, py4j and the shipped package zip, several per archive), so each
+    task paid 0.14-0.26 s re-reading archives that had not changed.
+
+    The replacement stats the archive and keeps the directory it last
+    read for that path while ``(st_ino, st_size, st_mtime_ns)`` is
+    unchanged; a replaced, rewritten or new archive is still re-read, so
+    ``invalidate_caches`` keeps its contract. An unchanged archive costs
+    one ``stat``. CPython 3.13 made the invalidation lazy (it only drops
+    the cached directory), so this does nothing there; delete it once
+    the engine's floor is 3.13. Idempotent.
+    """
+    import sys
+    import zipimport
+
+    if sys.version_info >= (3, 13):
+        return
+    cls = zipimport.zipimporter
+    if getattr(cls.invalidate_caches, "stat_checked", False):
+        return
+    reread = cls.invalidate_caches
+    # archive path -> (stat key at the last read, directory read)
+    last_read: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            last_read.pop(self.archive, None)
+            reread(self)
+            return
+        key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        seen = last_read.get(self.archive)
+        if seen is not None and seen[0] == key:
+            self._files = seen[1]
+            zipimport._zip_directory_cache[self.archive] = seen[1]
+            return
+        # stat before the read: a write racing the read leaves a stale
+        # key, which forces one more read next time, never a stale dir
+        reread(self)
+        last_read[self.archive] = (key, self._files)
+
+    invalidate_caches.stat_checked = True
+    cls.invalidate_caches = invalidate_caches
+
+
+def _host_driver_mem() -> str:
+    """A quarter of this host's memory, between 1g and 8g."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{max(1, min(8, kb // (4 * 2**20)))}g"
+
+
 def get_spark(
     cpus: int | None = None,
     app: str = "go-muse-spark",
@@ -100,14 +166,10 @@ def get_spark(
         # caps per-task input)
         .config("spark.sql.files.maxPartitionBytes", "16m")
     )
-    # sizing knobs are env/arg-only: library defaults stay conservative so
-    # get_spark works on small hosts (an unconditional 56g heap fails JVM
-    # startup there; an unconditional tmpfs spill dir risks ENOSPC). The
-    # bench/tool entry points opt into the sandbox sizing via
-    # get_bench_spark / SPARK_DRIVER_MEM / SPARK_GRAFT_LOCAL_DIR.
-    mem = driver_mem or os.environ.get("SPARK_DRIVER_MEM")
-    if mem:
-        builder = builder.config("spark.driver.memory", mem)
+    # the driver heap is shared by every local[N] task thread; by default
+    # it is sized to the host (a quarter of its memory, at most 8g)
+    mem = driver_mem or os.environ.get("SPARK_DRIVER_MEM") or _host_driver_mem()
+    builder = builder.config("spark.driver.memory", mem)
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
@@ -117,35 +179,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     ship_package(spark)
     return spark
-
-
-def get_bench_spark(
-    cpus: int | None = None,
-    app: str = "go-muse-spark-bench",
-    shuffle_partitions: int | None = None,
-    extra: dict[str, str] | None = None,
-) -> SparkSession:
-    """get_spark + the bench-sandbox sizing (32-vCPU/128 GiB VM).
-
-    One shared heap for all local[N] task threads: size it so 32
-    concurrent shuffle/sort tasks never contend on young-gen space — an
-    undersized heap showed up as a 3-19x executorRunTime inflation at 32
-    threads (allocation stalls, not reported GC time). Shuffle spill goes
-    to tmpfs to keep 32 concurrent shuffle writers off the single virtio
-    disk. On a real cluster both are ordinary per-executor sizing /
-    resource-manager-provided local disks — which is why they live here,
-    not in the library defaults.
-    """
-    cfg = {
-        "spark.local.dir": os.environ.get(
-            "SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"
-        )
-    }
-    cfg.update(extra or {})
-    return get_spark(
-        cpus=cpus,
-        app=app,
-        shuffle_partitions=shuffle_partitions,
-        driver_mem=os.environ.get("SPARK_DRIVER_MEM", "56g"),
-        extra=cfg,
-    )

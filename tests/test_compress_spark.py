@@ -6,6 +6,8 @@ ffill and linear fill encode to different bytes and conversations
 cross Arrow batch boundaries inside the encoders.
 """
 
+from datetime import datetime, timedelta
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -195,6 +197,52 @@ def test_encode_chunks_fill_matches_relational_gap_fill(
             assert got == want
     if chunk_size == 16:
         assert n_chunks > observed_windows(rolled_gappy, 16)
+
+
+# hand-built 1h rollup: conversation "a" is silent for more than two
+# whole chunks between its turns at the contract chunk sizes 256 and 512
+SILENT_HOURS = {"a": (0, 300, 1100), "b": (10, 12)}
+
+
+@pytest.mark.parametrize("chunk_size", [256, 512])
+def test_all_gap_chunks_at_contract_chunk_sizes(spark, chunk_size):
+    """At the 1h contract queries' chunk sizes, encode_chunks(fill=
+    "zero") emits the all-gap chunks of long silences: the decoded
+    points are the relational gap_fill(mode="zero") rows, and there are
+    more chunks than chunk windows holding a turn."""
+    t0 = datetime(2024, 1, 1)
+    rolled = spark.createDataFrame(
+        [
+            (conv, t0 + timedelta(hours=h), i + 1)
+            for conv, hours in SILENT_HOURS.items()
+            for i, h in enumerate(hours)
+        ],
+        "conv_id string, bucket_ts timestamp, turn_cnt long",
+    )
+    want = sorted(
+        (r["conv_id"], r["bucket_ts"], float(r["turn_cnt"]))
+        for r in gap_fill(
+            rolled, "1h", ("turn_cnt",), "zero", align="conv"
+        ).collect()
+    )
+    n_chunks = sum(
+        -(-(h[-1] - h[0] + 1) // chunk_size) for h in SILENT_HOURS.values()
+    )
+    observed = sum(
+        len({(x - h[0]) // chunk_size for x in h})
+        for h in SILENT_HOURS.values()
+    )
+    assert n_chunks > observed
+
+    def run():
+        chunks = encode_chunks(
+            rolled, "1h", "turn_cnt", chunk_size=chunk_size, fill="zero"
+        )
+        return points(chunks), chunks.count()
+
+    for got, count in at_batch_sizes(spark, run):
+        assert got == want
+        assert count == n_chunks
 
 
 def test_encode_tiers_fused_equals_per_tier(spark, tx_gappy):

@@ -101,7 +101,7 @@ def engine_run(spark, ref, df) -> float:
 
 
 def main() -> None:
-    from go_muse_spark.session import DEFAULT_CPUS, get_bench_spark
+    from go_muse_spark.session import DEFAULT_CPUS, get_spark
 
     scale = int(sys.argv[1]) if len(sys.argv) > 1 else 40
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else DEFAULT_CPUS
@@ -110,7 +110,7 @@ def main() -> None:
     base_n = len(y)
     k_wall = kernel_only(ref, y)
 
-    spark = get_bench_spark(cpus=cpus, app="muse-bench")
+    spark = get_spark(cpus=cpus, app="muse-bench")
     # warm Python workers
     spark.range(cpus * 4).repartition(cpus).mapInPandas(
         lambda it: it, "id long"

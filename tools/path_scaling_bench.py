@@ -54,6 +54,12 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _save(df, path: str) -> None:
+    """Write a cached input as one file per task slot of the session."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    df.repartition(n).write.mode("overwrite").parquet(path)
+
+
 # ---------------------------------------------------------------- inputs
 # All three inputs are pure expressions of the row index — deterministic
 # across runs and parallelism levels, no RNG, no external data.
@@ -139,7 +145,7 @@ def docs_path(spark) -> str:
                 " ",
             ).alias("text"),
         )
-        df.repartition(32).write.mode("overwrite").parquet(path)
+        _save(df, path)
     return path
 
 
@@ -162,7 +168,7 @@ def emb_path(spark) -> str:
                 ).cast("float"),
             ).alias("embedding"),
         )
-        df.repartition(32).write.mode("overwrite").parquet(path)
+        _save(df, path)
     return path
 
 
@@ -263,7 +269,7 @@ def mp_path(spark) -> str:
             ).alias("bucket_ts"),
             F.pmod(F.hash(F.col("id")), F.lit(997)).cast("double").alias("v"),
         )
-        df.repartition(32).write.mode("overwrite").parquet(path)
+        _save(df, path)
     return path
 
 
@@ -299,7 +305,7 @@ def dtw_path(spark) -> str:
             (F.col("id") % DTW_LEN).alias("i"),
             F.pmod(F.hash(F.col("id")), F.lit(997)).cast("long").alias("v"),
         )
-        df.repartition(32).write.mode("overwrite").parquet(path)
+        _save(df, path)
     return path
 
 
@@ -344,7 +350,7 @@ def cov_path(spark) -> str:
             ).alias("bucket_ts"),
             F.pmod(F.hash(F.col("id")), F.lit(97)).alias("v"),
         )
-        df.repartition(32).write.mode("overwrite").parquet(path)
+        _save(df, path)
     return path
 
 
@@ -371,7 +377,7 @@ PATHS = {
 
 
 def child(path: str, cpus: int) -> None:
-    from go_muse_spark.session import get_bench_spark
+    from go_muse_spark.session import get_spark
 
     # SPARK_GRAFT_PS_SHUFFLE pins one fixed task grid on BOTH legs. The
     # N-vs-4N claim compares slot counts, so the task decomposition must
@@ -390,7 +396,7 @@ def child(path: str, cpus: int) -> None:
         {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
         if grid else None
     )
-    spark = get_bench_spark(
+    spark = get_spark(
         cpus=cpus,
         app=f"path-scaling-{path}",
         shuffle_partitions=int(grid) if grid else None,
