@@ -8,18 +8,25 @@ sign post-filters and a global top-K by |score|.
 
 Spark shape (SURVEY.md §3, §4):
   * the prepared reference spectrum (numpy complex128) is computed once on
-    the driver and broadcast — the reference's "precompute ref FFT once"
-    optimization (muse.go:39) done the cluster way;
+    the driver and carried in the scoring task's closure — the
+    reference's "precompute ref FFT once" optimization (muse.go:39); the
+    pickled command reaches every task anyway, so no broadcast file is
+    left behind per search;
   * scoring is a pandas UDF over a hash exchange on the series key, one
     task per core: one 2-D rfft per flush scores a whole matrix of
     candidates — a vectorization the reference lacks;
-  * per-group best-of is a two-level reduce: local argmax inside each
-    task, then a tiny relational min_by merge — mirroring the reference's
+  * per-series search (no group_by, group.go:84-89) needs no merge: each
+    series is scored once, in one task, and is its own group. The task
+    applies maxLag/threshold/sign and keeps a running top-K in top_k's
+    total order, so the plan is ONE exchange, ONE scoring stage and a
+    TakeOrderedAndProject over at most tasks x K rows;
+  * grouped search is a two-level reduce: local argmax inside each task,
+    then a tiny relational min_by merge — mirroring the reference's
     per-group max -> global heap (muse.go:86-90). Each series is its own
     hash key, so a hot group (millions of members) still spreads across
     every task;
-  * maxLag/threshold/sign are a post-filter, NOT a search window
-    (results.go:46-52 — preserved deliberately), and top-K is
+  * maxLag/threshold/sign are a post-filter on the best lag, NOT a search
+    window (results.go:46-52 — preserved deliberately), and top-K is
     orderBy(|score| desc).limit(K), which Spark executes as
     TakeOrderedAndProject: a bounded per-partition heap + merge, exactly
     the reference's Results heap (results.go:62-68) distributed.
@@ -33,6 +40,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from go_muse_spark import kernels as K
 from go_muse_spark.labels import label_id_cols
@@ -55,6 +70,18 @@ __all__ = [
 ]
 
 SIGN_ANY, SIGN_POS, SIGN_NEG = "any", "pos", "neg"
+
+# scoring-task output schemas, as types: a DDL string would be parsed
+# by the JVM on every search
+_SCORED = StructType(
+    [
+        StructField("group_key", StringType()),
+        StructField("series_key", StringType()),
+        StructField("lag", LongType()),
+        StructField("score", DoubleType()),
+    ]
+)
+_SCORED_MULTI = StructType([StructField("ref_key", StringType()), *_SCORED.fields])
 
 
 @dataclass
@@ -125,12 +152,11 @@ def score_series(
 
     Returns (group_key, series_key, lag, score) — one row per group.
     """
-    spark = df.sparkSession
+    # the spectrum rides in the task closure (see _score_tasks)
     spec = K.prepare_ref(np.asarray(ref_values, dtype=np.float64))
-    bc = spark.sparkContext.broadcast((spec.x_spec, spec.n, spec.ref_n))
     signed = mode == "signed"
 
-    # mirror score_rollup_multi: a prebuilt Column (e.g. label_id_map
+    # mirror _score_tasks: a prebuilt Column (e.g. label_id_map
     # over map-typed dims) is the group key verbatim; Column.__bool__
     # raises, so the isinstance test must come first
     if isinstance(group_by, Column):
@@ -139,8 +165,6 @@ def score_series(
         keyed = df.withColumn("group_key", label_id_cols(group_by))
     else:
         keyed = df.withColumn("group_key", F.col(series_key))
-
-    out_schema = "group_key string, series_key string, lag long, score double"
 
     # Every input ROW is a complete series and the per-group reduce
     # (max by |score|) is associative+commutative, so scoring needs NO
@@ -152,13 +176,11 @@ def score_series(
     # rollup path, where each series is its own exchange key.)
 
     def score_batches(batches):
-        x_spec, n, ref_n = bc.value
-        local_spec = K.RefSpectrum(x_spec, n, ref_n)
         for pdf in batches:
             if not len(pdf):
                 continue
             y = np.stack(pdf["__vals"].to_numpy())
-            lags, scores = K.batch_xcorr(local_spec, y)
+            lags, scores = K.batch_xcorr(spec, y)
             scores = (
                 K.clamp_signed(scores) if signed else K.clamp_abs(scores)
             )
@@ -178,7 +200,7 @@ def score_series(
         "group_key",
         F.col(series_key).alias("__sk"),
         F.col(values_col).alias("__vals"),
-    ).mapInPandas(score_batches, out_schema)
+    ).mapInPandas(score_batches, _SCORED)
 
     return _merge_best(local_best, "group_key")
 
@@ -222,22 +244,17 @@ def score_rollup(
     group_by names label columns; None => per-series (group.go:84-89).
 
     Implementation: the single-reference case of score_rollup_multi
-    (one entry, ref_key dropped) — ONE copy of the tie-break-sensitive
+    (one entry, no ref_key column) — ONE copy of the tie-break-sensitive
     scoring machinery exists, so a determinism fix can never diverge
     the two paths (their bit-parity is test-asserted).
     """
-    out = score_rollup_multi(
-        rolled,
-        {"": np.asarray(ref_values, dtype=np.float64)},
-        tier_secs,
-        group_by,
-        mode,
-        series_cols,
-        value_col,
-        bucket_col,
-        bounds=bounds,
+    scored = _score_tasks(
+        rolled, {"": ref_values}, tier_secs, group_by, mode, series_cols,
+        value_col, bucket_col, bounds, ref_key=False,
     )
-    return out.drop("ref_key")
+    if _per_series(group_by):
+        return scored
+    return _merge_best(scored, "group_key")
 
 def muse_search_rollup(
     rolled: DataFrame,
@@ -249,13 +266,24 @@ def muse_search_rollup(
     value_col: str = "turn_cnt",
     bounds=None,
 ) -> DataFrame:
-    """Batch.Run equivalent over long-form rollup rows (the scale path)."""
+    """Batch.Run equivalent over long-form rollup rows (the scale path).
+
+    Per-series search filters and keeps its top-K inside each scoring
+    task, so the plan is one exchange, one scoring stage and top_k over
+    at most tasks x top_n rows; grouped search merges groups across
+    tasks first, then filters."""
     p = params or SearchParams()
-    scored = score_rollup(
-        rolled, ref_values, tier_secs, group_by, p.mode,
-        series_cols, value_col, bounds=bounds,
-    )
-    passed = apply_result_filters(scored, p.max_lag, p.threshold, p.sign)
+    if _per_series(group_by):
+        passed = _score_tasks(
+            rolled, {"": ref_values}, tier_secs, None, p.mode, series_cols,
+            value_col, "bucket_ts", bounds, keep=p, ref_key=False,
+        )
+    else:
+        scored = score_rollup(
+            rolled, ref_values, tier_secs, group_by, p.mode,
+            series_cols, value_col, bounds=bounds,
+        )
+        passed = apply_result_filters(scored, p.max_lag, p.threshold, p.sign)
     return top_k(passed, p.top_n)
 
 
@@ -283,9 +311,11 @@ def top_k(scored: DataFrame, k: int) -> DataFrame:
     """Global top-K by |score| desc (Results heap, results.go:55-87).
     Spark executes orderBy+limit as TakeOrderedAndProject — a bounded
     per-partition heap + driver merge, the distributed twin of the
-    reference's size-K min-heap. group_key tie-break for determinism."""
+    reference's size-K min-heap. group_key tie-break for determinism.
+    Columns are taken as scored[...], one py4j round trip each, not
+    F.col, which costs over ten with its call-site capture."""
     return scored.orderBy(
-        F.abs(F.col("score")).desc(), F.col("group_key")
+        F.abs(scored["score"]).desc(), scored["group_key"]
     ).limit(int(k))
 
 
@@ -361,6 +391,195 @@ def adaptive_flush_rows(nfft: int) -> int:
     return min(256, max(8, (1 << 24) // (max(nfft, 1) * 64)))
 
 
+def _per_series(group_by) -> bool:
+    """group_by None/[] => every series its own group (group.go:84-89).
+    Column.__bool__ raises, so the isinstance test must come first."""
+    return not isinstance(group_by, Column) and not group_by
+
+
+def _q(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _keep_top(held, g, s, lags, scores, p: SearchParams):
+    """Fold one flush into a reference's running top-K: Results.passed
+    (apply_result_filters' predicates), then the first p.top_n rows in
+    top_k's total order, |score| descending, then group_key. `held` is
+    the previous (g, s, lags, scores) or None."""
+    ok = np.ones(scores.size, dtype=bool)
+    if p.max_lag is not None:
+        ok &= np.abs(lags) <= int(p.max_lag)
+    if p.threshold:
+        ok &= np.abs(scores) >= float(p.threshold)
+    if p.sign == SIGN_POS:
+        ok &= scores >= 0
+    elif p.sign == SIGN_NEG:
+        ok &= scores < 0
+    cand = (g[ok], s[ok], lags[ok], scores[ok])
+    if held is not None:
+        cand = tuple(np.concatenate(pair) for pair in zip(held, cand))
+    order = np.lexsort((cand[0], -np.abs(cand[3])))[: int(p.top_n)]
+    return tuple(c[order] for c in cand)
+
+
+def _score_tasks(
+    rolled: DataFrame,
+    refs: "dict[str, np.ndarray]",
+    tier_secs: int,
+    group_by,
+    mode: str,
+    series_cols: tuple[str, ...],
+    value_col: str,
+    bucket_col: str,
+    bounds,
+    keep: SearchParams | None = None,
+    ref_key: bool = True,
+) -> DataFrame:
+    """The scoring stage every rollup search shares: the rows inside
+    [lo, hi] go through ONE hash exchange on the series key into one
+    task per core, sorted by (series, bucket); each task scatters whole
+    series into a dense zero-initialized flush matrix and scores it with
+    one batched rfft per flush.
+
+    Each task emits, per reference and flush, the best series of every
+    group present in the flush (grouped; _merge_best finishes across
+    tasks) or every series (per-series: a series is scored once, in one
+    task, and is its own group, so its row is already final).
+
+    keep (per-series only): the task applies keep's result filters and
+    emits, per reference, only its running top keep.top_n rows in
+    top_k's total order. A global top-K row is then always in its task's
+    top-K, and task memory stays O(flush + refs x K).
+
+    ref_key=False leaves the ref_key column out (single-reference
+    callers)."""
+    spark = rolled.sparkSession
+    if not refs:
+        raise ValueError("need at least one reference")
+    if bounds is None:
+        lo, hi, n = series_bounds(rolled, tier_secs, bucket_col)
+    else:
+        lo, hi, n = bounds
+    out_schema = _SCORED_MULTI if ref_key else _SCORED
+    if n == 0:
+        return spark.createDataFrame([], out_schema)
+    names, specs = [], []
+    for name, vals in refs.items():
+        arr = np.asarray(vals, dtype=np.float64)
+        if arr.size != n:
+            raise ValueError(
+                f"reference {name!r} length {arr.size} != aligned "
+                f"series length {n}"
+            )
+        names.append(name)
+        specs.append(K.prepare_ref(arr))
+    # the spectra ride in the task closure: the pickled command reaches
+    # every task anyway, and a per-call sc.broadcast would leave one file
+    # in the SparkContext temp dir per search until the session stops
+    nfft, rn = specs[0].n, specs[0].ref_n
+    xs = np.stack([sp.x_spec for sp in specs])
+    signed = mode == "signed"
+    per_series = _per_series(group_by)
+    if keep is not None and not per_series:
+        raise ValueError("in-task top-K needs per-series search")
+
+    # SQL text, not a chain of F.* Columns: each Column call is a py4j
+    # round trip and plan building dominated the short per-series op.
+    # Bounds are micros literals so they convert exactly as F.lit(lo)
+    # does; hi is capped at the last second of the n-bucket span, so no
+    # row can scatter outside the matrix (a row before lo would wrap to
+    # the series' end, one after it would raise IndexError).
+    tier_secs = int(tier_secs)
+    lo_us = TimestampType().toInternal(lo)
+    lo_s = lo_us // 1_000_000
+    hi_us = min(
+        TimestampType().toInternal(hi), (lo_s + n * tier_secs) * 1_000_000 - 1
+    )
+    b = _q(bucket_col)
+    proj = [
+        f"concat_ws('|', {', '.join(map(_q, series_cols))}) AS __sk",
+        f"CAST((unix_timestamp({b}) - {lo_s}) / {tier_secs} AS BIGINT) AS __idx",
+        f"CAST({_q(value_col)} AS DOUBLE) AS __val",
+    ]
+    inside = rolled.where(
+        f"{b} >= timestamp_micros({lo_us}) AND {b} <= timestamp_micros({hi_us})"
+    )
+    # group_by: a list of first-class label columns => canonical
+    # "k:v,..." key via label_id_cols; a prebuilt Column (e.g.
+    # labels.label_id_map over a map<string,string> dims column for the
+    # reference's dynamic label subsets, group.go:76-104) is used as the
+    # group key verbatim.
+    if per_series:
+        keyed = inside.selectExpr(*proj)
+    else:
+        gk = group_by if isinstance(group_by, Column) else label_id_cols(group_by)
+        keyed = inside.select(gk.alias("group_key"), *map(F.expr, proj))
+    # One scoring task per core: each series is its own hash key, so more
+    # partitions never split a hot group or a long series, they only add
+    # per-task Python overhead (a task's Python memory is O(flush + series)).
+    n_part = spark.sparkContext.defaultParallelism
+
+    def frame(r, g, s, lags, scores):
+        cols = {"ref_key": names[r]} if ref_key else {}
+        cols.update(group_key=g, series_key=s, lag=lags, score=scores)
+        return pd.DataFrame(cols)
+
+    def score_partition(batches):
+        rows = adaptive_flush_rows(nfft)
+        y = np.zeros((rows, rn), dtype=np.float64)
+        gks: list = []
+        sks: list = []
+        held = [None] * len(names)
+
+        def flush():
+            m = len(sks)
+            y_spec, ok = K.batch_y_spec(y[:m], nfft, rn)
+            s = np.array(sks)
+            g = s if per_series else np.array(gks)
+            y[:m] = 0.0
+            gks.clear()
+            sks.clear()
+            outs = []
+            for r, x in enumerate(xs):
+                lags, sc = K.xcorr_from_spec(x, y_spec, ok, nfft)
+                sc = K.clamp_signed(sc) if signed else K.clamp_abs(sc)
+                if keep is not None:
+                    held[r] = _keep_top(held[r], g, s, lags, sc, keep)
+                    continue
+                pick = slice(None) if per_series else _best_per_group(g, s, sc)
+                outs.append(frame(r, g[pick], s[pick], lags[pick], sc[pick]))
+            return outs
+
+        for pdf in complete_series_runs(batches, "__sk"):
+            run_sk = pdf["__sk"].to_numpy()
+            run_gk = run_sk if per_series else pdf["group_key"].to_numpy()
+            idxs = pdf["__idx"].to_numpy(dtype=np.int64)
+            vals = pdf["__val"].to_numpy(dtype=np.float64)
+            change = np.flatnonzero(run_sk[1:] != run_sk[:-1]) + 1
+            starts = np.concatenate(([0], change))
+            ends = np.concatenate((change, [len(run_sk)]))
+            for s_, e_ in zip(starts, ends):
+                y[len(sks), idxs[s_:e_]] = vals[s_:e_]
+                gks.append(run_gk[s_])
+                sks.append(run_sk[s_])
+                if len(sks) == rows:
+                    outs = flush()
+                    if outs:
+                        yield pd.concat(outs, ignore_index=True)
+        outs = flush() if sks else []
+        if keep is not None:
+            outs = [frame(r, *h) for r, h in enumerate(held) if h is not None]
+        if outs:
+            yield pd.concat(outs, ignore_index=True)
+
+    # keyed[...] column refs, not names: see top_k
+    spread = keyed.repartition(n_part, keyed["__sk"])
+    return spread.sortWithinPartitions(
+        spread["__sk"], spread["__idx"]
+    ).mapInPandas(score_partition, out_schema)
+
+
 def score_rollup_multi(
     rolled: DataFrame,
     refs: "dict[str, np.ndarray]",
@@ -378,128 +597,29 @@ def score_rollup_multi(
     times). Same plan as score_rollup (one exchange on the series key,
     sparse scatter, batched rfft) with one change: each flush computes
     the candidates' spectrum ONCE (kernels.batch_y_spec) and finishes k
-    cheap multiply+irfft passes against the broadcast reference spectra
-    — corpus I/O, shuffle, z-norm and the forward FFT are all amortized
-    across the whole pattern set.
+    cheap multiply+irfft passes against the reference spectra carried
+    in the task — corpus I/O, shuffle, z-norm and the forward FFT are
+    all amortized across the whole pattern set.
 
     refs: {ref_key: values} — every reference must match the aligned
     series length; zero-variance references raise (muse.go:33-42).
+    Rows outside the aligned [lo, hi] range are not scored.
+
+    Per-series search (group_by None/[]) returns the scoring stage's
+    rows directly: each series is scored once, in one task, and is its
+    own group, so there is no merge. Grouped search finishes with the
+    min_by merge (_merge_best) across tasks.
 
     Returns (ref_key, group_key, series_key, lag, score): per ref, the
     best candidate per group.
     """
-    spark = rolled.sparkSession
-    if not refs:
-        raise ValueError("need at least one reference")
-    if bounds is None:
-        lo, hi, n = series_bounds(rolled, tier_secs, bucket_col)
-    else:
-        lo, hi, n = bounds
-    out_schema = (
-        "ref_key string, group_key string, series_key string, "
-        "lag long, score double"
+    scored = _score_tasks(
+        rolled, refs, tier_secs, group_by, mode, series_cols, value_col,
+        bucket_col, bounds,
     )
-    if n == 0:
-        return spark.createDataFrame([], out_schema)
-    names, specs = [], []
-    for name, vals in refs.items():
-        arr = np.asarray(vals, dtype=np.float64)
-        if arr.size != n:
-            raise ValueError(
-                f"reference {name!r} length {arr.size} != aligned "
-                f"series length {n}"
-            )
-        names.append(name)
-        specs.append(K.prepare_ref(arr))
-    fft_n, ref_n = specs[0].n, specs[0].ref_n
-    x_specs = np.stack([sp.x_spec for sp in specs])
-    bc = spark.sparkContext.broadcast((names, x_specs, fft_n, ref_n))
-    signed = mode == "signed"
-
-    sk = F.concat_ws("|", *[F.col(c) for c in series_cols]).alias("__sk")
-    idx = (
-        (F.unix_timestamp(F.col(bucket_col)) - F.unix_timestamp(F.lit(lo)))
-        / F.lit(int(tier_secs))
-    ).cast("long").alias("__idx")
-    val = F.col(value_col).cast("double").alias("__val")
-    # group_by: None/[] => per-series (group.go:84-89); a list of
-    # first-class label columns => canonical "k:v,..." key via
-    # label_id_cols; a prebuilt Column (e.g. labels.label_id_map over a
-    # map<string,string> dims column for the reference's dynamic label
-    # subsets, group.go:76-104) is used as the group key verbatim.
-    per_series = not isinstance(group_by, Column) and not group_by
-    if per_series:
-        keyed = rolled.select(sk, idx, val)
-    else:
-        gk = (
-            group_by
-            if isinstance(group_by, Column)
-            else label_id_cols(group_by)
-        )
-        keyed = rolled.select(gk.alias("group_key"), sk, idx, val)
-    # One scoring task per core: each series is its own hash key, so more
-    # partitions never split a hot group or a long series, they only add
-    # per-task Python overhead (a task's Python memory is O(flush + series)).
-    n_part = spark.sparkContext.defaultParallelism
-
-    def score_partition(batches):
-        ref_names, xs, nfft, rn = bc.value
-        batch_rows_eff = adaptive_flush_rows(nfft)
-        y = np.zeros((batch_rows_eff, rn), dtype=np.float64)
-        meta: list = []
-
-        def flush():
-            if not meta:
-                return None
-            y_spec, ok = K.batch_y_spec(y[: len(meta)], nfft, rn)
-            g = np.array([m[0] for m in meta])
-            s = np.array([m[1] for m in meta])
-            outs = []
-            for r, name in enumerate(ref_names):
-                lags, scores = K.xcorr_from_spec(xs[r], y_spec, ok, nfft)
-                sc = K.clamp_signed(scores) if signed else K.clamp_abs(scores)
-                pick = _best_per_group(g, s, sc)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "ref_key": name,
-                            "group_key": g[pick],
-                            "series_key": s[pick],
-                            "lag": lags[pick],
-                            "score": sc[pick],
-                        }
-                    )
-                )
-            y[: len(meta)] = 0.0
-            meta.clear()
-            return pd.concat(outs, ignore_index=True)
-
-        for pdf in complete_series_runs(batches, "__sk"):
-            sks = pdf["__sk"].to_numpy()
-            gks = sks if per_series else pdf["group_key"].to_numpy()
-            idxs = pdf["__idx"].to_numpy(dtype=np.int64)
-            vals = pdf["__val"].to_numpy(dtype=np.float64)
-            change = np.flatnonzero(sks[1:] != sks[:-1]) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(sks)]))
-            for s_, e_ in zip(starts, ends):
-                row = len(meta)
-                y[row, idxs[s_:e_]] = vals[s_:e_]
-                meta.append((gks[s_], sks[s_]))
-                if len(meta) == batch_rows_eff:
-                    out = flush()
-                    if out is not None:
-                        yield out
-        out = flush()
-        if out is not None:
-            yield out
-
-    local_best = (
-        keyed.repartition(n_part, "__sk")
-        .sortWithinPartitions("__sk", "__idx")
-        .mapInPandas(score_partition, out_schema)
-    )
-    return _merge_best(local_best, "ref_key", "group_key")
+    if _per_series(group_by):
+        return scored
+    return _merge_best(scored, "ref_key", "group_key")
 
 
 def muse_search_multi(
@@ -514,15 +634,23 @@ def muse_search_multi(
 ) -> DataFrame:
     """k-pattern Batch.Run: one corpus scan, per-reference filters and
     top-K (Results semantics applied independently per ref_key — the
-    same rank/tie rules as top_k, partitioned by reference)."""
+    same rank/tie rules as top_k, partitioned by reference). Per-series
+    search keeps each reference's top-K inside the scoring tasks, as
+    muse_search_rollup does."""
     from pyspark.sql import Window
 
     p = params or SearchParams()
-    scored = score_rollup_multi(
-        rolled, refs, tier_secs, group_by, p.mode,
-        series_cols, value_col, bounds=bounds,
-    )
-    passed = apply_result_filters(scored, p.max_lag, p.threshold, p.sign)
+    if _per_series(group_by):
+        passed = _score_tasks(
+            rolled, refs, tier_secs, None, p.mode, series_cols, value_col,
+            "bucket_ts", bounds, keep=p,
+        )
+    else:
+        scored = score_rollup_multi(
+            rolled, refs, tier_secs, group_by, p.mode,
+            series_cols, value_col, bounds=bounds,
+        )
+        passed = apply_result_filters(scored, p.max_lag, p.threshold, p.sign)
     w = Window.partitionBy("ref_key").orderBy(
         F.abs(F.col("score")).desc(), F.col("group_key")
     )

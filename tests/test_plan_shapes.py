@@ -112,3 +112,52 @@ def test_snapshot_diff_two_exchanges_full_outer(spark):
     out = snapshot_diff(old, new, ("k", "b"), ("v",))
     assert _count_op(out, "SortMergeJoin") == 1
     assert _count_op(out, "Exchange") == 2  # one per side, key-aligned
+
+
+def _muse_rollup(spark):
+    import numpy as np
+
+    t0 = dt.datetime(2025, 1, 1)
+    rows = [
+        (f"c{i}", f"g{i % 2}", t0 + dt.timedelta(hours=h), float((i * h) % 5))
+        for i in range(6)
+        for h in range(12)
+    ]
+    rolled = spark.createDataFrame(
+        rows, "conv_id string, g string, bucket_ts timestamp, turn_cnt double"
+    )
+    ref = np.zeros(12)
+    ref[4:8] = [1.0, 3.0, 3.0, 1.0]
+    return rolled, ref, (t0, t0 + dt.timedelta(hours=11), 12)
+
+
+def _count_aggregates(df):
+    import re
+
+    return len(re.findall(r"\(\d+\) \w*Aggregate\b", _plan(df)))
+
+
+def test_per_series_muse_search_one_exchange_no_merge(spark):
+    from go_muse_spark.operators.search import SearchParams, muse_search_rollup
+
+    rolled, ref, bounds = _muse_rollup(spark)
+    out = muse_search_rollup(
+        rolled, ref, 3600, None, SearchParams(top_n=3), bounds=bounds
+    )
+    # the series-key exchange feeding the scoring task; filters and
+    # top-K run inside the task, so no merge aggregate follows it
+    assert _count_op(out, "Exchange") == 1
+    assert _count_aggregates(out) == 0
+    assert _count_op(out, "TakeOrderedAndProject") == 1
+
+
+def test_grouped_muse_search_keeps_merge(spark):
+    from go_muse_spark.operators.search import SearchParams, muse_search_rollup
+
+    rolled, ref, bounds = _muse_rollup(spark)
+    out = muse_search_rollup(
+        rolled, ref, 3600, ["g"], SearchParams(top_n=3), bounds=bounds
+    )
+    # a group's series span tasks: the min_by merge keeps its exchange
+    assert _count_op(out, "Exchange") == 2
+    assert _count_aggregates(out) >= 1

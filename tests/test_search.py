@@ -167,7 +167,8 @@ def test_rollup_partition_invariance(spark):
     """The rollup path's per-series exchange and two-level reduce give
     identical rows whatever the input partitioning and Arrow batch size:
     1 vs 16 input partitions x maxRecordsPerBatch 7 vs default, per series
-    and grouped (duplicate series exercise the lowest-series_key tie)."""
+    (all 46 series, and a top-10 below the series count) and grouped
+    (duplicate series exercise the lowest-series_key tie)."""
     import datetime as dt
 
     from go_muse_spark.operators.search import muse_search_rollup
@@ -191,11 +192,11 @@ def test_rollup_partition_invariance(spark):
     rolled = spark.createDataFrame(
         rows, "conv_id string, g string, bucket_ts timestamp, turn_cnt long"
     )
-    p = SearchParams(top_n=100, max_lag=None, mode="abs")
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     default_batch = spark.conf.get(key)
 
-    def run(group_by, n_part, batch):
+    def run(group_by, n_part, batch, top_n):
+        p = SearchParams(top_n=top_n, max_lag=None, mode="abs")
         spark.conf.set(key, batch)
         try:
             return sorted(
@@ -207,11 +208,12 @@ def test_rollup_partition_invariance(spark):
         finally:
             spark.conf.set(key, default_batch)
 
-    for group_by, n_groups in ((None, 46), (["g"], 5)):
-        base = run(group_by, 1, default_batch)
-        assert len(base) == n_groups
+    for group_by, top_n, n_rows in ((None, 100, 46), (None, 10, 10), (["g"], 100, 5)):
+        base = run(group_by, 1, default_batch, top_n)
+        assert len(base) == n_rows
         for n_part, batch in ((16, default_batch), (1, "7"), (16, "7")):
-            assert run(group_by, n_part, batch) == base, (group_by, n_part, batch)
+            got = run(group_by, n_part, batch, top_n)
+            assert got == base, (group_by, top_n, n_part, batch)
     # grouped: the duplicate ties its original exactly; the lower key wins
     assert base[0][:3] == ("g:g0", "s00", 0) and abs(base[0][3] - 1.0) < 1e-9
 
@@ -359,3 +361,213 @@ def test_multi_ref_matches_single_ref_per_key(spark):
         score_rollup_multi(rolled, {"flat": np.zeros(n)}, 3600, bounds=(lo, hi, n))
     with _pytest.raises(ValueError):
         score_rollup_multi(rolled, {}, 3600, bounds=(lo, hi, n))
+
+
+def _pushdown_corpus(spark):
+    """Hourly long-form rows built for top-K edge cases: 20 random
+    series, six identical copies of the reference burst (exact ties at
+    |score| 1.0), four negated bursts (signed -1.0), and five constant
+    series that cover every bucket (zero variance: lag 0, score 0.0)."""
+    import datetime as dt
+
+    rng = np.random.default_rng(17)
+    t0, n = dt.datetime(2025, 1, 1), 30
+    ref = np.zeros(n)
+    ref[8:13] = [1.0, 3.0, 5.0, 3.0, 1.0]
+    series = {f"r{i:02d}": rng.poisson(2.0, n) * (rng.random(n) < 0.6) for i in range(20)}
+    series.update({f"t{i}": ref.astype(int) for i in range(6)})
+    series.update({f"n{i}": (5 - ref).astype(int) for i in range(4)})
+    series.update({f"z{i}": np.full(n, 2) for i in range(5)})
+    rows = [
+        (sk, t0 + dt.timedelta(hours=b), int(v))
+        for sk, vals in series.items()
+        for b, v in enumerate(vals)
+        if v
+    ]
+    rolled = spark.createDataFrame(
+        rows, "conv_id string, bucket_ts timestamp, turn_cnt long"
+    )
+    return rolled, ref, (t0, t0 + dt.timedelta(hours=n - 1), n), len(series)
+
+
+def test_per_series_topk_in_task_matches_two_level_plan(spark):
+    """Per-series muse_search_rollup and muse_search_multi filter and
+    keep top-K inside the scoring tasks; row for row (lag exact, score
+    equal) they must equal the two-level plan: score_rollup_multi with
+    the min_by merge, then apply_result_filters, then top_k. Cases cover
+    K below the series count, exact ties at the K-th place split across
+    tasks (six copies at 1.0, five zero-variance series at 0.0), every
+    filter and signed mode, at 1 and 16 input partitions x Arrow batch 7
+    and the default."""
+    from pyspark.sql import functions as F
+
+    from go_muse_spark.operators.search import (
+        _merge_best,
+        muse_search_multi,
+        muse_search_rollup,
+        score_rollup_multi,
+    )
+
+    rolled, ref, bounds, n_series = _pushdown_corpus(spark)
+    refs = {"A": ref, "B": ref[::-1].copy()}
+    cases = [
+        SearchParams(top_n=8, max_lag=None, mode="abs"),
+        SearchParams(top_n=3, max_lag=None, mode="abs"),  # cut in 1.0 ties
+        # cut inside the five 0.0 scores (all other series score > 0)
+        SearchParams(top_n=n_series - 3, max_lag=None, mode="abs"),
+        SearchParams(top_n=12, max_lag=2, mode="abs"),
+        SearchParams(top_n=12, max_lag=None, threshold=0.4, mode="abs"),
+        SearchParams(top_n=12, max_lag=None, mode="signed"),
+        SearchParams(top_n=12, max_lag=None, mode="signed", sign="pos"),
+        SearchParams(top_n=12, max_lag=None, mode="signed", sign="neg"),
+    ]
+
+    def rows(df):
+        return [
+            (r["group_key"], r["series_key"], r["lag"], r["score"])
+            for r in df.collect()
+        ]
+
+    def ranked(rs):
+        return sorted(rs, key=lambda r: (-abs(r[3]), r[0]))
+
+    want = {}
+    for i, p in enumerate(cases):
+        merged = _merge_best(
+            score_rollup_multi(rolled, refs, 3600, None, p.mode, bounds=bounds),
+            "ref_key", "group_key",
+        )
+        passed = apply_result_filters(merged, p.max_lag, p.threshold, p.sign)
+        for name in refs:
+            one = passed.filter(F.col("ref_key") == name).drop("ref_key")
+            want[i, name] = rows(top_k(one, p.top_n))
+        assert 0 < len(want[i, "A"]) <= p.top_n
+    # the tie cases really cut inside their ties
+    top8 = [abs(r[3]) for r in want[0, "A"]]
+    assert top8[2] == top8[3]  # K=3 cuts inside a tie
+    zeros = [r[0] for r in want[2, "A"] if r[3] == 0.0]
+    assert zeros == ["z0", "z1"]  # K cuts inside the five 0.0 scores
+    assert {r[3] < 0 for r in want[7, "A"]} == {True}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default_batch = spark.conf.get(key)
+    try:
+        for n_part, batch in ((1, default_batch), (16, default_batch), (1, "7"), (16, "7")):
+            spark.conf.set(key, batch)
+            data = rolled.repartition(n_part)
+            for i, p in enumerate(cases):
+                where = (n_part, batch, i)
+                got = rows(muse_search_rollup(data, ref, 3600, None, p, bounds=bounds))
+                assert got == want[i, "A"], where
+                multi = muse_search_multi(
+                    data, refs, 3600, None, p, bounds=bounds
+                ).collect()
+                for name in refs:
+                    got = ranked(
+                        (r["group_key"], r["series_key"], r["lag"], r["score"])
+                        for r in multi if r["ref_key"] == name
+                    )
+                    assert got == want[i, name], (where, name)
+    finally:
+        spark.conf.set(key, default_batch)
+
+
+def test_rows_outside_bounds_are_not_scored(spark):
+    """Explicit bounds narrower than the data: a row before lo must not
+    wrap to the end of its series and a row after hi must not crash the
+    scatter; per-series, grouped and multi-reference search all equal
+    the same search over the in-window rows only."""
+    import datetime as dt
+
+    from go_muse_spark.operators.search import (
+        muse_search_multi,
+        muse_search_rollup,
+    )
+
+    t0 = dt.datetime(2025, 1, 1)
+    n = len(REF)
+    series = {
+        "a": [2 * v for v in REF],  # perfect match
+        "b": SIMPLE["evenLower"],
+        "c": SIMPLE["slightlyLower"],
+    }
+    inside = [
+        (sk, "g" + sk, t0 + dt.timedelta(hours=b), float(v))
+        for sk, vals in series.items()
+        for b, v in enumerate(vals)
+        if v
+    ]
+    outside = [
+        ("a", "ga", t0 - dt.timedelta(hours=3), 5.0),
+        ("b", "gb", t0 + dt.timedelta(hours=n + 2), 4.0),
+        ("c", "gc", t0 + dt.timedelta(hours=n), 1.0),
+    ]
+    schema = "conv_id string, g string, bucket_ts timestamp, turn_cnt double"
+    clean = spark.createDataFrame(inside, schema)
+    dirty = spark.createDataFrame(inside + outside, schema)
+    bounds = (t0, t0 + dt.timedelta(hours=n - 1), n)
+    p = SearchParams(top_n=10, max_lag=None, mode="abs")
+
+    def run(df):
+        return {
+            "series": [
+                tuple(r) for r in muse_search_rollup(
+                    df, np.array(REF), 3600, None, p, bounds=bounds
+                ).collect()
+            ],
+            "grouped": [
+                tuple(r) for r in muse_search_rollup(
+                    df, np.array(REF), 3600, ["g"], p, bounds=bounds
+                ).collect()
+            ],
+            "multi": sorted(
+                tuple(r) for r in muse_search_multi(
+                    df, {"x": np.array(REF)}, 3600, None, p, bounds=bounds
+                ).collect()
+            ),
+        }
+
+    want = run(clean)
+    assert want["series"][0][:3] == ("a", "a", 0)
+    assert abs(want["series"][0][3] - 1.0) < 1e-9
+    assert run(dirty) == want
+
+
+def test_search_leaves_no_broadcast_files(spark):
+    """A search must not leave a file in the SparkContext temp dir: 30
+    muse_search_rollup and 10 muse_search calls keep its file count.
+    A per-call broadcast file is written when the plan is built, so only
+    every tenth result is collected."""
+    import datetime as dt
+    import os
+
+    from go_muse_spark.operators.search import muse_search_rollup
+
+    def n_files():
+        return sum(len(f) for _, _, f in os.walk(spark.sparkContext._temp_dir))
+
+    t0 = dt.datetime(2025, 1, 1)
+    rolled = spark.createDataFrame(
+        [
+            (name, t0 + dt.timedelta(hours=b), float(v))
+            for name, vals in SIMPLE.items()
+            for b, v in enumerate(vals)
+            if v
+        ],
+        "conv_id string, bucket_ts timestamp, turn_cnt double",
+    )
+    bounds = (t0, t0 + dt.timedelta(hours=len(REF) - 1), len(REF))
+    arrays = simple_df(spark)
+    p = SearchParams(top_n=3, max_lag=None)
+    muse_search_rollup(rolled, np.array(REF), 3600, params=p, bounds=bounds).collect()
+    before = n_files()
+    for i in range(30):
+        ref = np.array(REF) + 0.01 * i
+        found = muse_search_rollup(rolled, ref, 3600, params=p, bounds=bounds)
+        if i % 10 == 0:
+            assert found.collect()[0]["series_key"] == "perfectMatch"
+    for i in range(10):
+        found = muse_search(arrays, np.array(REF) + 0.01 * i, None, p, "series_key")
+        if i % 10 == 0:
+            assert len(found.collect()) == 3
+    assert n_files() == before
