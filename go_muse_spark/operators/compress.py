@@ -11,10 +11,15 @@ exchange into one streaming mapInPandas core:
     encoded in the same pass.
 
 The core reads complete conversation runs through complete_series_runs
-(Python memory O(one Arrow batch + one series), never a whole
-partition), densifies each series with _dense_fill and cuts it into
-chunk_size slices that the Gorilla/DoD codecs (functions/codecs.py)
-encode (_chunk_frame).
+and densifies each series with _dense_fill. It gathers the dense series
+into groups of at most _GROUP_POINTS points (a longer series is split
+at chunk boundaries) and encodes each group with ONE encode_chunk_batch
+call (functions/codecs.py): the chunk_size cuts, the Gorilla/DoD
+sections of every chunk and the chunk keys are whole-group numpy
+passes, not two codec calls per chunk. Python memory stays O(one Arrow
+batch + one series), never a whole partition, and the encode's own
+temporaries stay O(one group). The per-chunk codec functions remain the
+layout reference the batch encoder is tested against.
 
 decode_chunks: chunks -> long-form rows, via mapInPandas (each chunk
 decodes independently — no shuffle at all). Both byte columns live in
@@ -23,11 +28,12 @@ every chunk row, so select only what you need BEFORE wide pipelines.
 Skew: the encoders take rollup rows, and the rollup's map-side partial
 aggregate has already folded a hot conversation's turns into buckets,
 so one conversation costs O(its span in buckets), not O(its turns): a
-year of 1m buckets (525,600 points) fills and encodes in ~0.15 s on one
-core. Downstream, chunk rows are small and uniform (<= chunk_size
-points each): a hot conversation becomes many chunk rows, so work over
-chunks is naturally balanced, complementing the search stage's
-per-series exchange. A window-partitioned plan (one task per chunk
+year of 1m buckets (525,600 points, a third of them observed) zero-fills
+and encodes at chunk_size 1024 in 0.05-0.06 s on one core (0.09-0.11 s
+with two codec calls per chunk). Downstream, chunk rows are small and
+uniform (<= chunk_size points each): a hot conversation becomes many
+chunk rows, so work over chunks is naturally balanced, complementing
+the search stage's per-series exchange. A window-partitioned plan (one task per chunk
 window) buys nothing on top: on a corpus where one conversation held
 83-98% of the points it measured slower than or equal to encode_chunks.
 """
@@ -38,12 +44,19 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from go_muse_spark.functions.codecs import (
     decode_floats,
     decode_timestamps,
-    encode_floats,
-    encode_timestamps,
+    encode_chunk_batch,
 )
 
 __all__ = [
@@ -59,10 +72,24 @@ __all__ = [
     "xor_cost",
 ]
 
-CHUNK_SCHEMA = (
-    "conv_id string, tier string, chunk_start timestamp, n_points int, "
-    "ts_bytes binary, val_bytes binary"
+# a type, not DDL text: the JVM would parse a DDL string on every call
+CHUNK_SCHEMA = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("tier", StringType()),
+        StructField("chunk_start", TimestampType()),
+        StructField("n_points", IntegerType()),
+        StructField("ts_bytes", BinaryType()),
+        StructField("val_bytes", BinaryType()),
+    ]
 )
+
+# Dense points one encode_chunk_batch call takes at most (or one chunk,
+# if chunk_size is larger): 4 MB of timestamps and values. The batch
+# encoder's temporaries peak at 45-95 bytes a point (12-24 MB here; the
+# high end when every value changes). Without a cap a frame of sparse
+# rows could densify to far more points than it holds, all at once.
+_GROUP_POINTS = 1 << 18
 
 _MINUTE_US = 60 * 1_000_000
 _HOUR_US = 3_600 * 1_000_000
@@ -142,30 +169,47 @@ def _dense_fill(ts: np.ndarray, vals: np.ndarray, step_us: int, fill: str):
     return dense_ts, out
 
 
-def _chunk_frame(series, chunk_size: int) -> pd.DataFrame | None:
+def _chunk_frames(series, chunk_size: int):
     """Cut each (conv_id, tier, dense_ts, vals) series into chunk_size
-    slices, encode them, and build one CHUNK_SCHEMA frame (None if the
-    series emit no chunk)."""
-    out: dict[str, list] = {
-        "conv_id": [], "tier": [], "chunk_start": [],
-        "n_points": [], "ts_bytes": [], "val_bytes": [],
-    }
+    slices and encode them, one encode_chunk_batch call and one
+    CHUNK_SCHEMA frame per group of at most _GROUP_POINTS points. A
+    longer series is split at chunk boundaries first, which leaves its
+    chunks as they were."""
+    piece = max(_GROUP_POINTS // chunk_size, 1) * chunk_size
+    group: list = []
+    points = 0
     for conv, tier, ts, vals in series:
-        for lo in range(0, len(ts), chunk_size):
-            hi = min(lo + chunk_size, len(ts))
-            out["conv_id"].append(conv)
-            out["tier"].append(tier)
-            out["chunk_start"].append(ts[lo])
-            out["n_points"].append(hi - lo)
-            out["ts_bytes"].append(encode_timestamps(ts[lo:hi]))
-            out["val_bytes"].append(encode_floats(vals[lo:hi]))
-    if not out["conv_id"]:
-        return None
-    out["chunk_start"] = pd.to_datetime(
-        np.asarray(out["chunk_start"], dtype="datetime64[us]")
+        for lo in range(0, len(ts), piece):
+            n = min(piece, len(ts) - lo)
+            if group and points + n > _GROUP_POINTS:
+                yield _encode_group(group, chunk_size)
+                group, points = [], 0
+            group.append((conv, tier, ts[lo : lo + n], vals[lo : lo + n]))
+            points += n
+    if group:
+        yield _encode_group(group, chunk_size)
+
+
+def _encode_group(group, chunk_size: int) -> pd.DataFrame:
+    """The CHUNK_SCHEMA frame of one group of series."""
+    convs, tiers, ts_parts, val_parts = zip(*group)
+    n = np.array([len(ts) for ts in ts_parts], dtype=np.int64)
+    per = -(-n // chunk_size)  # chunks per series
+    rank = np.arange(per.sum()) - np.repeat(np.cumsum(per) - per, per)
+    lo = np.repeat(np.cumsum(n) - n, per) + rank * chunk_size
+    lens = np.minimum(np.repeat(n, per) - rank * chunk_size, chunk_size)
+    ts = np.concatenate(ts_parts)
+    ts_bytes, val_bytes = encode_chunk_batch(ts, np.concatenate(val_parts), lens)
+    return pd.DataFrame(
+        {
+            "conv_id": np.repeat(np.array(convs, dtype=object), per),
+            "tier": np.repeat(np.array(tiers, dtype=object), per),
+            "chunk_start": pd.to_datetime(ts[lo].astype("datetime64[us]")),
+            "n_points": lens.astype(np.int32),
+            "ts_bytes": ts_bytes,
+            "val_bytes": val_bytes,
+        }
     )
-    out["n_points"] = np.asarray(out["n_points"], dtype=np.int32)
-    return pd.DataFrame(out)
 
 
 def _encode_op(series_of, chunk_size: int):
@@ -174,12 +218,32 @@ def _encode_op(series_of, chunk_size: int):
     series of the conversations in one frame."""
 
     def op(batches):
-        for pdf in complete_series_runs(batches, "conv_id"):
-            out = _chunk_frame(series_of(pdf), chunk_size)
-            if out is not None:
-                yield out
+        frames = complete_series_runs(batches, "conv_id")
+        series = (s for pdf in frames for s in series_of(pdf))
+        yield from _chunk_frames(series, chunk_size)
 
     return op
+
+
+def _encode_plan(
+    df: DataFrame,
+    value_col: str,
+    series_of,
+    chunk_size: int,
+    parallelism: int | None,
+    exchange: bool = True,
+) -> DataFrame:
+    """conv_id exchange (unless the caller's rows are already hash-
+    partitioned by it), sort, and the one streaming mapInPandas. Column
+    refs come from the DataFrame itself: a name string costs a
+    functions.col round trip to the JVM each."""
+    out = df.select(df["conv_id"], df["bucket_ts"], df[value_col])
+    if exchange:
+        n_part = parallelism or df.sparkSession.sparkContext.defaultParallelism
+        out = out.repartition(n_part, out["conv_id"])
+    return out.sortWithinPartitions(out["conv_id"], out["bucket_ts"]).mapInPandas(
+        _encode_op(series_of, chunk_size), CHUNK_SCHEMA
+    )
 
 
 def _conv_series(pdf: pd.DataFrame, value_col: str):
@@ -219,8 +283,6 @@ def encode_chunks(
 
         tier_secs = TIERS[tier][1]
     step_us = (tier_secs or 0) * 1_000_000
-    spark = filled.sparkSession
-    n_part = parallelism or spark.sparkContext.defaultParallelism
 
     def series_of(pdf):
         for conv, ts, vals in _conv_series(pdf, value_col):
@@ -228,12 +290,7 @@ def encode_chunks(
                 ts, vals = _dense_fill(ts, vals, step_us, fill)
             yield conv, tier, ts, vals
 
-    return (
-        filled.select("conv_id", "bucket_ts", value_col)
-        .repartition(n_part, "conv_id")
-        .sortWithinPartitions("conv_id", "bucket_ts")
-        .mapInPandas(_encode_op(series_of, chunk_size), CHUNK_SCHEMA)
-    )
+    return _encode_plan(filled, value_col, series_of, chunk_size, parallelism)
 
 
 def _coarsen(ts: np.ndarray, vals: np.ndarray, step_us: int):
@@ -279,8 +336,6 @@ def encode_tiers_fused(
     streams); dense streams at 10^12-turn scale should keep the default
     partial-agg-first shape, which shuffles O(buckets) not O(turns).
     """
-    spark = rollup_1m.sparkSession
-    n_part = parallelism or spark.sparkContext.defaultParallelism
 
     def series_of(pdf):
         for conv, ts, vals in _conv_series(pdf, value_col):
@@ -291,11 +346,9 @@ def encode_tiers_fused(
             yield conv, "1h", ts_1h, v_1h
             yield conv, "1d", ts_1d, v_1d
 
-    out = rollup_1m.select("conv_id", "bucket_ts", value_col)
-    if not pre_partitioned:
-        out = out.repartition(n_part, "conv_id")
-    return out.sortWithinPartitions("conv_id", "bucket_ts").mapInPandas(
-        _encode_op(series_of, chunk_size), CHUNK_SCHEMA
+    return _encode_plan(
+        rollup_1m, value_col, series_of, chunk_size, parallelism,
+        exchange=not pre_partitioned,
     )
 
 

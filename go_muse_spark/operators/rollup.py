@@ -46,6 +46,11 @@ def _bucket(unit: str, col: str = "ts") -> F.Column:
     return F.date_trunc(unit, F.col(col)).alias("bucket_ts")
 
 
+def _q(name: str) -> str:
+    """A column name as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def rollup_transcripts(
     df: DataFrame,
     tier: str,
@@ -60,18 +65,20 @@ def rollup_transcripts(
     runs over (FIXTURES.md §F2).
     """
     unit, secs, _ = TIERS[tier]
-    extra = [F.sum(src).alias(out) for out, src in (sum_cols or {}).items()]
-    return (
-        df.groupBy("conv_id", _bucket(unit, ts_col))
-        .agg(
-            F.count(F.lit(1)).alias("turn_cnt"),
-            F.count(F.when(F.col("role") == "tool", 1)).alias("tool_cnt"),
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
-            *extra,
-        )
-        .withColumn("turns_per_sec", F.col("turn_cnt") / F.lit(float(secs)))
-    )
+    ts = _q(ts_col)
+    # one agg of SQL text, turns_per_sec folded in last: each F.* call and
+    # each withColumn step is a round trip to the JVM and a re-analysis
+    aggs = [
+        "count(1) AS turn_cnt",
+        "count(CASE WHEN role = 'tool' THEN 1 END) AS tool_cnt",
+        f"min({ts}) AS first_ts",
+        f"max({ts}) AS last_ts",
+        *(f"sum({_q(src)}) AS {_q(out)}" for out, src in (sum_cols or {}).items()),
+        f"count(1) / {secs}D AS turns_per_sec",
+    ]
+    return df.groupBy(
+        df["conv_id"], F.expr(f"date_trunc('{unit}', {ts}) AS bucket_ts")
+    ).agg(*map(F.expr, aggs))
 
 
 def rollup_from_finer(

@@ -52,6 +52,7 @@ from pyspark.sql.types import (
 from go_muse_spark import kernels as K
 from go_muse_spark.labels import label_id_cols
 from go_muse_spark.operators.compress import complete_series_runs
+from go_muse_spark.operators.rollup import _q
 
 __all__ = [
     "SearchParams",
@@ -395,11 +396,6 @@ def _per_series(group_by) -> bool:
     """group_by None/[] => every series its own group (group.go:84-89).
     Column.__bool__ raises, so the isinstance test must come first."""
     return not isinstance(group_by, Column) and not group_by
-
-
-def _q(name: str) -> str:
-    """A column name as a SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _keep_top(held, g, s, lags, scores, p: SearchParams):

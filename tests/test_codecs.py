@@ -9,6 +9,7 @@ from hypothesis import strategies as st
 from go_muse_spark.functions.codecs import (
     decode_floats,
     decode_timestamps,
+    encode_chunk_batch,
     encode_floats,
     encode_timestamps,
 )
@@ -83,3 +84,82 @@ def test_compression_ratio_on_regular_series():
     counts = np.maximum(0, rng.poisson(6, 4096)).astype(np.float64)
     encv = encode_floats(counts)
     assert len(encv) < 4096 * 8 / 2, len(encv)  # >2x on count-like floats
+
+
+# --- encode_chunk_batch: one segmented encode == the per-chunk codecs ---
+
+SPECIAL = [0.0, -0.0, np.nan, np.inf, -np.inf, 5e-324, -5e-324, 2.2250738585072014e-308]
+FLOATS = st.one_of(
+    st.floats(width=64),  # NaN, infinities and subnormals included
+    st.sampled_from(SPECIAL),
+    st.sampled_from([1.0, 2.0]),  # runs of equal values: k = 0 chunks
+)
+TS_MAX = 2**62
+
+
+def per_chunk(ts, vals, lens):
+    """The layout reference: one encode_timestamps / encode_floats call
+    per chunk."""
+    ts, vals = np.asarray(ts, dtype=np.int64), np.asarray(vals, dtype=np.float64)
+    starts = np.cumsum(lens, dtype=np.int64) - lens
+    return (
+        [encode_timestamps(ts[s : s + n]) for s, n in zip(starts, lens)],
+        [encode_floats(vals[s : s + n]) for s, n in zip(starts, lens)],
+    )
+
+
+def assert_batch_equals_reference(ts, vals, lens):
+    got = encode_chunk_batch(
+        np.asarray(ts, dtype=np.int64), np.asarray(vals, dtype=np.float64), lens
+    )
+    assert got == per_chunk(ts, vals, lens)
+
+
+@st.composite
+def chunked_series(draw):
+    n = draw(st.integers(0, 120))
+    vals = draw(st.lists(FLOATS, min_size=n, max_size=n))
+    if draw(st.booleans()):  # arbitrary: non-monotone, up to +-2^62
+        ts = draw(st.lists(st.integers(-TS_MAX, TS_MAX), min_size=n, max_size=n))
+    else:  # a regular grid, mostly-zero dods
+        t0 = draw(st.integers(-TS_MAX, TS_MAX // 2))
+        step = draw(st.sampled_from([1, 60_000_000, 3_600_000_000]))
+        ts = [t0 + i * step for i in range(n)]
+    if draw(st.booleans()):  # one chunk size: 1, dividing n or not
+        size = draw(st.integers(1, n + 2))
+        lens = [min(size, n - lo) for lo in range(0, n, size)]
+    else:  # free cut points
+        cuts = sorted(draw(st.sets(st.integers(1, max(n - 1, 1)))) & set(range(1, n)))
+        lens = list(np.diff([0, *cuts, n])) if n else []
+    return ts, vals, lens
+
+
+@settings(max_examples=300, deadline=None)
+@given(chunked_series())
+def test_chunk_batch_equals_per_chunk_property(case):
+    assert_batch_equals_reference(*case)
+
+
+def test_chunk_batch_edge_cases():
+    rng = np.random.default_rng(11)
+    base = 1_735_689_600_000_000
+    grid = base + np.arange(50) * 60_000_000
+    vals = rng.integers(0, 4, 50).astype(np.float64)
+    assert_batch_equals_reference(grid, vals, [1] * 50)  # chunk size 1
+    assert_batch_equals_reference(grid, vals, [16, 16, 16, 2])  # 16 !| 50
+    assert_batch_equals_reference(grid[:3], vals[:3], [1, 1, 1])  # n=1 chunks
+    assert_batch_equals_reference(grid, np.full(50, 7.0), [7] * 7 + [1])  # k=0
+    special = np.array(SPECIAL * 3)
+    assert_batch_equals_reference(grid[: special.size], special, [4] * 5 + [3, 1])
+    extreme = np.array([-TS_MAX, TS_MAX, 0, TS_MAX, -TS_MAX, 5, 3, 9])
+    assert_batch_equals_reference(extreme, rng.normal(size=8), [3, 5])
+    assert encode_chunk_batch(np.empty(0, np.int64), np.empty(0), []) == ([], [])
+
+
+def test_chunk_batch_rejects_chunks_that_do_not_cut_the_arrays():
+    ts, vals = np.arange(10), np.zeros(10)
+    for lens in ([4, 0, 6], [4, 5], [4, 7], [-1, 11]):
+        with pytest.raises(ValueError):
+            encode_chunk_batch(ts, vals, lens)
+    with pytest.raises(ValueError):
+        encode_chunk_batch(ts, np.zeros(9), [10])

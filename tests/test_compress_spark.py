@@ -9,9 +9,11 @@ cross Arrow batch boundaries inside the encoders.
 from datetime import datetime, timedelta
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import go_muse_spark.operators.compress as compress
 from go_muse_spark.operators.compress import (
     compact_chunks,
     decode_chunks,
@@ -303,3 +305,63 @@ def test_compact_chunks_restores_chunk_size(spark, rolled_gappy):
     assert points(fragmented) == points(compacted_df)
     assert compacted_df.count() < fragmented.count()  # fewer, larger chunks
     assert compacted_df.filter("n_points > 64").count() == 0
+
+
+def _gappy_frames(rng, batch_rows):
+    """A conv_id-sorted sparse 1m rollup, cut into Arrow-batch-sized
+    frames: 40 conversations of ~12 observed minutes over spans of up to
+    3,000 minutes, and one over 9,000."""
+    t0 = np.datetime64("2025-01-01T00:00", "us")
+    parts = []
+    for c in range(41):
+        span = 9_000 if c == 40 else int(rng.integers(20, 3_000))
+        minutes = np.sort(rng.choice(span, size=min(12, span), replace=False))
+        minutes[-1] = span - 1
+        parts.append(
+            pd.DataFrame(
+                {
+                    "conv_id": f"c{c:03d}",
+                    "bucket_ts": t0 + minutes * np.timedelta64(60, "s"),
+                    "turn_cnt": rng.integers(1, 9, minutes.size),
+                }
+            )
+        )
+    pdf = pd.concat(parts, ignore_index=True)
+    return [pdf.iloc[i : i + batch_rows] for i in range(0, len(pdf), batch_rows)]
+
+
+def test_group_cap_bounds_every_codec_call(monkeypatch):
+    """One encode_chunk_batch call per group of series, and a group never
+    holds more than _GROUP_POINTS dense points, however far a frame of
+    sparse rows densifies or however long one series is; the chunk bytes
+    do not depend on where the groups were cut."""
+    frames = _gappy_frames(np.random.default_rng(5), batch_rows=7)
+    step = 60 * 1_000_000
+
+    def series_of(pdf):
+        for conv, ts, vals in compress._conv_series(pdf, "turn_cnt"):
+            yield (conv, "1m", *compress._dense_fill(ts, vals, step, "zero"))
+
+    calls = []
+    batch = compress.encode_chunk_batch
+
+    def spy(ts, vals, lens):
+        calls.append(len(ts))
+        return batch(ts, vals, lens)
+
+    monkeypatch.setattr(compress, "encode_chunk_batch", spy)
+
+    def run(cap):
+        monkeypatch.setattr(compress, "_GROUP_POINTS", cap)
+        calls.clear()
+        out = pd.concat(compress._encode_op(series_of, 16)(iter(frames)))
+        return sorted(map(tuple, out.itertuples(index=False))), list(calls)
+
+    whole, whole_calls = run(1 << 40)
+    capped, capped_calls = run(5_000)
+    runs = compress.complete_series_runs(iter(frames), "conv_id")
+    points = sum(len(ts) for f in runs for _, _, ts, _ in series_of(f))
+    assert whole_calls == [points] and points > 10 * 5_000
+    assert capped == whole
+    assert len(capped_calls) > 10 and sum(capped_calls) == points
+    assert max(capped_calls) <= 5_000  # the 9,000-point series is split

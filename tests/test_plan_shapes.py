@@ -161,3 +161,63 @@ def test_grouped_muse_search_keeps_merge(spark):
     # a group's series span tasks: the min_by merge keeps its exchange
     assert _count_op(out, "Exchange") == 2
     assert _count_aggregates(out) >= 1
+
+
+# rollup_transcripts' output type, pinned: names, order, types and
+# nullability (the encoders and the stored tiers read it)
+_ROLLUP_FIELDS = [
+    ("conv_id", "string", True),
+    ("bucket_ts", "timestamp", True),
+    ("turn_cnt", "bigint", False),
+    ("tool_cnt", "bigint", False),
+    ("first_ts", "timestamp", True),
+    ("last_ts", "timestamp", True),
+]
+
+
+def _fields(df):
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema]
+
+
+@pytest.fixture(scope="module")
+def transcripts_parquet(spark, tmp_path_factory):
+    from go_muse_spark.sources.transcripts import generate_transcripts
+
+    path = str(tmp_path_factory.mktemp("plan_shapes") / "tx")
+    spark.createDataFrame(generate_transcripts(n_convs=20, seed=1)).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_rollup_transcripts_schema(transcripts_parquet):
+    from go_muse_spark.operators.rollup import rollup_transcripts
+
+    tx = transcripts_parquet
+    rate = [("turns_per_sec", "double", True)]
+    assert _fields(rollup_transcripts(tx, "1m")) == _ROLLUP_FIELDS + rate
+    with_sum = tx.withColumn("tokens", F.col("turn_idx") * 3)
+    assert (
+        _fields(rollup_transcripts(with_sum, "1h", sum_cols={"tok sum": "tokens"}))
+        == _ROLLUP_FIELDS + [("tok sum", "bigint", True)] + rate
+    )
+    quoted = tx.withColumnRenamed("ts", "turn ts")
+    assert (
+        _fields(rollup_transcripts(quoted, "1d", ts_col="turn ts"))
+        == _ROLLUP_FIELDS + rate
+    )
+
+
+def test_rollup_encode_plan(transcripts_parquet):
+    """The turns/s pipeline: the rollup's partial + final aggregate around
+    its exchange, the encoder's conv_id exchange, one Python stage, and a
+    scan that reads only the columns the chunks need."""
+    from go_muse_spark.operators.compress import encode_tiers_fused
+    from go_muse_spark.operators.rollup import rollup_transcripts
+
+    out = encode_tiers_fused(rollup_transcripts(transcripts_parquet, "1m"))
+    plan = _plan(out)
+    assert _count_op(out, "Exchange") == 2
+    assert _count_op(out, "HashAggregate") == 2
+    assert "partial_count(1)" in plan
+    assert _count_op(out, "MapInPandas") == 1
+    assert _count_op(out, "Scan parquet") == 1
+    assert "ReadSchema: struct<conv_id:string,ts:timestamp>" in plan
