@@ -67,14 +67,6 @@ def tokens(dialect: str, text_col: str = "text") -> str:
     return _d(dialect)["wordsplit"].format(x=text_col)
 
 
-def token_hashes(dialect: str, text_col: str = "text", distinct: bool = True) -> str:
-    t = _d(dialect)
-    toks = tokens(dialect, text_col)
-    if distinct:
-        toks = f"{t['distinct']}({toks})"
-    return f"{t['transform']}({toks}, t -> {char_hash(dialect, 't')})"
-
-
 def minhash_coeffs(k: int) -> list[tuple[int, int]]:
     """Deterministic odd multipliers + offsets for k hash families."""
     return [((2 * i + 3) % P, (104729 * (i + 1)) % P) for i in range(k)]

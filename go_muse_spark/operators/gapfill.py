@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from go_muse_spark.operators.rollup import TIERS
 
-__all__ = ["bucket_spine", "gap_fill", "aligned_vectors"]
+__all__ = ["bucket_spine", "gap_fill"]
 
 
 def _interval(tier: str) -> str:
@@ -149,32 +149,3 @@ def gap_fill(
         )
 
     raise ValueError(f"unknown gap-fill mode {mode!r}")
-
-
-def aligned_vectors(
-    filled: DataFrame, value_col: str = "turn_cnt"
-) -> DataFrame:
-    """Dense per-conv rows -> (conv_id, start_ts, values array<double>).
-
-    collect_list is unordered under shuffle, so we sort (bucket_ts, value)
-    structs — array_sort on structs orders by the first field. One row per
-    conversation; row size is bounded by the tier's bucket count, which is
-    what makes this safe at scale (a year of 1m buckets ~ 525k doubles max;
-    tier choice controls it).
-    """
-    return (
-        filled.groupBy("conv_id")
-        .agg(
-            F.min("bucket_ts").alias("start_ts"),
-            F.array_sort(
-                F.collect_list(F.struct("bucket_ts", value_col))
-            ).alias("pairs"),
-        )
-        .select(
-            "conv_id",
-            "start_ts",
-            F.transform(
-                "pairs", lambda p: p[value_col].cast("double")
-            ).alias("values"),
-        )
-    )

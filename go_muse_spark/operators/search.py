@@ -6,6 +6,11 @@ cross-correlate via FFT, keep the best (largest-|score|) lag per series,
 reduce to the best series per group key, then apply maxLag / threshold /
 sign post-filters and a global top-K by |score|.
 
+Input is long-form tier rows (series, bucket_ts, value), scattered into
+zero-filled equal-length series inside the scoring task. _score_tasks is
+the one scoring core under score_rollup, muse_search_rollup and
+muse_search_multi.
+
 Spark shape (SURVEY.md §3, §4):
   * the prepared reference spectrum (numpy complex128) is computed once on
     the driver and carried in the scoring task's closure — the
@@ -34,11 +39,12 @@ Spark shape (SURVEY.md §3, §4):
 
 from __future__ import annotations
 
+import datetime as dt
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -56,21 +62,19 @@ from go_muse_spark.operators.rollup import _q
 
 __all__ = [
     "SearchParams",
-    "muse_search",
     "muse_search_rollup",
-    "score_series",
     "score_rollup",
     "series_bounds",
     "apply_result_filters",
     "top_k",
-    "mean_abs_score",
     "IncrementalResults",
-    "score_rollup_multi",
     "muse_search_multi",
     "adaptive_flush_rows",
 ]
 
 SIGN_ANY, SIGN_POS, SIGN_NEG = "any", "pos", "neg"
+
+_EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
 
 # scoring-task output schemas, as types: a DDL string would be parsed
 # by the JVM on every search
@@ -133,90 +137,25 @@ def _merge_best(local_best: DataFrame, *keys: str) -> DataFrame:
     )
 
 
-def score_series(
-    df: DataFrame,
-    ref_values: np.ndarray,
-    group_by: "list[str] | Column | None",
-    mode: str = "abs",
-    series_key: str = "conv_id",
-    values_col: str = "values",
-) -> DataFrame:
-    """Score every series and reduce to the best per group.
-
-    df must carry `series_key` (string identity), `values_col`
-    (array<double>, all equal length == len(ref_values) — the reference's
-    group.go:45-51 invariant, enforced inside the kernel), and any label
-    columns named in group_by.
-
-    group_by=None/[] reproduces indexLabelValues' "no labels => every
-    series its own group" (group.go:84-89).
-
-    Returns (group_key, series_key, lag, score) — one row per group.
-    """
-    # the spectrum rides in the task closure (see _score_tasks)
-    spec = K.prepare_ref(np.asarray(ref_values, dtype=np.float64))
-    signed = mode == "signed"
-
-    # mirror _score_tasks: a prebuilt Column (e.g. label_id_map
-    # over map-typed dims) is the group key verbatim; Column.__bool__
-    # raises, so the isinstance test must come first
-    if isinstance(group_by, Column):
-        keyed = df.withColumn("group_key", group_by)
-    elif group_by:
-        keyed = df.withColumn("group_key", label_id_cols(group_by))
-    else:
-        keyed = df.withColumn("group_key", F.col(series_key))
-
-    # Every input ROW is a complete series and the per-group reduce
-    # (max by |score|) is associative+commutative, so scoring needs NO
-    # exchange at all: mapInPandas scores each Arrow batch wherever the
-    # data already lives and emits one partial best per group present in
-    # the batch; the relational min_by merge below combines partials.
-    # (The reference's two-level reduce, muse.go:86-90, as a map-side
-    # combine — hot groups are a non-issue here, as on the long-form
-    # rollup path, where each series is its own exchange key.)
-
-    def score_batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            y = np.stack(pdf["__vals"].to_numpy())
-            lags, scores = K.batch_xcorr(spec, y)
-            scores = (
-                K.clamp_signed(scores) if signed else K.clamp_abs(scores)
-            )
-            gk = pdf["group_key"].to_numpy()
-            sk = pdf["__sk"].to_numpy()
-            pick = _best_per_group(gk, sk, scores)
-            yield pd.DataFrame(
-                {
-                    "group_key": gk[pick],
-                    "series_key": sk[pick],
-                    "lag": lags[pick],
-                    "score": scores[pick],
-                }
-            )
-
-    local_best = keyed.select(
-        "group_key",
-        F.col(series_key).alias("__sk"),
-        F.col(values_col).alias("__vals"),
-    ).mapInPandas(score_batches, _SCORED)
-
-    return _merge_best(local_best, "group_key")
-
-
 def series_bounds(rolled: DataFrame, tier_secs: int, bucket_col: str = "bucket_ts"):
     """Global [lo, hi] bucket range and aligned series length n (one tiny
     agg). Empty input -> (None, None, 0): the reference's empty-batch
-    early-exit (muse.go:47-50) — callers return an empty result."""
-    row = rolled.agg(
-        F.min(bucket_col).alias("lo"), F.max(bucket_col).alias("hi")
+    early-exit (muse.go:47-50) — callers return an empty result.
+
+    The agg returns integer micros, and lo/hi come back as UTC-aware
+    datetimes: collect() would give naive local datetimes, whose
+    difference is an hour off across a DST change, and a naive bound
+    passed back as `bounds` converts through mktime, which picks one
+    side of an ambiguous fall-back hour."""
+    b = _q(bucket_col)
+    row = rolled.selectExpr(
+        f"unix_micros(min({b})) AS lo", f"unix_micros(max({b})) AS hi"
     ).collect()[0]
-    lo, hi = row["lo"], row["hi"]
-    if lo is None or hi is None:
+    lo_us, hi_us = row["lo"], row["hi"]
+    if lo_us is None:
         return None, None, 0
-    n = int((hi - lo).total_seconds() // tier_secs) + 1
+    n = (hi_us - lo_us) // (int(tier_secs) * 1_000_000) + 1
+    lo, hi = (_EPOCH + dt.timedelta(microseconds=us) for us in (lo_us, hi_us))
     return lo, hi, n
 
 
@@ -244,10 +183,9 @@ def score_rollup(
 
     group_by names label columns; None => per-series (group.go:84-89).
 
-    Implementation: the single-reference case of score_rollup_multi
-    (one entry, no ref_key column) — ONE copy of the tie-break-sensitive
-    scoring machinery exists, so a determinism fix can never diverge
-    the two paths (their bit-parity is test-asserted).
+    Implementation: _score_tasks with one reference and no ref_key
+    column, the one scoring core every muse search shares, so a
+    tie-break or determinism fix lands in every search at once.
     """
     scored = _score_tasks(
         rolled, {"": ref_values}, tier_secs, group_by, mode, series_cols,
@@ -256,6 +194,7 @@ def score_rollup(
     if _per_series(group_by):
         return scored
     return _merge_best(scored, "group_key")
+
 
 def muse_search_rollup(
     rolled: DataFrame,
@@ -318,29 +257,6 @@ def top_k(scored: DataFrame, k: int) -> DataFrame:
     return scored.orderBy(
         F.abs(scored["score"]).desc(), scored["group_key"]
     ).limit(int(k))
-
-
-def mean_abs_score(scored: DataFrame) -> float:
-    """Results.Fetch's mean |score| companion value (results.go:83-86)."""
-    row = scored.agg(F.avg(F.abs(F.col("score"))).alias("m")).collect()[0]
-    return float(row["m"]) if row["m"] is not None else 0.0
-
-
-def muse_search(
-    df: DataFrame,
-    ref_values: np.ndarray,
-    group_by: "list[str] | Column | None" = None,
-    params: SearchParams | None = None,
-    series_key: str = "conv_id",
-    values_col: str = "values",
-) -> DataFrame:
-    """Full Batch.Run equivalent: score -> reduce -> filter -> top-K."""
-    p = params or SearchParams()
-    scored = score_series(
-        df, ref_values, group_by, p.mode, series_key, values_col
-    )
-    passed = apply_result_filters(scored, p.max_lag, p.threshold, p.sign)
-    return top_k(passed, p.top_n)
 
 
 class IncrementalResults:
@@ -576,48 +492,6 @@ def _score_tasks(
     ).mapInPandas(score_partition, out_schema)
 
 
-def score_rollup_multi(
-    rolled: DataFrame,
-    refs: "dict[str, np.ndarray]",
-    tier_secs: int,
-    group_by: "list[str] | Column | None" = None,
-    mode: str = "abs",
-    series_cols: tuple[str, ...] = ("conv_id",),
-    value_col: str = "turn_cnt",
-    bucket_col: str = "bucket_ts",
-    bounds=None,
-) -> DataFrame:
-    """Score MANY prepared references against the corpus in ONE scan —
-    the fleet-search shape the reference's one-ref-per-Batch API cannot
-    express (a k-pattern sweep there re-reads and re-FFTs the corpus k
-    times). Same plan as score_rollup (one exchange on the series key,
-    sparse scatter, batched rfft) with one change: each flush computes
-    the candidates' spectrum ONCE (kernels.batch_y_spec) and finishes k
-    cheap multiply+irfft passes against the reference spectra carried
-    in the task — corpus I/O, shuffle, z-norm and the forward FFT are
-    all amortized across the whole pattern set.
-
-    refs: {ref_key: values} — every reference must match the aligned
-    series length; zero-variance references raise (muse.go:33-42).
-    Rows outside the aligned [lo, hi] range are not scored.
-
-    Per-series search (group_by None/[]) returns the scoring stage's
-    rows directly: each series is scored once, in one task, and is its
-    own group, so there is no merge. Grouped search finishes with the
-    min_by merge (_merge_best) across tasks.
-
-    Returns (ref_key, group_key, series_key, lag, score): per ref, the
-    best candidate per group.
-    """
-    scored = _score_tasks(
-        rolled, refs, tier_secs, group_by, mode, series_cols, value_col,
-        bucket_col, bounds,
-    )
-    if _per_series(group_by):
-        return scored
-    return _merge_best(scored, "ref_key", "group_key")
-
-
 def muse_search_multi(
     rolled: DataFrame,
     refs: "dict[str, np.ndarray]",
@@ -628,11 +502,19 @@ def muse_search_multi(
     value_col: str = "turn_cnt",
     bounds=None,
 ) -> DataFrame:
-    """k-pattern Batch.Run: one corpus scan, per-reference filters and
-    top-K (Results semantics applied independently per ref_key — the
-    same rank/tie rules as top_k, partitioned by reference). Per-series
-    search keeps each reference's top-K inside the scoring tasks, as
-    muse_search_rollup does."""
+    """k-pattern Batch.Run: MANY references scored against the corpus in
+    ONE scan and exchange — the fleet-search shape the reference's
+    one-ref-per-Batch API cannot express. Each flush computes the
+    candidates' spectrum once (kernels.batch_y_spec) and finishes one
+    multiply+irfft per reference carried in the task.
+
+    refs: {ref_key: values}; every reference must match the aligned
+    series length, and zero-variance references raise (muse.go:33-42).
+    Filters and top-K follow Results semantics independently per
+    ref_key (top_k's rank/tie rules, partitioned by reference).
+    Per-series search keeps each reference's top-K inside the scoring
+    tasks, as muse_search_rollup does; grouped search first merges each
+    reference's groups across tasks (_merge_best)."""
     from pyspark.sql import Window
 
     p = params or SearchParams()
@@ -642,9 +524,12 @@ def muse_search_multi(
             "bucket_ts", bounds, keep=p,
         )
     else:
-        scored = score_rollup_multi(
-            rolled, refs, tier_secs, group_by, p.mode,
-            series_cols, value_col, bounds=bounds,
+        scored = _merge_best(
+            _score_tasks(
+                rolled, refs, tier_secs, group_by, p.mode, series_cols,
+                value_col, "bucket_ts", bounds,
+            ),
+            "ref_key", "group_key",
         )
         passed = apply_result_filters(scored, p.max_lag, p.threshold, p.sign)
     w = Window.partitionBy("ref_key").orderBy(

@@ -20,9 +20,9 @@ from go_muse_spark.operators.compress import (
     encode_chunks,
     encode_tiers_fused,
 )
-from go_muse_spark.operators.gapfill import aligned_vectors, gap_fill
+from go_muse_spark.operators.gapfill import gap_fill
 from go_muse_spark.operators.rollup import rollup_all_tiers, rollup_transcripts
-from go_muse_spark.operators.search import SearchParams, muse_search
+from go_muse_spark.operators.search import SearchParams, muse_search_rollup
 from go_muse_spark.sources.transcripts import generate_transcripts
 
 from tests.test_pipeline import EXPECT, REF, transcripts_for_tier
@@ -105,20 +105,19 @@ def test_chunk_roundtrip_spark(spark):
 
 
 def test_search_over_decoded_chunks(spark):
-    # L4 decode-on-read path: chunks -> vectors -> muse parity still holds
+    # L4 decode-on-read path: chunks -> point rows -> muse parity still holds
     tx = transcripts_for_tier(spark, "1m")
     filled = gap_fill(
         rollup_transcripts(tx, "1m"), "1m", ("turn_cnt",), "zero", align="global"
     )
     chunks = encode_chunks(filled, "1m", "turn_cnt", chunk_size=4)
     decoded = decode_chunks(chunks, "turn_cnt")
-    series = aligned_vectors(decoded, "turn_cnt")
-    res = muse_search(
-        series,
+    res = muse_search_rollup(
+        decoded,
         np.array(REF, dtype=float),
+        60,
         group_by=None,
         params=SearchParams(top_n=20, max_lag=10, mode="abs"),
-        series_key="conv_id",
     )
     got = {r["group_key"]: (r["lag"], r["score"]) for r in res.collect()}
     for name, (lag, score) in EXPECT.items():

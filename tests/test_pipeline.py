@@ -1,4 +1,4 @@
-"""M1/M3 — transcripts -> rollup -> gapfill -> vectors -> search, per tier.
+"""M1/M3 — transcripts -> rollup -> gapfill -> search, per tier.
 
 Tier-parity fixture (FIXTURES.md §F3): each golden candidate vector v is
 embedded as one conversation whose bucket-i turn count is v[i]+4 (xcorr is
@@ -15,14 +15,18 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from go_muse_spark.operators.gapfill import aligned_vectors, gap_fill
+from go_muse_spark.operators.gapfill import gap_fill
 from go_muse_spark.operators.rollup import (
     TIERS,
     rollup_all_tiers,
     rollup_from_finer,
     rollup_transcripts,
 )
-from go_muse_spark.operators.search import SearchParams, muse_search
+from go_muse_spark.operators.search import (
+    SearchParams,
+    muse_search_rollup,
+    series_bounds,
+)
 
 BASE = dt.datetime(2025, 1, 1, 0, 0, 0)
 
@@ -69,13 +73,14 @@ def test_tier_parity(spark, tier):
     tiers = rollup_all_tiers(tx)
     rolled = tiers[tier]
     filled = gap_fill(rolled, tier, ("turn_cnt",), mode="zero", align="global")
-    series = aligned_vectors(filled, "turn_cnt")
-    res = muse_search(
-        series,
+    _, tier_secs, _ = TIERS[tier]
+    res = muse_search_rollup(
+        filled,
         np.array(REF, dtype=float),
+        tier_secs,
         group_by=None,
         params=SearchParams(top_n=20, max_lag=10, mode="abs"),
-        series_key="conv_id",
+        bounds=series_bounds(filled, tier_secs),
     )
     got = {r["group_key"]: (r["lag"], r["score"]) for r in res.collect()}
     assert set(got) == set(EXPECT)
@@ -147,5 +152,5 @@ def test_gap_fill_linear(spark):
 def test_gap_fill_global_alignment(spark):
     filled = gap_fill(gappy_rollup(spark), "1m", ("turn_cnt",), "zero", align="global")
     # both convs span the global 6-bucket range -> equal lengths
-    lens = aligned_vectors(filled).select(F.size("values").alias("n")).collect()
-    assert {r["n"] for r in lens} == {6}
+    lens = filled.groupBy("conv_id").count().collect()
+    assert {r["count"] for r in lens} == {6}

@@ -1,5 +1,5 @@
-"""Sparse long-form scoring (score_rollup) must equal the dense
-vector path (score_series) and reproduce the tier-parity goldens."""
+"""Sparse long-form scoring (score_rollup) must read missing buckets as
+zeros and reproduce the tier-parity goldens."""
 
 import numpy as np
 from pyspark.sql import functions as F

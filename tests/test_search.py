@@ -1,6 +1,7 @@
 """M1/M2 — muse search engine parity on the reference's golden queries.
 
-Reproduces, through the Spark operator (not the raw kernels):
+Reproduces, through the Spark operator (not the raw kernels), over
+long-form hourly rows (one row per series and non-zero bucket):
   * TestBatchRunSimple (muse_batch_test.go:9-44): groupBy graph, abs mode;
   * TestBatchRunMultiDimensional (muse_batch_test.go:46-82): 2-dim labels,
     groupBy graph keeps the best host per graph;
@@ -9,15 +10,15 @@ Reproduces, through the Spark operator (not the raw kernels):
   * maxLag post-filter semantics (results.go:46-52).
 """
 
+import datetime as dt
+
 import numpy as np
-import pytest
 
 from go_muse_spark.operators.search import (
     SearchParams,
     apply_result_filters,
-    mean_abs_score,
-    muse_search,
-    score_series,
+    muse_search_rollup,
+    score_rollup,
     top_k,
 )
 
@@ -39,24 +40,42 @@ SIMPLE_EXPECT = {
     "graph:zeros": (0, 0.000),
 }
 
+T0 = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
 
-def simple_df(spark):
+
+def long_form(spark, series, t0=T0, **labels):
+    """{series_key: values} -> long-form hourly rows (conv_id, *labels,
+    bucket_ts, turn_cnt) from t0, and their bounds (t0, t0+(n-1)h, n).
+    Each label is a column: name=({series_key: value}). Zero values are
+    dropped; the scoring scatter zero-fills them."""
+    n = len(next(iter(series.values())))
     rows = [
-        (name, name, [float(v) for v in vals]) for name, vals in SIMPLE.items()
+        (sk, *(lab[sk] for lab in labels.values()),
+         t0 + dt.timedelta(hours=b), float(v))
+        for sk, vals in series.items()
+        for b, v in enumerate(vals)
+        if v
     ]
-    return spark.createDataFrame(
-        rows, "series_key string, graph string, values array<double>"
+    cols = "".join(f"{c} string, " for c in labels)
+    rolled = spark.createDataFrame(
+        rows, f"conv_id string, {cols}bucket_ts timestamp, turn_cnt double"
     )
+    return rolled, (t0, t0 + dt.timedelta(hours=n - 1), n)
+
+
+def simple_rows(spark):
+    return long_form(spark, SIMPLE, graph={k: k for k in SIMPLE})
 
 
 def test_batch_run_simple(spark):
-    df = simple_df(spark)
-    res = muse_search(
-        df,
+    rolled, bounds = simple_rows(spark)
+    res = muse_search_rollup(
+        rolled,
         np.array(REF),
+        3600,
         group_by=["graph"],
         params=SearchParams(top_n=20, max_lag=10, threshold=0.0, mode="abs"),
-        series_key="series_key",
+        bounds=bounds,
     )
     got = {r["group_key"]: (r["lag"], r["score"]) for r in res.collect()}
     assert set(got) == set(SIMPLE_EXPECT)
@@ -68,23 +87,14 @@ def test_batch_run_simple(spark):
     assert ordered[0] == "graph:perfectMatch" and ordered[-1] == "graph:zeros"
 
 
-def test_mean_abs_score(spark):
-    # Results.Fetch mean of |score| over passed rows (results.go:83-86)
-    df = simple_df(spark)
-    scored = score_series(df, np.array(REF), ["graph"], "abs", "series_key")
-    expect = np.mean([abs(s) for _, s in SIMPLE_EXPECT.values()])
-    assert abs(mean_abs_score(scored) - expect) < 1e-3
-
-
 def test_per_series_grouping_signed(spark):
     # group_by=None -> every series its own group; signed Muse.Run scores
     # (muse_test.go:55-61: evenLowerShiftedAhead is NEGATIVE -0.754 for the
     # sign-flipped variant)
     flipped = dict(SIMPLE)
     flipped["evenLowerShiftedAhead"] = [0.0, 0, 0, 0, 0, 0, 0, 0, -2, -3, -2, 0]
-    rows = [(k, [float(x) for x in v]) for k, v in flipped.items()]
-    df = spark.createDataFrame(rows, "series_key string, values array<double>")
-    scored = score_series(df, np.array(REF), None, "signed", "series_key")
+    rolled, bounds = long_form(spark, flipped)
+    scored = score_rollup(rolled, np.array(REF), 3600, None, "signed", bounds=bounds)
     got = {r["group_key"]: (r["lag"], r["score"]) for r in scored.collect()}
     assert got["evenLowerShiftedAhead"][0] == -3
     assert abs(got["evenLowerShiftedAhead"][1] - (-0.754)) < 1e-3
@@ -113,16 +123,19 @@ def test_multi_dimensional_group_best(spark):
         ("graph4", "host1", [0.0, 0.0, 0.0, 0.0, -0.2, -0.4, 0.0, -0.8]),
         ("graph5", "host1", [0.0, 0.0, 0.0, -0.2, -0.4, -0.6, 1.0, 0.0]),
     ]
-    rows = [(f"{g}|{h}", g, h, [float(x) for x in v]) for g, h, v in comp]
-    df = spark.createDataFrame(
-        rows, "series_key string, graph string, host string, values array<double>"
+    rolled, bounds = long_form(
+        spark,
+        {f"{g}|{h}": v for g, h, v in comp},
+        graph={f"{g}|{h}": g for g, h, _ in comp},
+        host={f"{g}|{h}": h for g, h, _ in comp},
     )
-    res = muse_search(
-        df,
+    res = muse_search_rollup(
+        rolled,
         np.array(ref),
+        3600,
         group_by=["graph"],
         params=SearchParams(top_n=20, max_lag=10, mode="abs"),
-        series_key="series_key",
+        bounds=bounds,
     )
     got = {r["group_key"]: r for r in res.collect()}
     expect = {
@@ -138,15 +151,17 @@ def test_multi_dimensional_group_best(spark):
         assert got[k]["lag"] == lag, k
         assert abs(got[k]["score"] - score) < 1e-3, k
     # groupBy graph+host -> 6 distinct groups (group_test.go style)
-    res2 = score_series(df, np.array(ref), ["graph", "host"], "abs", "series_key")
+    res2 = score_rollup(
+        rolled, np.array(ref), 3600, ["graph", "host"], "abs", bounds=bounds
+    )
     assert res2.count() == 6
 
 
 def test_max_lag_is_post_filter(spark):
     # SURVEY.md §2c gotcha 1: argmax runs over ALL lags; if the best lag
     # falls outside maxLag the row is dropped, not re-searched.
-    df = simple_df(spark)
-    scored = score_series(df, np.array(REF), ["graph"], "abs", "series_key")
+    rolled, bounds = simple_rows(spark)
+    scored = score_rollup(rolled, np.array(REF), 3600, ["graph"], bounds=bounds)
     res = apply_result_filters(scored, max_lag=1, threshold=0.0)
     keys = {r["group_key"] for r in res.collect()}
     # evenLowerShiftedAhead (lag -3) and evenLower (lag 2) must vanish
@@ -154,8 +169,8 @@ def test_max_lag_is_post_filter(spark):
 
 
 def test_top_k_limit(spark):
-    df = simple_df(spark)
-    scored = score_series(df, np.array(REF), ["graph"], "abs", "series_key")
+    rolled, bounds = simple_rows(spark)
+    scored = score_rollup(rolled, np.array(REF), 3600, ["graph"], bounds=bounds)
     res = top_k(scored, 2).collect()
     assert [r["group_key"] for r in res] == [
         "graph:perfectMatch",
@@ -169,10 +184,6 @@ def test_rollup_partition_invariance(spark):
     1 vs 16 input partitions x maxRecordsPerBatch 7 vs default, per series
     (all 46 series, and a top-10 below the series count) and grouped
     (duplicate series exercise the lowest-series_key tie)."""
-    import datetime as dt
-
-    from go_muse_spark.operators.search import muse_search_rollup
-
     rng = np.random.default_rng(5)
     t0, n = dt.datetime(2025, 1, 1), 30
     ref = np.zeros(n)
@@ -218,44 +229,25 @@ def test_rollup_partition_invariance(spark):
     assert base[0][:3] == ("g:g0", "s00", 0) and abs(base[0][3] - 1.0) < 1e-9
 
 
-def test_length_mismatch_raises(spark):
-    # group.go:45-51 / muse_batch.go:24-28 equal-length invariant
-    rows = [
-        ("a", "g", [0.0, 1.0, 2.0, 3.0, 3.0, 2.0, 1.0, 0.0]),
-        ("b", "g", [float(x) for x in np.zeros(20)]),
-    ]
-    df = spark.createDataFrame(
-        rows, "series_key string, graph string, values array<double>"
-    )
-    with pytest.raises(Exception, match="length|shape"):
-        muse_search(df, np.array([0.0, 1, 2, 3, 3, 2, 1, 0]), ["graph"],
-                    SearchParams(), "series_key").collect()
-
-
 def test_incremental_results_accumulator(spark):
     """EP1: successive batches against one Results accumulator
-    (muse_test.go:67-69); later better scores displace earlier ones."""
-    import numpy as np
-    from go_muse_spark.operators.search import (
-        IncrementalResults,
-        SearchParams,
-        score_series,
-    )
+    (muse_test.go:67-69); later better scores displace earlier ones.
+    fetch() also carries Results.Fetch's mean |score| (results.go:83-86)."""
+    from go_muse_spark.operators.search import IncrementalResults
 
     ref = np.array([0, 0, 0, 0, 1, 2, 3, 3, 2, 1, 0, 0], dtype=float)
-    batch1 = spark.createDataFrame(
-        [("a", [float(v) for v in [0, 0, 0, 2, 4, 2, 0, 0, 0, 0, 0, 0]]),
-         ("b", [3.0] * 12)],
-        "series_key string, values array<double>",
+    batch1, bounds = long_form(
+        spark, {"a": [0, 0, 0, 2, 4, 2, 0, 0, 0, 0, 0, 0], "b": [3.0] * 12}
     )
-    batch2 = spark.createDataFrame(
-        [("c", [float(v) for v in [0, 0, 0, 0, 2, 4, 6, 6, 4, 2, 0, 0]]),
-         ("d", [float(v) for v in [0, 0, 0, 0, 2, 4, 6, 4, 2, 0, 0, 0]])],
-        "series_key string, values array<double>",
+    batch2, bounds2 = long_form(
+        spark,
+        {"c": [0, 0, 0, 0, 2, 4, 6, 6, 4, 2, 0, 0],
+         "d": [0, 0, 0, 0, 2, 4, 6, 4, 2, 0, 0, 0]},
     )
+    assert bounds2 == bounds
     acc = IncrementalResults(SearchParams(top_n=3, max_lag=None, mode="abs"))
     for b in (batch1, batch2):
-        acc.update(score_series(b, ref, None, "abs", "series_key", "values"))
+        acc.update(score_rollup(b, ref, 3600, bounds=bounds))
     rows, mean = acc.fetch()
     got = [(r["series_key"], round(r["score"], 3)) for r in rows]
     assert got == [("c", 1.0), ("d", 0.929), ("a", 0.733)]
@@ -263,24 +255,11 @@ def test_incremental_results_accumulator(spark):
 
 
 def test_empty_inputs_yield_empty_results(spark):
-    """Reference empty-batch early-exit (muse.go:47-50): empty tables
-    flow through both search paths as empty results, no errors."""
-    import numpy as np
-    from go_muse_spark.operators.search import (
-        SearchParams,
-        muse_search,
-        muse_search_rollup,
-        series_bounds,
-    )
+    """Reference empty-batch early-exit (muse.go:47-50): an empty table
+    flows through the search as an empty result, no errors."""
+    from go_muse_spark.operators.search import series_bounds
 
     ref = np.array([0, 0, 1, 2, 1, 0, 0, 0], dtype=float)
-    empty_arrays = spark.createDataFrame(
-        [], "series_key string, values array<double>"
-    )
-    assert (
-        muse_search(empty_arrays, ref, None, SearchParams(top_n=5),
-                    "series_key", "values").count() == 0
-    )
     empty_rollup = spark.createDataFrame(
         [], "conv_id string, bucket_ts timestamp, turn_cnt long"
     )
@@ -290,21 +269,59 @@ def test_empty_inputs_yield_empty_results(spark):
                            params=SearchParams(top_n=5)).count() == 0
     )
 
+def test_series_bounds_ignores_driver_time_zone(spark, monkeypatch):
+    """series_bounds takes n from integer micros and returns UTC-aware
+    bounds: with the driver in a DST zone, an 8-hour hourly corpus
+    across the spring-forward and the fall-back change still has n == 8,
+    and the search gives the rows it gives with the driver in UTC."""
+    import time
+
+    from go_muse_spark.operators.search import series_bounds
+
+    utc = dt.timezone.utc
+    # 2025-03-09 07:00 and 2025-11-02 06:00 UTC are 02:00 local in New York
+    starts = (dt.datetime(2025, 3, 9, 3, tzinfo=utc),
+              dt.datetime(2025, 11, 2, 2, tzinfo=utc))
+    series = {
+        "a": [0, 0, 0, 1, 3, 3, 1, 0],
+        "b": [0, 0, 1, 3, 3, 1, 0, 0],
+        "c": [1, 2, 1, 2, 1, 3, 1, 2],
+        "d": [2, 2, 2, 2, 2, 2, 2, 2],
+    }
+    p = SearchParams(top_n=4, max_lag=None, mode="abs")
+
+    def run():
+        out = []
+        for t0 in starts:
+            rolled, _ = long_form(spark, series, t0)
+            lo, hi, n = series_bounds(rolled, 3600)
+            ref = np.zeros(n)
+            ref[3:7] = [1.0, 3.0, 3.0, 1.0]
+            res = muse_search_rollup(rolled, ref, 3600, params=p)
+            out.append((n, [tuple(r) for r in res.collect()]))
+        return out
+
+    want = run()
+    try:
+        monkeypatch.setenv("TZ", "America/New_York")
+        time.tzset()
+        got = run()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert [n for n, _ in want] == [8, 8]
+    assert [n for n, _ in got] == [8, 8]
+    assert got == want
+
 
 def test_multi_ref_matches_single_ref_per_key(spark):
-    """score_rollup_multi with k refs must reproduce k independent
-    score_rollup runs bit-for-bit (same kernels, amortized rfft), and
-    muse_search_multi must apply top-K per reference."""
-    import numpy as np
+    """muse_search_multi with k refs, a top-K at least the series count
+    and no lag filter, must reproduce k independent score_rollup runs
+    bit-for-bit (same kernels, amortized rfft), and must apply top-K
+    per reference."""
+    import pytest
 
-    from go_muse_spark.operators.search import (
-        SearchParams,
-        muse_search_multi,
-        muse_search_rollup,
-        score_rollup,
-        score_rollup_multi,
-        series_bounds,
-    )
+    from go_muse_spark.operators.search import muse_search_multi, series_bounds
     from go_muse_spark.operators.rollup import rollup_transcripts
     from go_muse_spark.sources.transcripts import generate_transcripts
 
@@ -314,8 +331,10 @@ def test_multi_ref_matches_single_ref_per_key(spark):
     refA = np.zeros(n); refA[n // 4 : n // 4 + 5] = [1, 3, 5, 3, 1]
     refB = np.zeros(n); refB[n // 2 : n // 2 + 4] = [2, -5, -5, 2]
     refs = {"A": refA, "B": refB}
-    multi = score_rollup_multi(
-        rolled, refs, 3600, bounds=(lo, hi, n)
+    n_series = rolled.select("conv_id").distinct().count()
+    every = SearchParams(top_n=n_series, max_lag=None, mode="abs")
+    multi = muse_search_multi(
+        rolled, refs, 3600, params=every, bounds=(lo, hi, n)
     ).collect()
     by_ref = {}
     for r in multi:
@@ -329,6 +348,7 @@ def test_multi_ref_matches_single_ref_per_key(spark):
                 rolled, ref, 3600, bounds=(lo, hi, n)
             ).collect()
         }
+        assert len(single) == n_series
         assert by_ref[name] == single, name
     # per-ref top-K: k rows per reference, same membership as the
     # single-ref pipeline's top-K
@@ -352,15 +372,10 @@ def test_multi_ref_matches_single_ref_per_key(spark):
             for r in topm if r["ref_key"] == name
         }
         assert got == want, name
-    # validation: wrong-length and zero-variance refs raise
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        score_rollup_multi(rolled, {"bad": np.ones(3)}, 3600, bounds=(lo, hi, n))
-    with _pytest.raises(ValueError):
-        score_rollup_multi(rolled, {"flat": np.zeros(n)}, 3600, bounds=(lo, hi, n))
-    with _pytest.raises(ValueError):
-        score_rollup_multi(rolled, {}, 3600, bounds=(lo, hi, n))
+    # validation: wrong-length, zero-variance and missing refs raise
+    for bad in ({"bad": np.ones(3)}, {"flat": np.zeros(n)}, {}):
+        with pytest.raises(ValueError):
+            muse_search_multi(rolled, bad, 3600, bounds=(lo, hi, n))
 
 
 def _pushdown_corpus(spark):
@@ -368,8 +383,6 @@ def _pushdown_corpus(spark):
     series, six identical copies of the reference burst (exact ties at
     |score| 1.0), four negated bursts (signed -1.0), and five constant
     series that cover every bucket (zero variance: lag 0, score 0.0)."""
-    import datetime as dt
-
     rng = np.random.default_rng(17)
     t0, n = dt.datetime(2025, 1, 1), 30
     ref = np.zeros(n)
@@ -393,20 +406,13 @@ def _pushdown_corpus(spark):
 def test_per_series_topk_in_task_matches_two_level_plan(spark):
     """Per-series muse_search_rollup and muse_search_multi filter and
     keep top-K inside the scoring tasks; row for row (lag exact, score
-    equal) they must equal the two-level plan: score_rollup_multi with
-    the min_by merge, then apply_result_filters, then top_k. Cases cover
+    equal) they must equal the plan without in-task top-K: per-reference
+    score_rollup, then apply_result_filters, then top_k. Cases cover
     K below the series count, exact ties at the K-th place split across
     tasks (six copies at 1.0, five zero-variance series at 0.0), every
     filter and signed mode, at 1 and 16 input partitions x Arrow batch 7
     and the default."""
-    from pyspark.sql import functions as F
-
-    from go_muse_spark.operators.search import (
-        _merge_best,
-        muse_search_multi,
-        muse_search_rollup,
-        score_rollup_multi,
-    )
+    from go_muse_spark.operators.search import muse_search_multi
 
     rolled, ref, bounds, n_series = _pushdown_corpus(spark)
     refs = {"A": ref, "B": ref[::-1].copy()}
@@ -433,14 +439,10 @@ def test_per_series_topk_in_task_matches_two_level_plan(spark):
 
     want = {}
     for i, p in enumerate(cases):
-        merged = _merge_best(
-            score_rollup_multi(rolled, refs, 3600, None, p.mode, bounds=bounds),
-            "ref_key", "group_key",
-        )
-        passed = apply_result_filters(merged, p.max_lag, p.threshold, p.sign)
-        for name in refs:
-            one = passed.filter(F.col("ref_key") == name).drop("ref_key")
-            want[i, name] = rows(top_k(one, p.top_n))
+        for name, one in refs.items():
+            scored = score_rollup(rolled, one, 3600, None, p.mode, bounds=bounds)
+            passed = apply_result_filters(scored, p.max_lag, p.threshold, p.sign)
+            want[i, name] = rows(top_k(passed, p.top_n))
         assert 0 < len(want[i, "A"]) <= p.top_n
     # the tie cases really cut inside their ties
     top8 = [abs(r[3]) for r in want[0, "A"]]
@@ -477,12 +479,7 @@ def test_rows_outside_bounds_are_not_scored(spark):
     wrap to the end of its series and a row after hi must not crash the
     scatter; per-series, grouped and multi-reference search all equal
     the same search over the in-window rows only."""
-    import datetime as dt
-
-    from go_muse_spark.operators.search import (
-        muse_search_multi,
-        muse_search_rollup,
-    )
+    from go_muse_spark.operators.search import muse_search_multi
 
     t0 = dt.datetime(2025, 1, 1)
     n = len(REF)
@@ -534,40 +531,22 @@ def test_rows_outside_bounds_are_not_scored(spark):
 
 
 def test_search_leaves_no_broadcast_files(spark):
-    """A search must not leave a file in the SparkContext temp dir: 30
-    muse_search_rollup and 10 muse_search calls keep its file count.
-    A per-call broadcast file is written when the plan is built, so only
-    every tenth result is collected."""
-    import datetime as dt
+    """A search must not leave a file in the SparkContext temp dir: 40
+    muse_search_rollup calls keep its file count. A per-call broadcast
+    file is written when the plan is built, so only every tenth result
+    is collected."""
     import os
-
-    from go_muse_spark.operators.search import muse_search_rollup
 
     def n_files():
         return sum(len(f) for _, _, f in os.walk(spark.sparkContext._temp_dir))
 
-    t0 = dt.datetime(2025, 1, 1)
-    rolled = spark.createDataFrame(
-        [
-            (name, t0 + dt.timedelta(hours=b), float(v))
-            for name, vals in SIMPLE.items()
-            for b, v in enumerate(vals)
-            if v
-        ],
-        "conv_id string, bucket_ts timestamp, turn_cnt double",
-    )
-    bounds = (t0, t0 + dt.timedelta(hours=len(REF) - 1), len(REF))
-    arrays = simple_df(spark)
+    rolled, bounds = long_form(spark, SIMPLE)
     p = SearchParams(top_n=3, max_lag=None)
     muse_search_rollup(rolled, np.array(REF), 3600, params=p, bounds=bounds).collect()
     before = n_files()
-    for i in range(30):
+    for i in range(40):
         ref = np.array(REF) + 0.01 * i
         found = muse_search_rollup(rolled, ref, 3600, params=p, bounds=bounds)
         if i % 10 == 0:
             assert found.collect()[0]["series_key"] == "perfectMatch"
-    for i in range(10):
-        found = muse_search(arrays, np.array(REF) + 0.01 * i, None, p, "series_key")
-        if i % 10 == 0:
-            assert len(found.collect()) == 3
     assert n_files() == before
