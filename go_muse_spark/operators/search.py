@@ -20,6 +20,22 @@ Spark shape (SURVEY.md §3, §4):
   * scoring is a pandas UDF over a hash exchange on the series key, one
     task per core: one 2-D rfft per flush scores a whole matrix of
     candidates — a vectorization the reference lacks;
+  * the exchanged tier is kept for repeat searches, as go-muse builds its
+    Group once and runs Batch.Run against it per reference: the first
+    search of a DataFrame records its search shape (tier, series, value
+    and bucket columns, bounds, partitions, group key) and runs the
+    one-shot plan; the second with the same shape keeps the exchanged,
+    sorted rows as a local checkpoint (filled by that search's own
+    scoring job), and every later one scores them in ONE job with no
+    scan, exchange or sort (nor a series_bounds job: the bounds found
+    for bounds=None are kept too). Params and references
+    are not part of the shape. A new shape replaces the kept tier and
+    frees its blocks (collect a result built on it first), and the
+    entry goes when the DataFrame is garbage-collected. A repeated
+    search therefore sees the rows as of the DataFrame's second search:
+    re-read the tier after an ingest (a catalog or Iceberg DataFrame
+    would otherwise see each new snapshot), and after losing an
+    executor, whose local checkpoint blocks go with it;
   * per-series search (no group_by, group.go:84-89) needs no merge: each
     series is scored once, in one task, and is its own group. The task
     applies maxLag/threshold/sign and keeps a running top-K in top_k's
@@ -40,6 +56,8 @@ Spark shape (SURVEY.md §3, §4):
 from __future__ import annotations
 
 import datetime as dt
+import threading
+import weakref
 from dataclasses import dataclass
 
 import numpy as np
@@ -186,6 +204,10 @@ def score_rollup(
     Implementation: _score_tasks with one reference and no ref_key
     column, the one scoring core every muse search shares, so a
     tie-break or determinism fix lands in every search at once.
+
+    Searched again with the same shape, `rolled` is scored from its kept
+    exchanged tier (module docstring): the rows as of its second
+    search, so re-read the tier after an ingest.
     """
     scored = _score_tasks(
         rolled, {"": ref_values}, tier_secs, group_by, mode, series_cols,
@@ -211,7 +233,13 @@ def muse_search_rollup(
     Per-series search filters and keeps its top-K inside each scoring
     task, so the plan is one exchange, one scoring stage and top_k over
     at most tasks x top_n rows; grouped search merges groups across
-    tasks first, then filters."""
+    tasks first, then filters.
+
+    Repeat searches of one `rolled` (a fresh reference each, the same
+    tier, columns, bounds and group_by) score its kept exchanged tier:
+    from the third on, a per-series search is one Spark job. They see
+    the rows as of the second search, so re-read the tier after an
+    ingest, or after an executor is lost on a cluster."""
     p = params or SearchParams()
     if _per_series(group_by):
         passed = _score_tasks(
@@ -369,8 +397,10 @@ def _score_tasks(
     spark = rolled.sparkSession
     if not refs:
         raise ValueError("need at least one reference")
+    kept = _kept_entry(rolled)
+    tier_secs = int(tier_secs)
     if bounds is None:
-        lo, hi, n = series_bounds(rolled, tier_secs, bucket_col)
+        lo, hi, n = _kept_bounds(kept, rolled, tier_secs, bucket_col)
     else:
         lo, hi, n = bounds
     out_schema = _SCORED_MULTI if ref_key else _SCORED
@@ -396,41 +426,56 @@ def _score_tasks(
     if keep is not None and not per_series:
         raise ValueError("in-task top-K needs per-series search")
 
-    # SQL text, not a chain of F.* Columns: each Column call is a py4j
-    # round trip and plan building dominated the short per-series op.
     # Bounds are micros literals so they convert exactly as F.lit(lo)
     # does; hi is capped at the last second of the n-bucket span, so no
     # row can scatter outside the matrix (a row before lo would wrap to
     # the series' end, one after it would raise IndexError).
-    tier_secs = int(tier_secs)
     lo_us = TimestampType().toInternal(lo)
     lo_s = lo_us // 1_000_000
     hi_us = min(
         TimestampType().toInternal(hi), (lo_s + n * tier_secs) * 1_000_000 - 1
     )
-    b = _q(bucket_col)
-    proj = [
-        f"concat_ws('|', {', '.join(map(_q, series_cols))}) AS __sk",
-        f"CAST((unix_timestamp({b}) - {lo_s}) / {tier_secs} AS BIGINT) AS __idx",
-        f"CAST({_q(value_col)} AS DOUBLE) AS __val",
-    ]
-    inside = rolled.where(
-        f"{b} >= timestamp_micros({lo_us}) AND {b} <= timestamp_micros({hi_us})"
-    )
-    # group_by: a list of first-class label columns => canonical
-    # "k:v,..." key via label_id_cols; a prebuilt Column (e.g.
-    # labels.label_id_map over a map<string,string> dims column for the
-    # reference's dynamic label subsets, group.go:76-104) is used as the
-    # group key verbatim.
-    if per_series:
-        keyed = inside.selectExpr(*proj)
-    else:
-        gk = group_by if isinstance(group_by, Column) else label_id_cols(group_by)
-        keyed = inside.select(gk.alias("group_key"), *map(F.expr, proj))
     # One scoring task per core: each series is its own hash key, so more
     # partitions never split a hot group or a long series, they only add
     # per-task Python overhead (a task's Python memory is O(flush + series)).
     n_part = spark.sparkContext.defaultParallelism
+    # group_by: a list of first-class label columns => canonical
+    # "k:v,..." key via label_id_cols; a prebuilt Column (e.g.
+    # labels.label_id_map over a map<string,string> dims column for the
+    # reference's dynamic label subsets, group.go:76-104) is used as the
+    # group key verbatim, and its expression text names it in the shape.
+    if per_series:
+        group_shape = None
+    elif isinstance(group_by, Column):
+        group_shape = ("column", str(group_by))
+    else:
+        group_shape = ("labels", tuple(group_by))
+    shape = (
+        tier_secs, tuple(series_cols), value_col, bucket_col,
+        lo_us, hi_us, n, n_part, group_shape,
+    )
+
+    def exchanged() -> DataFrame:
+        # SQL text, not a chain of F.* Columns: each Column call is a
+        # py4j round trip and plan building dominated the short
+        # per-series op.
+        b = _q(bucket_col)
+        proj = [
+            f"concat_ws('|', {', '.join(map(_q, series_cols))}) AS __sk",
+            f"CAST((unix_timestamp({b}) - {lo_s}) / {tier_secs} AS BIGINT) AS __idx",
+            f"CAST({_q(value_col)} AS DOUBLE) AS __val",
+        ]
+        inside = rolled.where(
+            f"{b} >= timestamp_micros({lo_us}) AND {b} <= timestamp_micros({hi_us})"
+        )
+        if per_series:
+            keyed = inside.selectExpr(*proj)
+        else:
+            gk = group_by if isinstance(group_by, Column) else label_id_cols(group_by)
+            keyed = inside.select(gk.alias("group_key"), *map(F.expr, proj))
+        # keyed[...] column refs, not names: see top_k
+        spread = keyed.repartition(n_part, keyed["__sk"])
+        return spread.sortWithinPartitions(spread["__sk"], spread["__idx"])
 
     def frame(r, g, s, lags, scores):
         cols = {"ref_key": names[r]} if ref_key else {}
@@ -485,11 +530,86 @@ def _score_tasks(
         if outs:
             yield pd.concat(outs, ignore_index=True)
 
-    # keyed[...] column refs, not names: see top_k
-    spread = keyed.repartition(n_part, keyed["__sk"])
-    return spread.sortWithinPartitions(
-        spread["__sk"], spread["__idx"]
-    ).mapInPandas(score_partition, out_schema)
+    tier = _kept_tier(kept, shape, exchanged)
+    return tier.mapInPandas(score_partition, out_schema)
+
+
+class _Kept:
+    """What the scoring core keeps of one searched DataFrame: the
+    (lo, hi, n) series_bounds found for it per (tier_secs, bucket_col),
+    the shape of its latest search and, from that shape's second search
+    on, its exchanged and sorted rows as a local checkpoint."""
+
+    __slots__ = ("bounds", "shape", "frame")
+
+    def __init__(self) -> None:
+        self.bounds: dict = {}
+        self.shape = None
+        self.frame: DataFrame | None = None
+
+
+# Searched DataFrames -> _Kept. Weak keys: an entry, and with it the
+# last reference to its checkpoint, goes when its DataFrame does. The
+# values never refer back to the key. The lock guards every entry.
+_KEPT: "weakref.WeakKeyDictionary[DataFrame, _Kept]" = weakref.WeakKeyDictionary()
+_KEPT_LOCK = threading.Lock()
+
+
+def _kept_entry(rolled: DataFrame) -> _Kept:
+    with _KEPT_LOCK:
+        kept = _KEPT.get(rolled)
+        if kept is None:
+            kept = _KEPT[rolled] = _Kept()
+        return kept
+
+
+def _kept_bounds(kept: _Kept, rolled: DataFrame, tier_secs: int, bucket_col: str):
+    """series_bounds of `rolled`, found once per (tier_secs, bucket_col):
+    a repeated search with bounds=None runs no bounds job."""
+    key = (tier_secs, bucket_col)
+    with _KEPT_LOCK:
+        found = kept.bounds.get(key)
+    if found is None:
+        found = series_bounds(rolled, tier_secs, bucket_col)
+        with _KEPT_LOCK:
+            found = kept.bounds.setdefault(key, found)
+    return found
+
+
+def _kept_tier(kept: _Kept, shape: tuple, exchanged) -> DataFrame:
+    """The exchanged, sorted rows a search scores. The first search of a
+    shape records it and scores exchanged() as a one-shot search would;
+    the second keeps exchanged() as a local checkpoint and scores that;
+    later ones score the checkpoint with no scan, exchange or sort.
+
+    A new shape replaces the entry and frees the old checkpoint's
+    blocks, so a result built on the old tier must be collected before
+    the DataFrame is searched with another shape. Two threads that
+    both make a shape's second search each build a checkpoint; the
+    first one stored is kept."""
+    with _KEPT_LOCK:
+        if kept.shape == shape and kept.frame is not None:
+            return kept.frame
+        seen = kept.shape == shape
+        if not seen:
+            stale, kept.shape, kept.frame = kept.frame, shape, None
+    if not seen:
+        if stale is not None:
+            _release(stale)
+        return exchanged()
+    # not eager: the search's own scoring job fills the checkpoint, so
+    # the building search runs no separate job to count its rows
+    tier = exchanged().localCheckpoint(eager=False)
+    with _KEPT_LOCK:
+        if kept.shape == shape and kept.frame is None:
+            kept.frame = tier
+    return tier
+
+
+def _release(tier: DataFrame) -> None:
+    """Free a replaced checkpoint's blocks now rather than when the JVM
+    next collects its RDD."""
+    tier._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def muse_search_multi(
@@ -514,7 +634,9 @@ def muse_search_multi(
     ref_key (top_k's rank/tie rules, partitioned by reference).
     Per-series search keeps each reference's top-K inside the scoring
     tasks, as muse_search_rollup does; grouped search first merges each
-    reference's groups across tasks (_merge_best)."""
+    reference's groups across tasks (_merge_best). Repeat searches of
+    one `rolled` score its kept exchanged tier, as muse_search_rollup's
+    do, and see its rows as of the second search."""
     from pyspark.sql import Window
 
     p = params or SearchParams()

@@ -5,7 +5,9 @@ stays correct — explain() is the cheapest place to catch it.
 
 Counts use the ANALYZED physical plan text of explain(mode=
 "formatted") BEFORE adaptive re-planning collapses anything, so the
-pin is deterministic (no job runs)."""
+pin is deterministic (no job runs). The kept-tier pins search a
+DataFrame twice first, then read the third search's plan and count
+its jobs."""
 
 import datetime as dt
 
@@ -221,3 +223,58 @@ def test_rollup_encode_plan(transcripts_parquet):
     assert _count_op(out, "MapInPandas") == 1
     assert _count_op(out, "Scan parquet") == 1
     assert "ReadSchema: struct<conv_id:string,ts:timestamp>" in plan
+
+
+def _jobs_of(spark, group, run):
+    """Spark jobs `run()` starts, counted by job group once the listener
+    bus has delivered their start events."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeated_per_series_search_scores_kept_tier(spark):
+    """From its second search on, a DataFrame searched with one search
+    shape keeps its exchanged, sorted tier: the third search has no
+    Exchange and no Sort and runs one Spark job, with explicit bounds
+    and with bounds=None (the bounds found by the first search are kept
+    too, so no series_bounds job runs)."""
+    from go_muse_spark.operators.search import SearchParams, muse_search_rollup
+
+    p = SearchParams(top_n=3)
+    for bounds_arg in ("given", None):
+        rolled, ref, bounds = _muse_rollup(spark)
+        b = bounds if bounds_arg else None
+        for _ in range(2):
+            muse_search_rollup(rolled, ref, 3600, None, p, bounds=b).collect()
+        out = []
+        jobs = _jobs_of(
+            spark, f"kept-tier-{bounds_arg}",
+            lambda: out.extend(
+                muse_search_rollup(rolled, ref, 3600, None, p, bounds=b).collect()
+            ),
+        )
+        assert jobs == 1, bounds_arg
+        assert len(out) == 3
+        third = muse_search_rollup(rolled, ref, 3600, None, p, bounds=b)
+        assert _count_op(third, "Exchange") == 0
+        assert _count_op(third, "Sort") == 0
+
+
+def test_repeated_grouped_search_keeps_only_the_merge_exchange(spark):
+    """The third grouped search on one DataFrame scores the kept tier;
+    the exchange left is the min_by merge of the per-task winners."""
+    from go_muse_spark.operators.search import SearchParams, muse_search_rollup
+
+    rolled, ref, bounds = _muse_rollup(spark)
+    p = SearchParams(top_n=3)
+    for _ in range(2):
+        muse_search_rollup(rolled, ref, 3600, ["g"], p, bounds=bounds).collect()
+    out = muse_search_rollup(rolled, ref, 3600, ["g"], p, bounds=bounds)
+    assert _count_op(out, "Exchange") == 1
+    assert _count_aggregates(out) >= 1

@@ -550,3 +550,300 @@ def test_search_leaves_no_broadcast_files(spark):
         if i % 10 == 0:
             assert found.collect()[0]["series_key"] == "perfectMatch"
     assert n_files() == before
+
+
+# --- the kept tier: repeated searches over one DataFrame ---------------------
+
+
+def _search_rows(df):
+    return [
+        (r["group_key"], r["series_key"], r["lag"], r["score"]) for r in df.collect()
+    ]
+
+
+def _multi_rows(df):
+    return sorted(
+        (r["ref_key"], r["group_key"], r["series_key"], r["lag"], r["score"])
+        for r in df.collect()
+    )
+
+
+def _kept_frame(rolled):
+    from go_muse_spark.operators.search import _KEPT, _KEPT_LOCK
+
+    with _KEPT_LOCK:
+        kept = _KEPT.get(rolled)
+        return None if kept is None else kept.frame
+
+
+def test_repeated_search_matches_fresh_search(spark):
+    """Searches repeated on one DataFrame score its kept tier from the
+    second search on; row for row (lag exact, score equal) they equal
+    the same searches over a fresh DataFrame, which take the one-shot
+    plan. Cases of the in-task top-K test: ties at the K-th place, every
+    filter, signed mode, at 1 and 16 input partitions x Arrow batch 7
+    and the default (the one-shot answer does not depend on either:
+    test_rollup_partition_invariance)."""
+    from go_muse_spark.operators.search import muse_search_multi
+
+    rolled, ref, bounds, n_series = _pushdown_corpus(spark)
+    refs = {"A": ref, "B": ref[::-1].copy()}
+    cases = [
+        SearchParams(top_n=3, max_lag=None, mode="abs"),
+        SearchParams(top_n=n_series - 3, max_lag=None, mode="abs"),
+        SearchParams(top_n=12, max_lag=2, mode="abs"),
+        SearchParams(top_n=12, max_lag=None, threshold=0.4, mode="abs"),
+        SearchParams(top_n=12, max_lag=None, mode="signed", sign="pos"),
+        SearchParams(top_n=12, max_lag=None, mode="signed", sign="neg"),
+    ]
+
+    def search(df, p):
+        return (
+            _search_rows(muse_search_rollup(df, ref, 3600, None, p, bounds=bounds)),
+            _multi_rows(muse_search_multi(df, refs, 3600, None, p, bounds=bounds)),
+        )
+
+    want = [search(rolled.select("*"), p) for p in cases]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default_batch = spark.conf.get(key)
+    try:
+        for n_part, batch in ((1, default_batch), (16, default_batch), (1, "7"), (16, "7")):
+            spark.conf.set(key, batch)
+            data = rolled.repartition(n_part)
+            for _ in range(2):
+                muse_search_rollup(data, ref, 3600, None, cases[0], bounds=bounds).collect()
+            assert _kept_frame(data) is not None
+            for i, p in enumerate(cases):
+                assert search(data, p) == want[i], (n_part, batch, i)
+    finally:
+        spark.conf.set(key, default_batch)
+
+
+def _labelled_corpus(spark):
+    """16 random hourly series over 30 buckets with graph/host label
+    columns and the same labels as a `dims` map, two exact copies of the
+    reference burst (a tie) and one constant series; the series, the
+    reference and the bounds."""
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(23)
+    n = 30
+    ref = np.zeros(n)
+    ref[8:13] = [1.0, 3.0, 5.0, 3.0, 1.0]
+    series = {
+        f"s{i:02d}": list(rng.poisson(2.0, n) * (rng.random(n) < 0.6))
+        for i in range(13)
+    }
+    series.update({"t0": list(ref), "t1": list(ref), "z0": [2.0] * n})
+    rolled, bounds = long_form(
+        spark,
+        series,
+        graph={k: f"g{i % 3}" for i, k in enumerate(series)},
+        host={k: f"h{i % 2}" for i, k in enumerate(series)},
+    )
+    rolled = rolled.withColumn(
+        "dims",
+        F.create_map(F.lit("graph"), F.col("graph"), F.lit("host"), F.col("host")),
+    )
+    return rolled, series, ref, bounds
+
+
+def test_repeated_grouped_and_multi_search_match_fresh(spark):
+    """Grouped score_rollup with a list and with a Column group key, and
+    per-series and grouped muse_search_multi: three searches on one
+    DataFrame (the last two over the kept tier) equal the same search
+    over a fresh DataFrame."""
+    from pyspark.sql import functions as F
+
+    from go_muse_spark.labels import label_id_map
+    from go_muse_spark.operators.search import muse_search_multi
+
+    base, _, ref, bounds = _labelled_corpus(spark)
+    refs = {"A": ref, "B": ref[::-1].copy()}
+    p = SearchParams(top_n=5, max_lag=None, mode="signed")
+    searches = {
+        "grouped list": lambda df: sorted(_search_rows(
+            score_rollup(df, ref, 3600, ["graph"], "abs", bounds=bounds)
+        )),
+        "grouped column": lambda df: sorted(_search_rows(score_rollup(
+            df, ref, 3600, label_id_map(F.col("dims"), ["graph", "host"]),
+            "abs", bounds=bounds,
+        ))),
+        "multi per-series": lambda df: _multi_rows(
+            muse_search_multi(df, refs, 3600, None, p, bounds=bounds)
+        ),
+        "multi grouped": lambda df: _multi_rows(
+            muse_search_multi(df, refs, 3600, ["host"], p, bounds=bounds)
+        ),
+    }
+    for name, search in searches.items():
+        want = search(base.select("*"))
+        assert want, name
+        data = base.select("*")
+        for i in range(3):
+            assert search(data) == want, (name, i)
+        assert _kept_frame(data) is not None, name
+
+
+def test_search_shape_changes_never_reuse_a_stale_tier(spark):
+    """One DataFrame searched three times in a row with each of several
+    params, bounds, group_by and tier_secs settings (and back to the
+    first): every search equals the same search over a fresh DataFrame.
+    A change of params keeps the tier (it is not part of the search
+    shape); every other change builds its own."""
+    rolled, _, ref, (lo, hi, n) = _labelled_corpus(spark)
+    narrow = (lo + dt.timedelta(hours=5), lo + dt.timedelta(hours=24), 20)
+    two_hourly = (lo, hi, n // 2)
+    steps = [
+        ("all", None, SearchParams(top_n=6, max_lag=None), (lo, hi, n), 3600, ref),
+        ("params", None, SearchParams(top_n=4, max_lag=3, mode="signed"),
+         (lo, hi, n), 3600, ref),
+        ("bounds", None, SearchParams(top_n=6, max_lag=None), narrow, 3600,
+         ref[5:25]),
+        ("auto bounds", None, SearchParams(top_n=6, max_lag=None), None, 3600, ref),
+        ("group_by", ["host"], SearchParams(top_n=6, max_lag=None), (lo, hi, n),
+         3600, ref),
+        ("tier_secs", None, SearchParams(top_n=6, max_lag=None), two_hourly, 7200,
+         ref[::2]),
+        ("all again", None, SearchParams(top_n=6, max_lag=None), (lo, hi, n), 3600,
+         ref),
+    ]
+    data = rolled.select("*")
+    tiers = {}
+    for name, group_by, p, bounds, tier_secs, one in steps:
+        want = _search_rows(muse_search_rollup(
+            rolled.select("*"), one, tier_secs, group_by, p, bounds=bounds
+        ))
+        assert want, name
+        for i in range(3):
+            got = _search_rows(
+                muse_search_rollup(data, one, tier_secs, group_by, p, bounds=bounds)
+            )
+            assert got == want, (name, i)
+        tiers[name] = _kept_frame(data)
+        assert tiers[name] is not None, name
+    assert tiers["params"] is tiers["all"]
+    others = [tiers[k] for k in ("all", "bounds", "group_by", "tier_secs", "all again")]
+    assert len({id(t) for t in others}) == len(others)
+
+
+def _numpy_scores(series, ref):
+    """{series_key: (lag, |score|)} from the numpy batch kernel."""
+    from go_muse_spark import kernels as K
+
+    keys = list(series)
+    dense = np.array([series[k] for k in keys], dtype=np.float64)
+    lags, scores = K.batch_xcorr(K.prepare_ref(np.asarray(ref)), dense)
+    return {k: (int(lags[j]), float(K.clamp_abs(scores)[j])) for j, k in enumerate(keys)}
+
+
+def test_kept_tier_outlives_an_overwrite_of_its_files(spark, tmp_path):
+    """A spark.read.parquet DataFrame pins its file list, so after the
+    files are overwritten a search that reads them raises. One whose
+    tier is kept (searched twice before) returns its kept rows instead;
+    a fresh read sees the new data."""
+    import pytest
+
+    path = str(tmp_path / "tier")
+    rolled, series, ref, bounds = _labelled_corpus(spark)
+    rolled.select("conv_id", "bucket_ts", "turn_cnt").write.parquet(path)
+    p = SearchParams(top_n=40, max_lag=None, mode="abs")
+
+    def search(df):
+        return {
+            r["series_key"]: (r["lag"], r["score"])
+            for r in muse_search_rollup(df, ref, 3600, None, p, bounds=bounds).collect()
+        }
+
+    kept = spark.read.parquet(path)
+    unkept = spark.read.parquet(path)
+    want = search(kept)
+    assert search(kept) == want
+    assert _kept_frame(kept) is not None
+    for k, (lag, score) in _numpy_scores(series, ref).items():
+        assert want[k][0] == lag and abs(want[k][1] - score) < 1e-9, k
+
+    flipped = {k: v[::-1] for k, v in series.items()}
+    new_rows, _ = long_form(spark, flipped)
+    new_rows.write.mode("overwrite").parquet(path)
+
+    assert search(kept) == want
+    with pytest.raises(Exception, match="FAILED_READ_FILE.FILE_NOT_EXIST"):
+        search(unkept)
+    fresh = search(spark.read.parquet(path))
+    assert fresh != want
+    for k, (lag, score) in _numpy_scores(flipped, ref).items():
+        assert fresh[k][0] == lag and abs(fresh[k][1] - score) < 1e-9, k
+
+
+def test_kept_entry_goes_with_its_dataframe(spark):
+    """The memo holds its DataFrames weakly: once the DataFrame is
+    garbage-collected, no entry for it is left."""
+    import gc
+    import weakref
+
+    from go_muse_spark.operators.search import _KEPT, _KEPT_LOCK
+
+    rolled, bounds = long_form(spark, SIMPLE)
+    p = SearchParams(top_n=3, max_lag=None)
+    for _ in range(3):
+        muse_search_rollup(rolled, np.array(REF), 3600, params=p, bounds=bounds).collect()
+    with _KEPT_LOCK:
+        entry = _KEPT[rolled]
+    assert entry.frame is not None
+    alive = weakref.ref(rolled)
+    del rolled
+    gc.collect()
+    assert alive() is None
+    with _KEPT_LOCK:
+        assert all(v is not entry for v in list(_KEPT.values()))
+
+
+def test_concurrent_searches_of_one_dataframe(spark):
+    """Five threads (more than the session's cores) search one DataFrame
+    at once, each with its own reference, four times each, so the kept
+    tier is recorded, built and reused concurrently under a short switch
+    interval: every answer matches numpy for its own reference."""
+    import sys
+    import threading
+
+    rolled, series, ref, bounds = _labelled_corpus(spark)
+    refs = [np.roll(ref, 3 * t) + (np.arange(len(ref)) % (t + 2)) for t in range(5)]
+    expect = [_numpy_scores(series, r) for r in refs]
+    p = SearchParams(top_n=len(series), max_lag=None, mode="abs")
+    start = threading.Barrier(len(refs))
+    answers: list = [[] for _ in refs]
+    errors: list = []
+
+    def run(t):
+        try:
+            start.wait()
+            for _ in range(4):
+                answers[t].append({
+                    r["series_key"]: (r["lag"], r["score"])
+                    for r in muse_search_rollup(
+                        rolled, refs[t], 3600, None, p, bounds=bounds
+                    ).collect()
+                })
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(t,)) for t in range(len(refs))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert _kept_frame(rolled) is not None
+    for t, want in enumerate(expect):
+        assert len(answers[t]) == 4
+        for got in answers[t]:
+            assert set(got) == set(series), t
+            for k, (lag, score) in want.items():
+                assert got[k][0] == lag and abs(got[k][1] - score) < 1e-9, (t, k)
