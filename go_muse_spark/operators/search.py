@@ -23,19 +23,21 @@ Spark shape (SURVEY.md §3, §4):
   * the exchanged tier is kept for repeat searches, as go-muse builds its
     Group once and runs Batch.Run against it per reference: the first
     search of a DataFrame records its search shape (tier, series, value
-    and bucket columns, bounds, partitions, group key) and runs the
-    one-shot plan; the second with the same shape keeps the exchanged,
-    sorted rows as a local checkpoint (filled by that search's own
-    scoring job), and every later one scores them in ONE job with no
-    scan, exchange or sort (nor a series_bounds job: the bounds found
-    for bounds=None are kept too). Params and references
-    are not part of the shape. A new shape replaces the kept tier and
-    frees its blocks (collect a result built on it first), and the
-    entry goes when the DataFrame is garbage-collected. A repeated
-    search therefore sees the rows as of the DataFrame's second search:
-    re-read the tier after an ingest (a catalog or Iceberg DataFrame
-    would otherwise see each new snapshot), and after losing an
-    executor, whose local checkpoint blocks go with it;
+    and bucket columns, bounds or bounds=None, partitions, group key)
+    and runs the one-shot plan; the second with the same shape keeps
+    the exchanged, sorted rows as a local checkpoint (filled by that
+    search's own scoring job), and every later one scores them in ONE
+    job with no scan, exchange or sort (nor a series_bounds job: with
+    bounds=None the bounds the second search found are kept with its
+    rows). Params and references are not part of the shape; a Column
+    group key matches only the same Column object. A new shape drops
+    the kept tier (Spark frees its blocks once no result built on it is
+    left), and the entry goes when the DataFrame is garbage-collected.
+    A repeated search therefore sees the rows, and bounds, as of the
+    DataFrame's second search: re-read the tier after an ingest (a
+    catalog or Iceberg DataFrame would otherwise see each new
+    snapshot), and after losing an executor, whose local checkpoint
+    blocks go with it;
   * per-series search (no group_by, group.go:84-89) needs no merge: each
     series is scored once, in one task, and is its own group. The task
     applies maxLag/threshold/sign and keeps a running top-K in top_k's
@@ -236,10 +238,11 @@ def muse_search_rollup(
     tasks first, then filters.
 
     Repeat searches of one `rolled` (a fresh reference each, the same
-    tier, columns, bounds and group_by) score its kept exchanged tier:
-    from the third on, a per-series search is one Spark job. They see
-    the rows as of the second search, so re-read the tier after an
-    ingest, or after an executor is lost on a cluster."""
+    tier, columns, bounds and group_by; a Column group_by only as the
+    same object) score its kept exchanged tier: from the third on, a
+    per-series search is one Spark job. They see the rows, and with
+    bounds=None the bounds, as of the second search, so re-read the
+    tier after an ingest, or after an executor is lost on a cluster."""
     p = params or SearchParams()
     if _per_series(group_by):
         passed = _score_tasks(
@@ -397,12 +400,37 @@ def _score_tasks(
     spark = rolled.sparkSession
     if not refs:
         raise ValueError("need at least one reference")
-    kept = _kept_entry(rolled)
     tier_secs = int(tier_secs)
-    if bounds is None:
-        lo, hi, n = _kept_bounds(kept, rolled, tier_secs, bucket_col)
+    per_series = _per_series(group_by)
+    if keep is not None and not per_series:
+        raise ValueError("in-task top-K needs per-series search")
+    # One scoring task per core: each series is its own hash key, so more
+    # partitions never split a hot group or a long series, they only add
+    # per-task Python overhead (a task's Python memory is O(flush + series)).
+    n_part = spark.sparkContext.defaultParallelism
+    # group_by: a list of first-class label columns => canonical
+    # "k:v,..." key via label_id_cols; a prebuilt Column (e.g.
+    # labels.label_id_map over a map<string,string> dims column for the
+    # reference's dynamic label subsets, group.go:76-104) is used as the
+    # group key verbatim. In the shape it is the Column object itself:
+    # two Columns can print alike (two UDFs of one name over one column).
+    if per_series:
+        group_shape = None
+    elif isinstance(group_by, Column):
+        group_shape = _SameColumn(group_by)
     else:
-        lo, hi, n = bounds
+        group_shape = tuple(group_by)
+    shape = (
+        tier_secs, tuple(series_cols), value_col, bucket_col, n_part,
+        group_shape, None if bounds is None else _span(bounds, tier_secs),
+    )
+    kept = _kept_entry(rolled)
+    tier, span = _kept_hit(kept, shape)
+    if tier is None:
+        span = shape[-1] or _span(
+            series_bounds(rolled, tier_secs, bucket_col), tier_secs
+        )
+    lo_us, hi_us, n = span
     out_schema = _SCORED_MULTI if ref_key else _SCORED
     if n == 0:
         return spark.createDataFrame([], out_schema)
@@ -422,38 +450,7 @@ def _score_tasks(
     nfft, rn = specs[0].n, specs[0].ref_n
     xs = np.stack([sp.x_spec for sp in specs])
     signed = mode == "signed"
-    per_series = _per_series(group_by)
-    if keep is not None and not per_series:
-        raise ValueError("in-task top-K needs per-series search")
-
-    # Bounds are micros literals so they convert exactly as F.lit(lo)
-    # does; hi is capped at the last second of the n-bucket span, so no
-    # row can scatter outside the matrix (a row before lo would wrap to
-    # the series' end, one after it would raise IndexError).
-    lo_us = TimestampType().toInternal(lo)
     lo_s = lo_us // 1_000_000
-    hi_us = min(
-        TimestampType().toInternal(hi), (lo_s + n * tier_secs) * 1_000_000 - 1
-    )
-    # One scoring task per core: each series is its own hash key, so more
-    # partitions never split a hot group or a long series, they only add
-    # per-task Python overhead (a task's Python memory is O(flush + series)).
-    n_part = spark.sparkContext.defaultParallelism
-    # group_by: a list of first-class label columns => canonical
-    # "k:v,..." key via label_id_cols; a prebuilt Column (e.g.
-    # labels.label_id_map over a map<string,string> dims column for the
-    # reference's dynamic label subsets, group.go:76-104) is used as the
-    # group key verbatim, and its expression text names it in the shape.
-    if per_series:
-        group_shape = None
-    elif isinstance(group_by, Column):
-        group_shape = ("column", str(group_by))
-    else:
-        group_shape = ("labels", tuple(group_by))
-    shape = (
-        tier_secs, tuple(series_cols), value_col, bucket_col,
-        lo_us, hi_us, n, n_part, group_shape,
-    )
 
     def exchanged() -> DataFrame:
         # SQL text, not a chain of F.* Columns: each Column call is a
@@ -530,22 +527,53 @@ def _score_tasks(
         if outs:
             yield pd.concat(outs, ignore_index=True)
 
-    tier = _kept_tier(kept, shape, exchanged)
+    if tier is None:
+        tier = _kept_tier(kept, shape, span, exchanged)
     return tier.mapInPandas(score_partition, out_schema)
 
 
-class _Kept:
-    """What the scoring core keeps of one searched DataFrame: the
-    (lo, hi, n) series_bounds found for it per (tier_secs, bucket_col),
-    the shape of its latest search and, from that shape's second search
-    on, its exchanged and sorted rows as a local checkpoint."""
+def _span(bounds, tier_secs: int):
+    """(lo_us, hi_us, n) of search bounds (lo, hi, n). The bounds become
+    micros literals so they convert exactly as F.lit(lo) does; hi is
+    capped at the last second of the n-bucket span, so no row can
+    scatter outside the matrix (a row before lo would wrap to the
+    series' end, one after it would raise IndexError)."""
+    lo, hi, n = bounds
+    if n == 0:
+        return None, None, 0
+    lo_us = TimestampType().toInternal(lo)
+    hi_us = min(
+        TimestampType().toInternal(hi),
+        (lo_us // 1_000_000 + n * tier_secs) * 1_000_000 - 1,
+    )
+    return lo_us, hi_us, n
 
-    __slots__ = ("bounds", "shape", "frame")
+
+class _SameColumn:
+    """A Column group key in a search shape: equal only to a wrapper of
+    the same Column object (Column's own == builds a Column)."""
+
+    __slots__ = ("col",)
+
+    def __init__(self, col: Column) -> None:
+        self.col = col
+
+    def __eq__(self, other) -> bool:
+        return isinstance(other, _SameColumn) and other.col is self.col
+
+
+class _Kept:
+    """What the scoring core keeps of one searched DataFrame: the shape
+    of its latest search and, from that shape's second search on, its
+    exchanged and sorted rows as a local checkpoint with the
+    (lo_us, hi_us, n) span they were built for."""
+
+    __slots__ = ("shape", "frame", "span")
 
     def __init__(self) -> None:
-        self.bounds: dict = {}
         self.shape = None
         self.frame: DataFrame | None = None
+        self.span = None
 
 
 # Searched DataFrames -> _Kept. Weak keys: an entry, and with it the
@@ -563,53 +591,43 @@ def _kept_entry(rolled: DataFrame) -> _Kept:
         return kept
 
 
-def _kept_bounds(kept: _Kept, rolled: DataFrame, tier_secs: int, bucket_col: str):
-    """series_bounds of `rolled`, found once per (tier_secs, bucket_col):
-    a repeated search with bounds=None runs no bounds job."""
-    key = (tier_secs, bucket_col)
-    with _KEPT_LOCK:
-        found = kept.bounds.get(key)
-    if found is None:
-        found = series_bounds(rolled, tier_secs, bucket_col)
-        with _KEPT_LOCK:
-            found = kept.bounds.setdefault(key, found)
-    return found
-
-
-def _kept_tier(kept: _Kept, shape: tuple, exchanged) -> DataFrame:
-    """The exchanged, sorted rows a search scores. The first search of a
-    shape records it and scores exchanged() as a one-shot search would;
-    the second keeps exchanged() as a local checkpoint and scores that;
-    later ones score the checkpoint with no scan, exchange or sort.
-
-    A new shape replaces the entry and frees the old checkpoint's
-    blocks, so a result built on the old tier must be collected before
-    the DataFrame is searched with another shape. Two threads that
-    both make a shape's second search each build a checkpoint; the
-    first one stored is kept."""
+def _kept_hit(kept: _Kept, shape: tuple):
+    """(checkpoint, span) if a search of this shape has kept its tier,
+    else (None, None). The span is read with the checkpoint, so a search
+    with bounds=None scores the rows and bounds of the one search that
+    kept them, and runs no series_bounds job."""
     with _KEPT_LOCK:
         if kept.shape == shape and kept.frame is not None:
+            return kept.frame, kept.span
+    return None, None
+
+
+def _kept_tier(kept: _Kept, shape: tuple, span: tuple, exchanged) -> DataFrame:
+    """The exchanged, sorted rows a search with no kept tier scores. The
+    first search of a shape records it and scores exchanged() as a
+    one-shot search would; the second keeps exchanged() as a local
+    checkpoint and scores that.
+
+    A new shape drops the old checkpoint without unpersisting it: a
+    result built on it may still be collected, and Spark's
+    ContextCleaner frees the blocks once nothing refers to them. Two
+    threads that both make a shape's second search each build a
+    checkpoint; the first one stored is kept."""
+    with _KEPT_LOCK:
+        if kept.shape == shape and kept.frame is not None and kept.span == span:
             return kept.frame
         seen = kept.shape == shape
         if not seen:
-            stale, kept.shape, kept.frame = kept.frame, shape, None
+            kept.shape, kept.frame, kept.span = shape, None, None
     if not seen:
-        if stale is not None:
-            _release(stale)
         return exchanged()
     # not eager: the search's own scoring job fills the checkpoint, so
     # the building search runs no separate job to count its rows
     tier = exchanged().localCheckpoint(eager=False)
     with _KEPT_LOCK:
         if kept.shape == shape and kept.frame is None:
-            kept.frame = tier
+            kept.frame, kept.span = tier, span
     return tier
-
-
-def _release(tier: DataFrame) -> None:
-    """Free a replaced checkpoint's blocks now rather than when the JVM
-    next collects its RDD."""
-    tier._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def muse_search_multi(

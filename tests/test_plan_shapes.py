@@ -242,8 +242,8 @@ def test_repeated_per_series_search_scores_kept_tier(spark):
     """From its second search on, a DataFrame searched with one search
     shape keeps its exchanged, sorted tier: the third search has no
     Exchange and no Sort and runs one Spark job, with explicit bounds
-    and with bounds=None (the bounds found by the first search are kept
-    too, so no series_bounds job runs)."""
+    and with bounds=None (the bounds the second search found are kept
+    with its rows, so no series_bounds job runs)."""
     from go_muse_spark.operators.search import SearchParams, muse_search_rollup
 
     p = SearchParams(top_n=3)

@@ -649,10 +649,10 @@ def _labelled_corpus(spark):
 
 
 def test_repeated_grouped_and_multi_search_match_fresh(spark):
-    """Grouped score_rollup with a list and with a Column group key, and
-    per-series and grouped muse_search_multi: three searches on one
-    DataFrame (the last two over the kept tier) equal the same search
-    over a fresh DataFrame."""
+    """Grouped score_rollup with a list and with a Column group key (one
+    Column object, reused), and per-series and grouped
+    muse_search_multi: three searches on one DataFrame (the last two
+    over the kept tier) equal the same search over a fresh DataFrame."""
     from pyspark.sql import functions as F
 
     from go_muse_spark.labels import label_id_map
@@ -661,14 +661,14 @@ def test_repeated_grouped_and_multi_search_match_fresh(spark):
     base, _, ref, bounds = _labelled_corpus(spark)
     refs = {"A": ref, "B": ref[::-1].copy()}
     p = SearchParams(top_n=5, max_lag=None, mode="signed")
+    by_dims = label_id_map(F.col("dims"), ["graph", "host"])
     searches = {
         "grouped list": lambda df: sorted(_search_rows(
             score_rollup(df, ref, 3600, ["graph"], "abs", bounds=bounds)
         )),
-        "grouped column": lambda df: sorted(_search_rows(score_rollup(
-            df, ref, 3600, label_id_map(F.col("dims"), ["graph", "host"]),
-            "abs", bounds=bounds,
-        ))),
+        "grouped column": lambda df: sorted(_search_rows(
+            score_rollup(df, ref, 3600, by_dims, "abs", bounds=bounds)
+        )),
         "multi per-series": lambda df: _multi_rows(
             muse_search_multi(df, refs, 3600, None, p, bounds=bounds)
         ),
@@ -725,6 +725,100 @@ def test_search_shape_changes_never_reuse_a_stale_tier(spark):
     assert tiers["params"] is tiers["all"]
     others = [tiers[k] for k in ("all", "bounds", "group_by", "tier_secs", "all again")]
     assert len({id(t) for t in others}) == len(others)
+
+
+def test_column_group_keys_that_print_alike_never_share_a_tier(
+    spark, monkeypatch
+):
+    """Two lambda UDF group keys over one column print alike in a session
+    that records no call-site origins (the patched repr stands in for
+    one). Searches that alternate between them on one DataFrame each
+    equal a fresh search with their own key; searches that reuse one
+    Column object keep its tier."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.classic.column import Column
+
+    rolled, _, ref, bounds = _labelled_corpus(spark)
+    keys = {
+        "graph": F.udf(lambda d: d["graph"])(F.col("dims")),
+        "host": F.udf(lambda d: d["host"])(F.col("dims")),
+    }
+    monkeypatch.setattr(Column, "__repr__", lambda self: "Column<'<lambda>(dims)'>")
+    assert str(keys["graph"]) == str(keys["host"])
+
+    def search(df, key):
+        return sorted(_search_rows(
+            score_rollup(df, ref, 3600, keys[key], "abs", bounds=bounds)
+        ))
+
+    want = {k: search(rolled.select("*"), k) for k in keys}
+    assert want["graph"] != want["host"]
+    data = rolled.select("*")
+    for i in range(3):
+        for k in keys:
+            assert search(data, k) == want[k], (k, i)
+    for i in range(3):
+        assert search(data, "host") == want["host"], i
+    assert _kept_frame(data) is not None
+
+
+def test_result_built_on_a_replaced_tier_still_collects(spark):
+    """A search built on the kept tier but not yet collected stays valid
+    after the same DataFrame is searched with another shape, and can be
+    collected again after a JVM garbage collection: the replaced
+    checkpoint's blocks go only once no result refers to them."""
+    import gc
+
+    rolled, series, ref, bounds = _labelled_corpus(spark)
+    p = SearchParams(top_n=len(series), max_lag=None, mode="abs")
+    want = _search_rows(
+        muse_search_rollup(rolled.select("*"), ref, 3600, None, p, bounds=bounds)
+    )
+    for _ in range(2):
+        muse_search_rollup(rolled, ref, 3600, None, p, bounds=bounds).collect()
+    tier = _kept_frame(rolled)
+    assert tier is not None
+    third = muse_search_rollup(rolled, ref, 3600, None, p, bounds=bounds)
+    grouped = muse_search_rollup(rolled, ref, 3600, ["host"], p, bounds=bounds)
+    assert grouped.collect()
+    assert _kept_frame(rolled) is None
+    del tier
+    assert _search_rows(third) == want
+    gc.collect()
+    spark.sparkContext._jvm.java.lang.System.gc()
+    assert _search_rows(third) == want
+
+
+def test_bounds_none_keeps_the_bounds_of_the_search_that_kept_the_tier(
+    spark, monkeypatch
+):
+    """With bounds=None the second search finds its own bounds and keeps
+    them with its rows: rows that arrived after the first search are
+    scored, not clipped to the first search's bounds. Later searches run
+    no series_bounds call."""
+    from go_muse_spark.operators import search as S
+
+    rolled, _, ref, (lo, hi, n) = _labelled_corpus(spark)
+    early = (lo, lo + dt.timedelta(hours=19), 20)
+    found = [early]
+    calls = []
+
+    def bounds_of(df, tier_secs, bucket_col="bucket_ts"):
+        calls.append(tier_secs)
+        return found.pop() if found else (lo, hi, n)
+
+    monkeypatch.setattr(S, "series_bounds", bounds_of)
+    p = SearchParams(top_n=8, max_lag=None)
+    refs = [ref[:20], ref, ref[::-1].copy(), np.roll(ref, 4)]
+    data = rolled.select("*")
+    for i, r in enumerate(refs):
+        want = _search_rows(muse_search_rollup(
+            rolled.select("*"), r, 3600, None, p, bounds=early if i == 0 else (lo, hi, n)
+        ))
+        got = _search_rows(muse_search_rollup(data, r, 3600, None, p))
+        assert got == want, i
+        assert len(calls) == min(i + 1, 2), i
+    assert _kept_frame(data) is not None
 
 
 def _numpy_scores(series, ref):
