@@ -13,7 +13,7 @@ Layers (SURVEY.md §7):
   L1 rollup     tumbling-window tiers 1m/1h/1d (continuous aggregates)
   L2 gapfill    dense bucket spine + zero/ffill/linear fill
   L3 compress   Gorilla XOR values + delta-of-delta timestamps -> chunks
-  L4 search     muse: broadcast ref spectrum -> grouped scoring -> top-K
+  L4 search     muse: ref spectrum in the task closure -> scoring -> top-K
   Ops           incremental MERGE, per-partition checkpoints, resume
 """
 

@@ -25,7 +25,6 @@ __all__ = [
     "label_replace",
     "vector_binop",
     "vector_setop",
-    "distinct_groups",
 ]
 
 
@@ -258,18 +257,6 @@ def vector_binop(
         out_dims.alias(dims_col),
         result,
     )
-
-
-def distinct_groups(df, keys: list[str]):
-    """indexLabelValues' distinct-combination side (group.go:76-104).
-
-    Empty keys -> every series its own group (group.go:84-89): caller
-    should group by the series key instead; here we return distinct over
-    all rows' series_key if present.
-    """
-    if not keys:
-        return df.select("series_key").distinct()
-    return df.select(*sorted(keys)).distinct()
 
 
 def vector_setop(

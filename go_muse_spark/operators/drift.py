@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "dist_drift",
-    "drift_from_counts",
     "dist_entropy",
     "heavy_change",
     "ks_drift",
@@ -93,28 +92,6 @@ def dist_drift(
         .localCheckpoint(eager=False)
     )
 
-    return drift_from_counts(
-        counts, baseline_end, n_bins, metric, out_col=bucket_col
-    )
-
-
-def drift_from_counts(
-    counts: DataFrame,
-    baseline_end: int,
-    n_bins: int,
-    metric: str = "psi",
-    out_col: str = "bucket_epoch",
-) -> DataFrame:
-    """Score PSI/JSD from an ALREADY-AGGREGATED (__b, __bin, __c)
-    count table — the half of dist_drift that a continuous monitor
-    reuses: per-bucket bin counts merge associatively across
-    micro-batches (they are plain sums), so a streaming front-end can
-    maintain the tiny counts state incrementally and call this on a
-    snapshot, and the result is EXACTLY the batch answer
-    (tests/test_streaming_multimodal.py pins the equality).
-    """
-    if metric not in ("psi", "jsd"):
-        raise ValueError(f"metric must be 'psi' or 'jsd', got {metric!r}")
     base = (
         counts.where(F.col("__b") < baseline_end)
         .groupBy("__bin")
@@ -155,11 +132,11 @@ def drift_from_counts(
 
     return (
         full.select(
-            F.col("__b").alias(out_col),
+            F.col("__b").alias(bucket_col),
             "__n",
             F.round(term * 1e6, 0).cast("long").alias("__t"),
         )
-        .groupBy(out_col)
+        .groupBy(bucket_col)
         .agg(
             F.max("__n").alias("n"),
             F.sum("__t").alias("drift_u"),

@@ -30,16 +30,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from go_muse_spark.functions.text import P, minhash_coeffs
+from go_muse_spark.operators.cardinality import _bucket
 
 __all__ = ["cm_sketch_rollup", "cm_sketch_reagg", "cm_estimate"]
-
-
-def _bucket(bucket_secs: int, ts_col: str) -> Column:
-    return (
-        F.unix_timestamp(F.col(ts_col).cast("timestamp"))
-        - F.unix_timestamp(F.col(ts_col).cast("timestamp"))
-        % F.lit(int(bucket_secs))
-    ).alias("bucket_epoch")
 
 
 def _cells(item_hash: Column, d: int, w: int) -> Column:

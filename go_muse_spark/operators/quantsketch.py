@@ -36,18 +36,12 @@ side §2b widening alongside cardinality.py / freqsketch.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from go_muse_spark.operators.cardinality import _bucket
+
 __all__ = ["log_hist_rollup", "log_hist_reagg", "log_hist_quantile"]
-
-
-def _bucket(bucket_secs: int, ts_col: str) -> Column:
-    return (
-        F.unix_timestamp(F.col(ts_col).cast("timestamp"))
-        - F.unix_timestamp(F.col(ts_col).cast("timestamp"))
-        % F.lit(int(bucket_secs))
-    ).alias("bucket_epoch")
 
 
 def log_hist_rollup(

@@ -13,7 +13,7 @@ from go_muse_spark.operators.rollup import rollup_all_tiers
 from go_muse_spark.plans.continuous import ContinuousAggregates, tier_table
 from go_muse_spark.sources.store import ParquetTableStore
 from go_muse_spark.sources.transcripts import generate_transcripts
-from go_muse_spark.streaming.ingest import stream_ingest, streaming_rollup_1m
+from go_muse_spark.streaming.ingest import stream_ingest
 
 
 def test_stream_ingest_foreachbatch(spark, tmp_path):
@@ -51,24 +51,41 @@ def test_stream_ingest_foreachbatch(spark, tmp_path):
     assert got == want
 
 
-def test_streaming_rollup_memory_sink(spark, tmp_path):
-    src = tmp_path / "s2"
+def test_stream_ingest_restart_resumes_from_checkpoint(spark, tmp_path):
+    """Stop the query, add a file, restart on the same checkpoint dir with
+    a new ContinuousAggregates over the same store: the restarted query
+    ingests only the new file (its turns reopen buckets the first epoch
+    wrote), and the checkpoint log holds one _batch row per epoch."""
+    src = tmp_path / "src"
     src.mkdir()
-    pdf = generate_transcripts(n_convs=10, seed=42, hot_turns=200).to_pandas()
+    pdf = generate_transcripts(n_convs=20, seed=42, hot_turns=400).to_pandas()
     static = spark.createDataFrame(pdf)
-    static.write.mode("overwrite").parquet(str(src / "p"))
-    stream = spark.readStream.schema(static.schema).parquet(str(src / "p"))
-    agg = streaming_rollup_1m(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("roll1m")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("select sum(turn_cnt) from roll1m").collect()[0][0]
-    assert got == static.count()
+    # every conversation in both files: epoch 1 merges into epoch 0's buckets
+    even = F.col("turn_idx") % 2 == 0
+    static.filter(even).coalesce(1).write.parquet(str(src / "p1"))
+
+    def run():
+        store = ParquetTableStore(spark, str(tmp_path / "store"))
+        ca = ContinuousAggregates(store, chunk_tiers=())
+        stream = spark.readStream.schema(static.schema).parquet(str(src / "*"))
+        q = stream_ingest(stream, ca, str(tmp_path / "ckpt"))
+        q.processAllAvailable()
+        q.stop()
+        return store
+
+    run()
+    static.filter(~even).coalesce(1).write.parquet(str(src / "p2"))
+    store = run()
+
+    want_1m = rollup_all_tiers(static)["1m"]
+    cols = want_1m.columns
+    got = sorted(map(tuple, store.read(tier_table("1m")).select(*cols).collect()))
+    assert got == sorted(map(tuple, want_1m.collect()))
+    batches = [
+        r["run_id"]
+        for r in store.checkpoints().filter(F.col("table") == "_batch").collect()
+    ]
+    assert sorted(batches) == ["epoch-000000000000", "epoch-000000000001"]
 
 
 @pytest.fixture()
@@ -117,201 +134,6 @@ def test_frame_sample_plan(spark, media):
     ]
 
 
-def test_streaming_dense_stateful_gap_fill(spark, tmp_path):
-    """applyInPandasWithState dense emitter: per-conv state carries the
-    emitted frontier across micro-batches, so cross-batch gaps arrive as
-    zero-filled rows and the output is a dense monotone spine."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from go_muse_spark.streaming.ingest import streaming_dense_1m
-
-    src = tmp_path / "turns"
-    src.mkdir()
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 30)
-
-    def turns(minutes):
-        return pd.DataFrame(
-            {
-                "conv_id": "c1",
-                "turn_idx": range(len(minutes)),
-                "role": "user",
-                "text": "x",
-                "tool": "",
-                "ts": [t0 + dt.timedelta(minutes=m) for m in minutes],
-            }
-        )
-
-    schema = (
-        "conv_id string, turn_idx long, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    # batch 1: minutes 0 and 3 (interior gap 1, 2)
-    spark.createDataFrame(turns([0, 3, 3])).write.parquet(str(src / "f1"))
-    stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-    q = (
-        streaming_dense_1m(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dense1m")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # batch 2: minute 6 -> cross-batch gap 4, 5 must arrive zero-filled
-        spark.createDataFrame(turns([6])).write.parquet(str(src / "f2"))
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = sorted(
-        (r["bucket_ts"].minute, r["turn_cnt"], r["filled"])
-        for r in spark.sql("select * from dense1m").collect()
-    )
-    assert rows == [
-        (0, 1, False),
-        (1, 0, True),
-        (2, 0, True),
-        (3, 2, False),
-        (4, 0, True),
-        (5, 0, True),
-        (6, 1, False),
-    ]
-
-
-def test_streaming_dense_forward_jump_guard(spark, tmp_path):
-    """A corrupt far-future timestamp must not materialize millions of
-    gap rows: past max_gap_buckets the batch degrades to sparse emission
-    (observed buckets only) and the frontier still advances."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from go_muse_spark.streaming.ingest import streaming_dense_1m
-
-    src = tmp_path / "turns2"
-    src.mkdir()
-    t0 = dt.datetime(2024, 1, 1)
-    pdf = pd.DataFrame(
-        {
-            "conv_id": "c1",
-            "turn_idx": [0, 1],
-            "role": "user",
-            "text": "x",
-            "tool": "",
-            # second turn 10 years ahead (clock skew)
-            "ts": [t0, t0 + dt.timedelta(days=3650)],
-        }
-    )
-    schema = (
-        "conv_id string, turn_idx long, role string, text string, "
-        "tool string, ts timestamp"
-    )
-    spark.createDataFrame(pdf).write.parquet(str(src / "f1"))
-    stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-    q = (
-        streaming_dense_1m(stream, max_gap_buckets=1000)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dense_jump")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = spark.sql("select * from dense_jump").collect()
-    # sparse emission: just the two observed buckets, no gap explosion
-    assert len(rows) == 2
-    assert all(not r["filled"] for r in rows)
-
-
-def test_streaming_dense_idle_state_eviction(spark, tmp_path):
-    """With idle_timeout_ms, a conversation idle past the (processing
-    time) timeout is evicted from state; when it revives it re-emits
-    from its first NEW bucket like a fresh conversation — no dense
-    zero-bridge across the idle span. This is what bounds state to
-    recently-active convs instead of total conv cardinality."""
-    import datetime as dt
-    import time
-
-    import pandas as pd
-
-    from go_muse_spark.streaming.ingest import streaming_dense_1m
-
-    src = tmp_path / "turns3"
-    src.mkdir()
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 30)
-    schema = (
-        "conv_id string, turn_idx long, role string, text string, "
-        "tool string, ts timestamp"
-    )
-
-    def turns(conv, minutes):
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "conv_id": conv,
-                    "turn_idx": range(len(minutes)),
-                    "role": "user",
-                    "text": "x",
-                    "tool": "",
-                    "ts": [t0 + dt.timedelta(minutes=m) for m in minutes],
-                }
-            ),
-            schema,
-        )
-
-    turns("c1", [0]).write.parquet(str(src / "f1"))
-    stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-    q = (
-        streaming_dense_1m(stream, idle_timeout_ms=1_000)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dense_evict")
-        .option("checkpointLocation", str(tmp_path / "ck3"))
-        .start()
-    )
-
-    # NOTE: once a processing-time timeout is armed the engine keeps
-    # scheduling timeout-check batches, so processAllAvailable() never
-    # observes a quiescent stream — poll the sink with a deadline
-    def wait_for(pred, what, deadline_s=90):
-        end = time.time() + deadline_s
-        while time.time() < end:
-            rows = spark.sql("select * from dense_evict").collect()
-            if pred(rows):
-                return rows
-            time.sleep(0.5)
-        raise AssertionError(f"timed out waiting for {what}")
-
-    try:
-        wait_for(lambda rs: len(rs) == 1, "minute-0 row")
-        # idle past the timeout: a timeout-check batch evicts c1's state
-        time.sleep(3.0)
-        # c1 revives at minute 5: with state evicted there must be NO
-        # zero-filled bridge rows for minutes 1-4
-        turns("c1", [5]).write.parquet(str(src / "f2"))
-        rows = wait_for(
-            lambda rs: any(r["bucket_ts"].minute == 5 for r in rs),
-            "revival row",
-        )
-    finally:
-        q.stop()
-
-    got = sorted(
-        (r["conv_id"], r["bucket_ts"].minute, r["turn_cnt"], r["filled"])
-        for r in rows
-    )
-    assert got == [
-        ("c1", 0, 1, False),
-        ("c1", 5, 1, False),
-    ]
-
-
 def test_extract_frame_features(spark, media):
     """Plan JOIN payloads -> per-frame fused decode+resize+features:
     one row per sampled frame, deterministic per (content, frame_idx),
@@ -353,110 +175,6 @@ def test_documents_fixture_is_ascii(sf_dir):
         "switch sql_seed to byte-accurate extraction or re-ASCII the "
         "fixture"
     )
-
-
-def test_streaming_sessions_watermark_finalization(spark, tmp_path):
-    """Native session_window streaming: sessions merge across micro-
-    batches and FINALIZE (append emission) only once the event-time
-    watermark passes their end; late-but-in-watermark events extend the
-    open session instead of duplicating it."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from go_muse_spark.streaming.ingest import streaming_sessions
-
-    src = tmp_path / "turns"
-    src.mkdir()
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def turns(minutes):
-        return pd.DataFrame(
-            {
-                "conv_id": "c1",
-                "ts": [t0 + dt.timedelta(minutes=m) for m in minutes],
-            }
-        )
-
-    schema = "conv_id string, ts timestamp"
-    # batch 1: two bursts 0-10 and 60-65 (gap 30m splits them)
-    spark.createDataFrame(turns([0, 10, 60, 65])).write.parquet(
-        str(src / "f1")
-    )
-    stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-    q = (
-        streaming_sessions(stream, gap="30 minutes", watermark="1 hour")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sess_stream")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # watermark so far: 65m - 60m = 5m -> nothing finalized yet
-        assert spark.sql("SELECT * FROM sess_stream").count() == 0
-
-        # batch 2: a late event at minute 12 (inside watermark) extends
-        # the FIRST burst; a far-future event pushes the watermark past
-        # both bursts
-        spark.createDataFrame(turns([12, 600])).write.parquet(
-            str(src / "f2")
-        )
-        q.processAllAvailable()
-        # one more empty batch lets the engine flush sessions closed by
-        # the advanced watermark
-        spark.createDataFrame(turns([610])).write.parquet(str(src / "f3"))
-        q.processAllAvailable()
-
-        rows = {
-            r["start_ts"]: r
-            for r in spark.sql(
-                "SELECT * FROM sess_stream ORDER BY start_ts"
-            ).collect()
-        }
-        s1 = rows[t0]
-        # late minute-12 event merged into burst 1: 3 turns, end 12+30
-        assert s1["n_turns"] == 3
-        assert s1["end_ts"] == t0 + dt.timedelta(minutes=42)
-        s2 = rows[t0 + dt.timedelta(minutes=60)]
-        assert s2["n_turns"] == 2
-        assert s2["end_ts"] == t0 + dt.timedelta(minutes=95)
-    finally:
-        q.stop()
-
-
-def test_streaming_dedup_drops_redelivery_keeps_late(spark, tmp_path):
-    from go_muse_spark.streaming.ingest import streaming_dedup
-
-    src = tmp_path / "sdedup"
-    src.mkdir()
-    pdf = generate_transcripts(n_convs=6, seed=7, hot_turns=120).to_pandas()
-    static = spark.createDataFrame(pdf)
-    # batch 1: full corpus; batch 2: a re-delivered slice (same keys)
-    static.write.mode("overwrite").parquet(str(src / "b1"))
-    static.orderBy("conv_id", "turn_idx").limit(40).write.mode(
-        "overwrite"
-    ).parquet(str(src / "b2"))
-    stream = spark.readStream.schema(static.schema).parquet(
-        str(src / "*")
-    ).coalesce(1)
-    out = streaming_dedup(stream, watermark="30 days")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_sink")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql(
-        "select count(*) n, count(distinct conv_id || '#' || turn_idx) d "
-        "from dedup_sink"
-    ).collect()[0]
-    # every key exactly once: re-deliveries inside the horizon dropped
-    assert got["n"] == static.count()
-    assert got["d"] == static.count()
 
 
 def test_streaming_search_matches_batch_topk(spark, tmp_path):
@@ -517,80 +235,64 @@ def test_streaming_search_matches_batch_topk(spark, tmp_path):
     assert mean > 0
 
 
-def test_streaming_drift_parity_with_batch(spark, tmp_path):
-    """Continuous drift monitor == batch dist_drift, exactly: the
-    (bucket, bin) deltas merge associatively across micro-batches, so
-    the snapshot feeds drift_from_counts the same integers the batch
-    path aggregates in one shot."""
+def test_streaming_search_drops_rows_outside_bounds(spark, tmp_path):
+    """A micro-batch with rows hours before lo, and at and after
+    lo + n * tier, scores like the batch search over the in-window rows
+    only: no wrap-around lag, no stray series."""
     import datetime as dt
-    import random
 
-    import pandas as pd
-
-    from go_muse_spark.operators.drift import dist_drift
-    from go_muse_spark.streaming.ingest import streaming_drift
-
-    rng = random.Random(77)
-    t0 = dt.datetime(2026, 1, 1)
-    rows = []
-    for day in range(10):
-        shift = 0 if day < 5 else 40  # drift begins day 5
-        for _ in range(200):
-            rows.append(
-                (
-                    t0 + dt.timedelta(days=day, seconds=rng.randint(0, 86399)),
-                    float(rng.randint(0, 60) + shift),
-                )
-            )
-    pdf = pd.DataFrame(rows, columns=["ts", "value"])
-    src = tmp_path / "src"
-    src.mkdir()
-    static = spark.createDataFrame(pdf, schema="ts timestamp, value double")
-    # three files -> three micro-batches
-    static.repartition(3).write.mode("overwrite").parquet(str(src / "p"))
-
-    baseline_end = int(
-        (t0 + dt.timedelta(days=5))
-        .replace(tzinfo=dt.timezone.utc)
-        .timestamp()
+    from go_muse_spark.operators.rollup import rollup_transcripts
+    from go_muse_spark.operators.search import (
+        SearchParams,
+        muse_search_rollup,
+        series_bounds,
     )
-    stream = spark.readStream.schema(static.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(str(src / "p"))
-    q, monitor = streaming_drift(
-        stream,
-        "value",
-        bucket_secs=86400,
-        baseline_end=baseline_end,
-        width=10,
-        n_bins=12,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        metric="psi",
+    from go_muse_spark.streaming.ingest import streaming_search
+
+    pdf = generate_transcripts(n_convs=16, seed=3, hot_turns=300).to_pandas()
+    static = spark.createDataFrame(pdf)
+    rolled = rollup_transcripts(static, "1h")
+    lo, hi, n = series_bounds(rolled, 3600)
+    ref = np.zeros(n)
+    ref[n // 3 : n // 3 + 4] = [1.0, 4.0, 4.0, 1.0]
+    p = SearchParams(top_n=6, max_lag=n, threshold=0.0, mode="abs")
+
+    def key(rows):
+        return [
+            (r["group_key"], r["series_key"], r["lag"], round(r["score"], 9))
+            for r in rows
+        ]
+
+    want = key(
+        muse_search_rollup(
+            rolled, ref, 3600, params=p, bounds=(lo, hi, n)
+        ).collect()
+    )
+
+    end = lo + dt.timedelta(seconds=3600 * n)
+    outside = [
+        lo - dt.timedelta(hours=5),
+        lo - dt.timedelta(seconds=1),
+        end,
+        end + dt.timedelta(hours=3),
+    ]
+    convs = sorted(pdf["conv_id"].unique())[:3] + ["stray"]
+    stray = spark.createDataFrame(
+        [
+            (c, 1_000_000 + i, "user", "x", "", ts)
+            for c in convs
+            for i, ts in enumerate(outside)
+        ],
+        static.schema,
+    )
+    src = tmp_path / "ssearch"
+    src.mkdir()
+    static.unionByName(stray).coalesce(1).write.parquet(str(src / "b1"))
+    stream = spark.readStream.schema(static.schema).parquet(str(src / "*"))
+    q, results = streaming_search(
+        stream, ref, 3600, str(tmp_path / "ckpt"), (lo, hi, n), params=p
     )
     q.processAllAvailable()
     q.stop()
-
-    got = sorted(
-        map(tuple, monitor.snapshot(spark).collect())
-    )
-    batch_in = static.select(
-        F.col("value").cast("long").alias("v"),
-        (F.floor(F.unix_timestamp("ts") / 86400) * 86400)
-        .cast("long")
-        .alias("b"),
-    )
-    want = sorted(
-        map(
-            tuple,
-            dist_drift(
-                batch_in, "v", "b", baseline_end, width=10, n_bins=12,
-                metric="psi",
-            ).collect(),
-        )
-    )
-    assert got == want
-    assert len(got) == 5  # only post-baseline days scored
-    # epoch replay is a no-op
-    before = dict(monitor.counts)
-    monitor.merge([{"__b": 0, "__bin": 0, "__c": 5}], epoch_id=0)
-    assert monitor.counts == before
+    rows, _ = results.fetch()
+    assert key(rows) == want
